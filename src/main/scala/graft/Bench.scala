@@ -37,7 +37,9 @@ object Bench {
     try {
       SparkEntry.queries.get("q03_group_count").foreach(f => drain(f(spark, sfDir)))
       spark.range(1000000L).selectExpr("sum(id)").collect()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
 
     // min of 2 runs per query: measures the query, not GC/OS jitter
     // (single-run noise on a shared host is ±30%). A failed run records
@@ -58,28 +60,21 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
-      finally { spark.catalog.clearCache() }
+      finally {
+        // Operators that persist() compact intermediates (containment/
+        // set-sim arrays) would otherwise leak cached blocks across
+        // 133 queries — dead storage that steals execution memory from
+        // later queries' sorts — AND let run 2 of the same query read
+        // run 1's cache (its identical lineage hits the CacheManager),
+        // which would turn min-of-2 into a cache-hit measurement.
+        // Clearing OUTSIDE the timed window keeps every run cold and
+        // isolated.
+        spark.catalog.clearCache()
+      }
     }
 
     val results = selected.map { case (name, fn) =>
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try { drain(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
-        }
-        finally {
-          // Operators that persist() compact intermediates (containment/
-          // set-sim arrays) would otherwise leak cached blocks across
-          // 133 queries — dead storage that steals execution memory from
-          // later queries' sorts — AND let run 2 of the same query read
-          // run 1's cache (its identical lineage hits the CacheManager),
-          // which would turn min-of-2 into a cache-hit measurement.
-          // Clearing OUTSIDE the timed window keeps every run cold and
-          // isolated.
-          spark.catalog.clearCache()
-        }
-      }
+      val times = (1 to 2).map(_ => timeOnce(name, fn))
       val ok = times.filter(_ >= 0)
       name -> (if (ok.nonEmpty) ok.min else -1.0)
     }

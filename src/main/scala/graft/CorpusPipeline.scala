@@ -105,13 +105,7 @@ object CorpusPipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark, dir)

@@ -124,13 +124,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark, dir)
     println(s"[pipeline] train rows: ${r.train.count()}")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.SimilarityOps
 import graft.tables.Tables
 
@@ -17,13 +15,8 @@ object ScaleDial {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val bits = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(4, 6, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Sessions.builder(cpus)
       .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables.embeddings(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
@@ -37,14 +36,8 @@ object ServeBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batchSize = sys.env.getOrElse("SPARK_GRAFT_SERVE_BATCH", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
+    val spark = Sessions.bounded(Sessions.builder(cpus)
+        .config("spark.sql.files.maxPartitionBytes", "8m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE SparkSession builder for the driver-contract mains (Bench,
-  * Verify, Profile, Explain) so their knobs cannot drift (ADVICE r13 —
-  * Profile had already re-inlined Bench's config by hand).
+/** ONE SparkSession builder for every main (Bench, Verify, Profile,
+  * Explain, Pipeline, CorpusPipeline, StreamPipeline, ServeBench,
+  * ShuffleProbe, ScaleDial) so their knobs cannot drift (ADVICE r13 —
+  * Profile had already re-inlined Bench's config by hand). Mains add
+  * only their own extras on top (the 8 MB split size of the timing
+  * mains).
   *
   * Config notes (local[N] at the gate SFs):
   *  - master/shuffle.partitions = `$SPARK_GRAFT_CPUS` (harness
@@ -22,8 +25,8 @@ object Sessions {
     .config("spark.ui.enabled", "false")
 
   /** Bounded-driver-state knobs for the LONG mains (Bench/Verify/
-    * Profile run 450+ queries in one JVM; one-shot tools like Explain
-    * don't need these):
+    * Profile run 450+ queries in one JVM; ServeBench and ShuffleProbe
+    * repeat many jobs; one-shot tools like Explain don't need these):
     *  - periodicGC 1min: localCheckpoint blocks are only reclaimed by
     *    the ContextCleaner after a full GC, and the default 30-min
     *    interval never fires inside one run — accumulated blocks turn

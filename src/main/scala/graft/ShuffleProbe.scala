@@ -47,15 +47,9 @@ object ShuffleProbe {
     val unknown = names.filterNot(targets.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bounded block store across probes — see the Verify/Bench note
-      .config("spark.cleaner.periodicGC.interval", "1min")
+    // bounded block store across probes — see the Sessions.bounded note
+    val spark = Sessions.bounded(Sessions.builder(cpus)
+        .config("spark.sql.files.maxPartitionBytes", "8m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val bytes = new AtomicLong(0L)

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws does not stop the dump; after everything else is written the
+  * run names every failed query on stderr and exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
@@ -16,6 +18,7 @@ object Verify {
     val spark = Sessions.bounded(Sessions.builder(cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -23,6 +26,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // operators now localCheckpoint (GC-cleaned) instead of persist;
       // clearCache stays as a belt-and-braces guard for any cached plan
@@ -44,5 +48,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val failures = failed.result()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} queries failed: " +
+        failures.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * Deterministic: tasks must be pure functions of their inputs; the
   * returned Seq preserves task order, and a task failure rethrows at
   * the await. Used by the IVF dial sweep / recall-per-candidate audit
-  * (SimilarityOps) and the substring ladder (DedupOps).
+  * (SimilarityOps).
   */
 private[operators] object Concurrent {
   def construct(tasks: Seq[() => DataFrame]): Seq[DataFrame] = {

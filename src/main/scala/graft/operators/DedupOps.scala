@@ -412,31 +412,6 @@ object DedupOps {
     expandPairs(repPairs, grouped, "jaccard", oriented = false)
   }
 
-  /** Cluster-representative selection: given per-doc cluster labels
-    * (from [[GraphOps.connectedComponents]] over the near-dup graph),
-    * keep ONE doc per cluster — the longest, tie-broken by smallest id.
-    * This is the step that turns "these 40 docs are copies" into an
-    * actual deduplicated corpus while keeping the most complete copy,
-    * not an arbitrary one.
-    *
-    * Scale: one hash-partition window on the cluster key; near-dup
-    * clusters are small (pair edges imply high similarity), so no
-    * single partition is hot. Output also carries the cluster size —
-    * the dedup-ratio audit column.
-    */
-  def clusterRepresentatives(labeled: DataFrame, clusterCol: String,
-                             idCol: String, sizeCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(clusterCol))
-      .orderBy(col(sizeCol).desc, col(idCol))
-    labeled
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("n_members",
-        count(lit(1)).over(Window.partitionBy(col(clusterCol))))
-      .filter(col("__rn") === 1)
-      .select(col(clusterCol), col(idCol).as("rep_id"), col("n_members"))
-  }
-
   /** Incremental dedup: admit only `incoming` rows whose exact content
     * fingerprint (md5 of the text) is absent from `history`, keeping
     * the smallest id among in-batch copies. This is the daily-ingest

@@ -29,10 +29,6 @@ object RelationalOps {
                   labelCol: String = "label"): DataFrame =
     df.withColumn(labelCol, when(col(ratingCol) > threshold, 1).otherwise(0))
 
-  /** P2 — row filter by split code. Ref: s1_data_split.py:35-36. */
-  def filterByCode(df: DataFrame, codeCol: String, code: Int): DataFrame =
-    df.filter(col(codeCol) === lit(code))
-
   /** P5 — dict-mapping encode with default-0 fallback for unseen keys.
     * Ref: offline/rank/s1_feature_engi.py:21-29; mappings constants.py:29-72.
     * `try_element_at` (not `element_at`) so ANSI mode returns null → 0 for

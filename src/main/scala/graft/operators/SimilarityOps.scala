@@ -55,6 +55,17 @@ object SimilarityOps {
       .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
       .select("vec_id", "neighbor_id", "sim")
 
+  /** Candidate pairs of a bucketed search: query side `a` (vec_id,
+    * a_emb, a_nrm, `key`) equi-joined to index side `b` (neighbor_id,
+    * b_emb, b_nrm, `key`) on the cell key, self-pairs dropped, exact
+    * cosine `sim` added.
+    */
+  private def candidatePairs(a: DataFrame, b: DataFrame,
+                             key: String): DataFrame =
+    a.join(b, key)
+      .filter(col("vec_id") =!= col("neighbor_id"))
+      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+
   /** Bounded top-k selection over a (vec_id, neighbor_id, sim) pair
     * stream: a TopKAggregator hash aggregation, not a window — map-side
     * partials keep ≤k candidates per vector per partition, so the pair
@@ -117,11 +128,13 @@ object SimilarityOps {
   def ivfSampleMod(n: Long, kCent: Int): Int =
     math.max(1L, n / (kCent * 32L)).toInt
 
-  /** Sign-pattern coarse quantizer over the leading dimensions. */
-  private def signBucket(signBits: Int): Column =
+  /** Sign-pattern coarse quantizer over the leading dimensions of
+    * `embCol`; zero bits put every row in cell 0 (the flat IVF layout).
+    */
+  private[graft] def signBucket(signBits: Int, embCol: String = "emb"): Column =
     (0 until signBits)
-      .map(j => expr(s"CAST(emb[$j] > 0 AS INT) * ${1 << j}"))
-      .reduce(_ + _)
+      .map(j => expr(s"CAST($embCol[$j] > 0 AS INT) * ${1 << j}"))
+      .reduceOption(_ + _).getOrElse(lit(0))
 
   /** Brute-force cosine top-k per query vector, deterministic tiebreak on
     * neighbor id. Exact-answer baseline for any ANN variant.
@@ -201,10 +214,8 @@ object SimilarityOps {
   def embeddingNearDupBucketed(df: DataFrame, idCol: String, embCol: String,
                                threshold: Double, signBits: Int = 4): DataFrame = {
     val n = normalized(df, idCol, embCol).withColumn("bucket", signBucket(signBits))
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
     val a = n.select(col("id").as("id_a"), col("emb").as("a_emb"),
-      col("nrm").as("a_nrm"), explode(probes).as("bucket"))
+      col("nrm").as("a_nrm"), explode(probeCells(signBits, 1)).as("bucket"))
     val b = n.select(col("id").as("id_b"), col("emb").as("b_emb"),
       col("nrm").as("b_nrm"), col("bucket"))
     a.join(b, "bucket")
@@ -247,19 +258,8 @@ object SimilarityOps {
     * (≈0.93 with 3 tables on the same fixture).
     */
   def annTopKMultiProbe(df: DataFrame, idCol: String, embCol: String, k: Int,
-                        signBits: Int = 4): DataFrame = {
-    val n = normalized(df, idCol, embCol).withColumn("bucket", signBucket(signBits))
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
-    val a = n.select(col("id").as("vec_id"), col("emb").as("a_emb"),
-        col("nrm").as("a_nrm"), explode(probes).as("bucket"))
-    val b = n.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-      col("nrm").as("b_nrm"), col("bucket"))
-    val pairs = a.join(b, "bucket")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-    selectTopK(pairs, k)
-  }
+                        signBits: Int = 4): DataFrame =
+    signAnnTopK(df, idCol, embCol, k, signBits, radius = 1)
 
   /** Scale-ADAPTIVE multi-probe ANN top-k: the sign-bucket width
     * follows corpus size on [[adaptiveSignBits]]'s per-4× stepped
@@ -291,22 +291,8 @@ object SimilarityOps {
     * signBits, H≤2 buys the recall at a fixed multiple.
     */
   def annTopKMultiProbe2(df: DataFrame, idCol: String, embCol: String,
-                         k: Int, signBits: Int = 4): DataFrame = {
-    val n = normalized(df, idCol, embCol).withColumn("bucket", signBucket(signBits))
-    val h1 = (0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}")
-    val h2 = for {
-      i <- 0 until signBits; j <- i + 1 until signBits
-    } yield s"CAST(bucket AS INT) ^ ${(1 << i) | (1 << j)}"
-    val probes = expr(s"array(bucket, ${(h1 ++ h2).mkString(", ")})")
-    val a = n.select(col("id").as("vec_id"), col("emb").as("a_emb"),
-      col("nrm").as("a_nrm"), explode(probes).as("bucket"))
-    val b = n.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-      col("nrm").as("b_nrm"), col("bucket"))
-    val pairs = a.join(b, "bucket")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-    selectTopK(pairs, k)
-  }
+                         k: Int, signBits: Int = 4): DataFrame =
+    signAnnTopK(df, idCol, embCol, k, signBits, radius = 2)
 
   /** IVF-style ANN: partition vectors into 2^`signBits` coarse cells by
     * the sign pattern of the leading dimensions (a deterministic,
@@ -317,16 +303,41 @@ object SimilarityOps {
     * speedup — the same contract as IVF nprobe=1.
     */
   def annTopK(df: DataFrame, idCol: String, embCol: String, k: Int,
-              signBits: Int = 4): DataFrame = {
+              signBits: Int = 4): DataFrame =
+    signAnnTopK(df, idCol, embCol, k, signBits, radius = 0)
+
+  /** Hamming-ball probe list of a `signBits`-wide sign-bucket cell:
+    * (xor mask, Hamming distance) for every cell within `radius` ≤ 2
+    * bit flips — own cell first, then the Hamming-1 and Hamming-2 cells
+    * in bit order.
+    */
+  private def hammingProbes(signBits: Int, radius: Int): Seq[(Int, Int)] = {
+    val h1 = (0 until signBits).map(j => (1 << j) -> 1)
+    val h2 = for {
+      i <- 0 until signBits; j <- i + 1 until signBits
+    } yield ((1 << i) | (1 << j)) -> 2
+    ((0 -> 0) +: (h1 ++ h2)).filter(_._2 <= radius)
+  }
+
+  /** The [[hammingProbes]] cell ids of each row's `bucket`, as an array. */
+  private def probeCells(signBits: Int, radius: Int): Column =
+    expr(hammingProbes(signBits, radius)
+      .map(p => s"CAST(bucket AS INT) ^ ${p._1}").mkString("array(", ", ", ")"))
+
+  /** The sign-bucket ANN body behind [[annTopK]] (radius 0),
+    * [[annTopKMultiProbe]] (1) and [[annTopKMultiProbe2]] (2): the
+    * query side explodes its [[hammingProbes]] cell list, the index
+    * side is stored once, one equi-join on the cell id, exact cosine,
+    * bounded top-k.
+    */
+  private def signAnnTopK(df: DataFrame, idCol: String, embCol: String,
+                          k: Int, signBits: Int, radius: Int): DataFrame = {
     val n = normalized(df, idCol, embCol).withColumn("bucket", signBucket(signBits))
     val a = n.select(col("id").as("vec_id"), col("emb").as("a_emb"),
-      col("nrm").as("a_nrm"), col("bucket"))
+      col("nrm").as("a_nrm"), explode(probeCells(signBits, radius)).as("bucket"))
     val b = n.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
       col("nrm").as("b_nrm"), col("bucket"))
-    val pairs = a.join(b, "bucket")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-    selectTopK(pairs, k)
+    selectTopK(candidatePairs(a, b, "bucket"), k)
   }
 
   /** kNN label-agreement audit — the noisy-label screen (the
@@ -1572,6 +1583,16 @@ object SimilarityOps {
           .as("agree_ppm"))
   }
 
+  /** [[annRecallAudit]] under the [[annTopKAdaptive]] width schedule:
+    * the recall the adaptive dial actually pays at the corpus's own
+    * width, per probe level — q436's measured safety certificate (the
+    * fixed-width audit is q397).
+    */
+  def annRecallAuditAdaptive(df: DataFrame, idCol: String,
+                             embCol: String, k: Int,
+                             sampleMod: Int = 20): DataFrame =
+    annRecallAudit(df, idCol, embCol, k, adaptiveSignBits(df), sampleMod)
+
   /** Measured ANN recall audit: for a deterministic sample of query
     * vectors (id mod `sampleMod` = 0), the fraction of the EXACT
     * cosine top-k recovered by the sign-bucket index at each probe
@@ -1588,16 +1609,6 @@ object SimilarityOps {
     * tagged by its minimum probe distance, so the three levels are
     * filters over one candidate table, not three joins.
     */
-  /** [[annRecallAudit]] under the [[annTopKAdaptive]] width schedule:
-    * the recall the adaptive dial actually pays at the corpus's own
-    * width, per probe level — q436's measured safety certificate (the
-    * fixed-width audit is q397).
-    */
-  def annRecallAuditAdaptive(df: DataFrame, idCol: String,
-                             embCol: String, k: Int,
-                             sampleMod: Int = 20): DataFrame =
-    annRecallAudit(df, idCol, embCol, k, adaptiveSignBits(df), sampleMod)
-
   def annRecallAudit(df: DataFrame, idCol: String, embCol: String,
                      k: Int, signBits: Int = 4,
                      sampleMod: Int = 20): DataFrame = {
@@ -1664,10 +1675,6 @@ object SimilarityOps {
     annRecallCore(n, bits, k, sampleMod)
   }
 
-  /** Shared recall-audit core over any (id, emb, nrm, bucket)
-    * signature table: exact top-k on a 1-in-`sampleMod` query sample
-    * vs the multi-probe candidates at Hamming levels 0/1/2.
-    */
   /** Multi-probe (Hamming ≤ 2) candidate-pair table over a sign-bucket
     * signature table: one row per DISTINCT reachable (query, neighbor)
     * pair, tagged with its minimum probe distance `hd` and cosine.
@@ -1676,48 +1683,76 @@ object SimilarityOps {
     */
   private def signProbeCands(q: DataFrame, n: DataFrame,
                              signBits: Int): DataFrame = {
-    val h1 = (0 until signBits).map(j =>
-      s"struct(CAST(bucket AS INT) ^ ${1 << j} AS pb, 1 AS hd)")
-    val h2 = for {
-      i <- 0 until signBits; j <- i + 1 until signBits
-    } yield s"struct(CAST(bucket AS INT) ^ ${(1 << i) | (1 << j)} AS pb, 2 AS hd)"
-    val probes = expr((Seq("struct(CAST(bucket AS INT) AS pb, 0 AS hd)")
-      ++ h1 ++ h2).mkString("array(", ", ", ")"))
+    val probes = expr(hammingProbes(signBits, 2).map { case (m, hd) =>
+      s"struct(CAST(bucket AS INT) ^ $m AS pb, $hd AS hd)"
+    }.mkString("array(", ", ", ")"))
     val a = q.select(col("id").as("vec_id"), col("emb").as("a_emb"),
         col("nrm").as("a_nrm"), explode(probes).as("p"))
       .select(col("vec_id"), col("a_emb"), col("a_nrm"),
         col("p.pb").as("bucket"), col("p.hd").as("hd"))
     val b = n.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
       col("nrm").as("b_nrm"), col("bucket").cast("int").as("bucket"))
-    a.join(b, "bucket")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+    candidatePairs(a, b, "bucket")
       .groupBy(col("vec_id"), col("neighbor_id"))
       .agg(min(col("hd")).as("hd"), max(col("sim")).as("sim"))
       .localCheckpoint(false)
   }
 
+  /** Shared recall-audit core over any (id, emb, nrm, bucket)
+    * signature table: exact top-k on a 1-in-`sampleMod` query sample
+    * vs the multi-probe candidates at Hamming levels 0/1/2.
+    */
   private def annRecallCore(n: DataFrame, signBits: Int, k: Int,
                             sampleMod: Int): DataFrame = {
     val q = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
-    val exact = selectTopK(pairSim(q, n), k)
-      .select(col("vec_id"), col("neighbor_id"), lit(1L).as("__e"))
+    val exact = exactMarks(q, n, k)
     // three level filters read the shared candidate table.
     val cand = signProbeCands(q, n, signBits)
-    val ann = Seq(0, 1, 2).map { lvl =>
-      selectTopK(cand.filter(col("hd") <= lvl)
-          .select(col("vec_id"), col("neighbor_id"), col("sim")), k)
-        .withColumn("level", lit(lvl.toLong))
-    }.reduce(_ unionAll _)
-    val nq = q.agg(count(lit(1)).as("__nq"))
-    ann.join(exact, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy(col("level"))
-      .agg(count(col("__e")).as("n_hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("level"), col("__nq").as("n_queries"), col("n_hits"),
-        expr(s"CAST((n_hits * 2000000 + $k * __nq) " +
-          s"div (2 * $k * __nq) AS BIGINT)").as("recall_ppm"))
+    levelRecall(cand, "hd", Seq(0, 1, 2), "level", exact, q, k)
   }
+
+  /** The sampled exact ground truth of the recall audits: the exact
+    * cosine top-k of every query in `q` over `n`, each (vec_id,
+    * neighbor_id) pair marked `__e` = 1.
+    */
+  private def exactMarks(q: DataFrame, n: DataFrame, k: Int): DataFrame =
+    selectTopK(pairSim(q, n), k)
+      .select(col("vec_id"), col("neighbor_id"), lit(1L).as("__e"))
+
+  /** Per-level hits of a tagged candidate table: for each `lvl` in
+    * `lvls`, the bounded top-k over the pairs whose `lvlCol` ≤ lvl,
+    * counted against [[exactMarks]] — one (`outCol`, n_hits) row per
+    * level that has candidates.
+    */
+  private def levelHits(cand: DataFrame, lvlCol: String, lvls: Seq[Int],
+                        outCol: String, exact: DataFrame,
+                        k: Int): DataFrame =
+    lvls.map { lvl =>
+      selectTopK(cand.filter(col(lvlCol) <= lvl)
+          .select(col("vec_id"), col("neighbor_id"), col("sim")), k)
+        .withColumn(outCol, lit(lvl.toLong))
+    }.reduce(_ unionAll _)
+      .join(exact, Seq("vec_id", "neighbor_id"), "left")
+      .groupBy(col(outCol))
+      .agg(count(col("__e")).as("n_hits"))
+
+  /** [[levelHits]] as a recall table: (`outCol`, n_queries, n_hits,
+    * recall_ppm) over the query sample `q`.
+    */
+  private def levelRecall(cand: DataFrame, lvlCol: String, lvls: Seq[Int],
+                          outCol: String, exact: DataFrame, q: DataFrame,
+                          k: Int): DataFrame =
+    levelHits(cand, lvlCol, lvls, outCol, exact, k)
+      .crossJoin(broadcast(q.agg(count(lit(1)).as("__nq"))))
+      .select(col(outCol), col("__nq").as("n_queries"), col("n_hits"),
+        recallPpm(k, "n_hits"))
+
+  /** recall@k in integer ppm, rounded half up, from a hits expression
+    * and the query count `__nq`.
+    */
+  private def recallPpm(k: Int, hits: String): Column =
+    expr(s"CAST(($hits * 2000000 + $k * __nq) " +
+      s"div (2 * $k * __nq) AS BIGINT)").as("recall_ppm")
 
   // ------------------------------------------------------------- IVF
   // Trained coarse quantizer: the data-DEPENDENT counterpart of the
@@ -1726,32 +1761,29 @@ object SimilarityOps {
   // IVF index build). Everything below is exact INTEGER arithmetic on
   // ppm-quantized embeddings, so the trained codebook — normally a
   // float-nondeterminism minefield — is bit-reproducible cross-engine
-  // and carries a full DuckDB oracle twin (q440/q441).
+  // and carries a full DuckDB oracle twin (q440/q441). There is ONE
+  // index implementation, the sharded one: the flat layout is
+  // shardBits = 0, every vector in shard 0.
 
-  /** (id, emb double[], nrm, qemb bigint[]) signature table: embeddings
-    * quantized to integer micro-units (ppm). Lloyd sums/means over
-    * BIGINT are exact and order-independent — no float accumulation
-    * order, no libm — which is what makes a TRAINED quantizer
-    * oracle-deterministic. ppm resolution (1e-6 of a coordinate) is far
-    * below any embedding's meaningful precision, and 64 dims of
-    * (2e6)²-scale squares stay ≤ 2.6e14 ≪ 2^63 per distance.
-    */
-  private def ppmQuantized(df: DataFrame, idCol: String,
-                           embCol: String): DataFrame =
-    normalized(df, idCol, embCol)
-      .withColumn("qemb",
-        expr("transform(emb, x -> CAST(round(x * 1000000) AS BIGINT))"))
-
-  /** [[ppmQuantized]] plus the first-level shard id: the sign pattern
-    * of the `shardBits` leading dimensions (the [[signBucket]]
-    * quantizer reused as an index PARTITIONER). localCheckpointed —
-    * the Lloyd loop, the home assignment and the probe stage all read
-    * it.
+  /** (id, emb double[], nrm, qemb bigint[], shard) signature table:
+    * embeddings quantized to integer micro-units (ppm), plus the
+    * first-level shard id. Lloyd sums/means over BIGINT are exact and
+    * order-independent — no float accumulation order, no libm — which
+    * is what makes a TRAINED quantizer oracle-deterministic. ppm
+    * resolution (1e-6 of a coordinate) is far below any embedding's
+    * meaningful precision, and 64 dims of (2e6)²-scale squares stay
+    * ≤ 2.6e14 ≪ 2^63 per distance. The shard is the sign pattern of
+    * the `shardBits` leading dimensions (the [[signBucket]] quantizer
+    * reused as an index PARTITIONER; 0 bits = the flat layout).
+    * localCheckpointed — the Lloyd loop, the home assignment and the
+    * probe stage all read it.
     */
   private[graft] def shardQuantized(df: DataFrame, idCol: String,
                                     embCol: String,
                                     shardBits: Int): DataFrame =
-    ppmQuantized(df, idCol, embCol)
+    normalized(df, idCol, embCol)
+      .withColumn("qemb",
+        expr("transform(emb, x -> CAST(round(x * 1000000) AS BIGINT))"))
       .withColumn("shard", signBucket(shardBits))
       .localCheckpoint(false)
 
@@ -1762,101 +1794,67 @@ object SimilarityOps {
   private def md5U(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
 
-  /** Deterministic IVF seeding: the `kCent` vectors with the smallest
-    * (md5(id), id) — a data-independent uniform draw both engines
-    * replay exactly (the q109/q397 sampling idiom), picked by the
-    * BOUNDED global TopKAggregator, never a global sort.
+  /** Collect a `(shard, cid, cemb)` codebook DataFrame (≤2^16 rows by
+    * the hard-capped width schedule) into a driver-pinned
+    * [[CellIndex]]. Every internal caller passes a [[pinLocal]]'d
+    * LocalRelation, so the collect is a driver-local read, not a job —
+    * the same sanctioned bounded class as pinLocal itself.
     */
-  private def ivfSeeds(e: DataFrame, kCent: Int): DataFrame =
-    e.withColumn("__u", md5U(col("id")))
-      .agg(graft.functions.TopKAggregator.topK(kCent,
-        -col("__u").cast("double"), col("id")).as("__top"))
-      .select(explode(col("__top")).as("t"))
-      .select(col("t.id").as("cid"))
-
-  /** Collect a codebook DataFrame (flat `(cid, cemb)` or sharded
-    * `(shard, cid, cemb)`; ≤2^16 rows by the hard-capped width
-    * schedule) into a driver-pinned [[CellIndex]]. Every internal
-    * caller passes a [[pinLocal]]'d LocalRelation, so the collect is a
-    * driver-local read, not a job — the same sanctioned bounded class
-    * as pinLocal itself. Flat codebooks key every cell under shard 0.
-    */
-  private def cellIndexOf(cent: DataFrame, k: Int): CellIndex = {
-    val sel =
-      if (cent.columns.contains("shard"))
-        cent.select(col("shard").cast("long"), col("cid"), col("cemb"))
-      else cent.select(lit(0L), col("cid"), col("cemb"))
-    val rows = sel.collect().map { r =>
+  private def cellIndexOf(cent: DataFrame, k: Int): CellIndex =
+    CellIndex.build(cent.select(col("shard").cast("long"), col("cid"),
+        col("cemb")).collect().map { r =>
       (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) null else r.getSeq[Long](2).toArray)
-    }
-    CellIndex.build(rows, k)
-  }
-
-  /** See [[Concurrent.construct]] — overlapped construction of
-    * independent sub-plan families (guide §2.6).
-    */
-  private def runConcurrently(tasks: Seq[() => DataFrame]): Seq[DataFrame] =
-    Concurrent.construct(tasks)
+    }, k)
 
   /** Column form of [[CellIndex.nearest]] — the r14 map-only argmin
-    * (guide §2.4): per input row, the k nearest own-shard cells of the
-    * pinned codebook, ordered (dist ASC NULLS FIRST, cid ASC); empty
-    * array for an unknown/null shard. Replaces the
+    * (guide §2.4): per (shard, qemb) row, the k nearest own-shard cells
+    * of the pinned codebook `cent`, ordered (dist ASC NULLS FIRST, cid
+    * ASC); empty array for an unknown/null shard. Replaces the
     * broadcast-join + groupBy(id) argmin/TopK chain — one Exchange and
     * one hash aggregate REMOVED per assignment, probe stage and Lloyd
     * round, with bit-identical rows (NearestCellsSpec).
     */
-  private def nearestCells(idx: CellIndex, shard: Column,
-                           qemb: Column): Column =
+  private def nearestCells(cent: DataFrame, k: Int): Column =
     GraftExpr.column(NearestCells(
-      GraftExpr.expression(shard.cast("long")),
-      GraftExpr.expression(qemb), idx))
+      GraftExpr.expression(col("shard").cast("long")),
+      GraftExpr.expression(col("qemb")), cellIndexOf(cent, k)))
 
-  /** Nearest-centroid assignment, map-only: the codebook is already
-    * driver-pinned, so the argmin runs per corpus row inside
-    * whole-stage codegen (no broadcast join, no groupBy(id) Exchange).
-    * Ranking/NULL semantics identical to the replaced
-    * min(struct(dist, cid)) chain; the null-cid filter drops rows
-    * exactly where the old inner join dropped them (empty codebook).
+  /** The row's nearest own-shard cell; NULL where the old inner
+    * equi-join on `shard` dropped the row (a shard with no codebook
+    * entry).
     */
-  private def ivfAssign(e: DataFrame, cent: DataFrame): DataFrame =
-    e.select(col("id"),
-        get(nearestCells(cellIndexOf(cent, 1), lit(0L), col("qemb")),
-          lit(0)).as("cid"))
+  private def homeCell(cent: DataFrame): Column =
+    get(nearestCells(cent, 1), lit(0))
+
+  /** Shard-local nearest-cell assignment, map-only: each vector
+    * compares ONLY against its own shard's centroids in the pinned
+    * codebook (no broadcast join, no per-id Exchange); argmin ranking
+    * identical to the replaced min(struct(d, cid)), and rows with no
+    * cell are dropped.
+    */
+  private def ivfShardedAssign(e: DataFrame, cent: DataFrame): DataFrame =
+    e.select(col("id"), homeCell(cent).as("cid"))
       .filter(col("cid").isNotNull)
 
-  /** One fused Lloyd round: map-only nearest-cell argmin
-    * ([[nearestCells]] over the pinned codebook — no broadcast join,
-    * no per-id Exchange) feeding the per-(cell, dim) BIGINT-sum update
-    * with exact floor division (s − pmod(s, c)) div c — identical in
-    * any engine, unlike float means or truncating/flooring `/`
-    * disagreements. Cells that lost every member simply drop out of
-    * the codebook (standard k-means attrition; deterministic, mirrored
-    * by the oracle).
+  /** Index side of a search: every vector of `e` with its payload in
+    * its home cell (the map-only assignment folded into the
+    * projection).
     */
-  private def ivfLloydRound(train: DataFrame, c: DataFrame): DataFrame =
-    train.select(
-        get(nearestCells(cellIndexOf(c, 1), lit(0L), col("qemb")),
-          lit(0)).as("cid"),
-        col("qemb"))
+  private def indexSide(e: DataFrame, cent: DataFrame): DataFrame =
+    e.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
+        col("nrm").as("b_nrm"), homeCell(cent).as("cid"))
       .filter(col("cid").isNotNull)
-      .select(col("cid"), posexplode(col("qemb")).as(Seq("dim", "v")))
-      .groupBy(col("cid"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-      .withColumn("val", expr("(s - pmod(s, c)) DIV c"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, val))), " +
-        "p -> p.val)").as("cemb"))
 
-  /** Sharded twin of [[ivfLloydRound]]: shard-local map-only argmin,
-    * update fused in-plan.
+  /** One fused Lloyd round: shard-local map-only argmin feeding the
+    * per-(cell, dim) BIGINT-sum update with exact floor division
+    * (s − pmod(s, c)) div c — identical in any engine, unlike float
+    * means or truncating/flooring `/` disagreements. Cells that lost
+    * every member simply drop out of the codebook (standard k-means
+    * attrition; deterministic, mirrored by the oracle).
     */
   private def ivfShardedLloydRound(e: DataFrame, c: DataFrame): DataFrame =
-    e.select(
-        get(nearestCells(cellIndexOf(c, 1), col("shard"), col("qemb")),
-          lit(0)).as("cid"),
-        col("shard"), col("qemb"))
+    e.select(homeCell(c).as("cid"), col("shard"), col("qemb"))
       .filter(col("cid").isNotNull)
       .select(col("cid"), col("shard"),
         posexplode(col("qemb")).as(Seq("dim", "v")))
@@ -1868,43 +1866,6 @@ object SimilarityOps {
       .agg(min(col("shard")).as("shard"),
         expr("transform(array_sort(collect_list(struct(dim, val))), " +
           "p -> p.val)").as("cemb"))
-
-  /** Train the IVF codebook: md5 seeds + `rounds` exact Lloyd rounds
-    * over the `sampleMod`-sampled training slice (`u % mod = 0` on the
-    * md5 draw; mod = 1 trains on everything). Returns (full signature
-    * table, training slice, final centroids, previous-round
-    * centroids). Each centroid table is ≤kCent rows —
-    * localCheckpointed so the next round's broadcast replays a
-    * materialized table, not the whole lineage.
-    *
-    * Scale: each round is one broadcast-assign (m·kCent distance rows
-    * over the m-row slice, map-side) + one (cell, dim) hash agg. With
-    * [[ivfSampleMod]]'s ~32·kCent slice the Lloyd cost is ∝ kCent² ∝ n
-    * under the width schedule — training no longer sweeps the corpus,
-    * which is what retired the flat trainer's n^1.5 (measured ×10.2 at
-    * 10× data in round 10). Callers that still assign the FULL corpus
-    * (the flat [[ivfAnnTopK]], q444's audit) pay n·kCent there by
-    * declaration; the declared ANN (q441) is the sharded layout whose
-    * assignment is n·kcPerShard.
-    */
-  private def ivfFit(df: DataFrame, idCol: String, embCol: String,
-                     kCent: Int, rounds: Int, sampleMod: Int = 1)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // every caller needs cents(rounds - 1); guard HERE so a rounds = 0
-    // call fails with a message, not an IndexOutOfBoundsException
-    require(rounds >= 1, "IVF training needs at least one Lloyd round")
-    val e = ppmQuantized(df, idCol, embCol).localCheckpoint(false)
-    val train = if (sampleMod <= 1) e
-      else e.filter(pmod(md5U(col("id")), lit(sampleMod)) === 0)
-        .localCheckpoint(false)
-    val c0 = pinLocal(ivfSeeds(train, kCent)
-      .join(train.select(col("id").as("cid"), col("qemb").as("cemb")),
-        Seq("cid")))
-    val cents = Iterator.iterate(c0)(c =>
-      pinLocal(ivfLloydRound(train, c)))
-      .take(rounds + 1).toSeq
-    (e, train, cents(rounds), cents(rounds - 1))
-  }
 
   /** Materialize a BOUNDED artifact (codebook, ≤kCent·shards rows by
     * the width schedule) as a driver-local relation — the MLlib
@@ -1924,22 +1885,72 @@ object SimilarityOps {
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
+  /** The Lloyd training slice: 1-in-`trainMod` vectors on the md5
+    * draw (`u % mod = 0`), localCheckpointed because seeding and every
+    * round read it. trainMod = 1 trains on everything and adds no job.
+    * With [[ivfSampleMod]]'s ~32·kCent slice the Lloyd cost is
+    * ∝ kCent² ∝ n under the width schedule — training no longer sweeps
+    * the corpus, which is what retired the flat trainer's n^1.5
+    * (measured ×10.2 at 10× data in round 10).
+    */
+  private def trainSlice(e: DataFrame, trainMod: Int): DataFrame =
+    if (trainMod <= 1) e
+    else e.filter(pmod(md5U(col("id")), lit(trainMod)) === 0)
+      .localCheckpoint(false)
+
+  /** Train the per-shard codebooks on a sharded signature table:
+    * per-shard md5 seeds — the `kcPerShard` vectors with the smallest
+    * (md5(id), id), a data-independent uniform draw both engines
+    * replay exactly, picked by the BOUNDED TopKAggregator — then
+    * `rounds` shard-local exact Lloyd rounds. Returns every round's
+    * pinned `(cid, shard, cemb)` codebook, seeds first. cid = seed
+    * vector id stays globally unique, so downstream joins key on cid
+    * alone.
+    */
+  private def ivfShardedFitOn(train: DataFrame, kcPerShard: Int,
+                              rounds: Int): Seq[DataFrame] = {
+    require(rounds >= 1, "IVF training needs at least one Lloyd round")
+    val seeds = train.withColumn("__u", md5U(col("id")))
+      .groupBy(col("shard"))
+      .agg(graft.functions.TopKAggregator.topK(kcPerShard,
+        -col("__u").cast("double"), col("id")).as("__top"))
+      .select(col("shard"), explode(col("__top")).as("t"))
+      .select(col("shard"), col("t.id").as("cid"))
+    val c0 = pinLocal(seeds
+      .join(train.select(col("id").as("cid"), col("qemb").as("cemb")),
+        Seq("cid")))
+    Iterator.iterate(c0)(c => pinLocal(ivfShardedLloydRound(train, c)))
+      .take(rounds + 1).toList
+  }
+
+  /** Quantize, shard and train: (sharded signature table, final
+    * codebook), Lloyd on the 1-in-`trainMod` slice.
+    */
+  private def ivfShardedFit(df: DataFrame, idCol: String, embCol: String,
+                            kcPerShard: Int, rounds: Int, shardBits: Int,
+                            trainMod: Int = 1): (DataFrame, DataFrame) = {
+    val e = shardQuantized(df, idCol, embCol, shardBits)
+    (e, ivfShardedFitOn(trainSlice(e, trainMod), kcPerShard, rounds).last)
+  }
+
   /** IVF codebook training census — the trained-quantizer health
-    * report: per surviving cell, its member count IN THE TRAINING
-    * SLICE, centroid L1 mass, and the last Lloyd round's L1 movement
-    * (the convergence signal an index build monitors). kCent/rounds/
-    * sampleMod are the dials; outputs are exact BIGINTs. With
-    * sampleMod > 1 this is the TRAINER's own health report — member
-    * counts over the data Lloyd actually saw (full-corpus cell loads
-    * belong to the assignment queries); sampleMod = 1 (the default,
-    * and the gate sf0.001/sf0.01 regime under [[ivfSampleMod]])
-    * reproduces the round-10 full-corpus census bit-for-bit.
+    * report of the flat (one-shard) codebook: per surviving cell, its
+    * member count IN THE TRAINING SLICE, centroid L1 mass, and the last
+    * Lloyd round's L1 movement (the convergence signal an index build
+    * monitors). kCent/rounds/sampleMod are the dials; outputs are exact
+    * BIGINTs. With sampleMod > 1 this is the TRAINER's own health
+    * report — member counts over the data Lloyd actually saw
+    * (full-corpus cell loads belong to the assignment queries);
+    * sampleMod = 1 (the default, and the gate sf0.001/sf0.01 regime
+    * under [[ivfSampleMod]]) reproduces the round-10 full-corpus census
+    * bit-for-bit.
     */
   def ivfTrain(df: DataFrame, idCol: String, embCol: String,
                kCent: Int, rounds: Int = 2, sampleMod: Int = 1): DataFrame = {
-    val (_, train, cFinal, cPrev) =
-      ivfFit(df, idCol, embCol, kCent, rounds, sampleMod)
-    val members = ivfAssign(train, cFinal).groupBy(col("cid"))
+    val train = trainSlice(shardQuantized(df, idCol, embCol, 0), sampleMod)
+    val Seq(cPrev, cFinal) =
+      ivfShardedFitOn(train, kCent, rounds).takeRight(2)
+    val members = ivfShardedAssign(train, cFinal).groupBy(col("cid"))
       .agg(count(lit(1)).as("__n"))
     cFinal.join(members, Seq("cid"), "left")
       .join(cPrev.select(col("cid"), col("cemb").as("__prev")), Seq("cid"))
@@ -1956,134 +1967,6 @@ object SimilarityOps {
           "0L, (acc, x) -> acc + x)").as("shift_l1"))
       .orderBy(col("cid"))
   }
-
-  /** ANN top-k over the TRAINED quantizer: index side sits in its
-    * nearest cell, query side probes its `nprobe` nearest cells
-    * (bounded TopKAggregator over the n·kCent distance rows), then one
-    * equi-join on the cell id and exact double cosine within — the
-    * same candidate-join discipline as the sign-bucket family, with
-    * data-adapted cells. Recall/cost dial = (kCent, nprobe).
-    */
-  def ivfAnnTopK(df: DataFrame, idCol: String, embCol: String, k: Int,
-                 kCent: Int, nprobe: Int = 2, rounds: Int = 2): DataFrame = {
-    val (e, _, cFinal, _) = ivfFit(df, idCol, embCol, kCent, rounds)
-    // probe list / home assignment AND payload in ONE map-only
-    // projection each over the pinned codebook (was: broadcast sweep +
-    // TopKAggregator/argmin groupBy(id) + join-back per side — two
-    // Exchanges and two joins removed; same (d ASC, cid ASC) order)
-    val a = e.select(col("id").as("vec_id"), col("emb").as("a_emb"),
-      col("nrm").as("a_nrm"),
-      explode(nearestCells(cellIndexOf(cFinal, nprobe), lit(0L),
-        col("qemb"))).as("cid"))
-    val b = e.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-        col("nrm").as("b_nrm"),
-        get(nearestCells(cellIndexOf(cFinal, 1), lit(0L), col("qemb")),
-          lit(0)).as("cid"))
-      .filter(col("cid").isNotNull)
-    val pairs = a.join(b, "cid")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-      .select(col("vec_id"), col("neighbor_id"), col("sim"))
-    selectTopK(pairs, k)
-  }
-
-  /** The trained codebook itself — (cid, cemb bigint[]) after `rounds`
-    * exact Lloyd rounds. ≤kCent rows: this is the artifact a serving
-    * layer freezes and folds into the map-only streaming assigner
-    * ([[graft.streaming.StreamingIvfAssign]]), the same
-    * train-batch / serve-stream split as the DSIR scorer.
-    */
-  def ivfCodebook(df: DataFrame, idCol: String, embCol: String,
-                  kCent: Int, rounds: Int = 2): DataFrame =
-    ivfFit(df, idCol, embCol, kCent, rounds)._3
-
-  /** Sharded trained-IVF ANN — the IMI-style 100 TB layout for the
-    * q440 family: a data-INDEPENDENT first level (`shardBits` leading
-    * sign bits → 2^shardBits shards) partitions the corpus, then each
-    * shard trains its OWN exact-integer codebook and every
-    * assignment/probe compares a vector only against its shard's
-    * centroids (equi-join on the shard id — the flat form's
-    * broadcast-everything n·kCent sweep becomes n·kcPerShard, and each
-    * shard's codebook stays bounded no matter how large the corpus
-    * grows; this is how the flat trainer's measured ×10 probe ratio is
-    * paid down at cluster scale). The FULLY-linear dial setting is the
-    * q441 one: shardBits rides the count schedule (so shards ∝ n) with
-    * kcPerShard FIXED — assignment stays n·kcPerShard and the mean
-    * cell n/(2^shardBits·kc) stays bounded at any corpus size; q441
-    * keeps the fixed-4-bit first level as the measured IMI comparison
-    * point. Search is shard-local (cross-shard neighbors are foregone,
-    * the standard IMI trade — measured per corpus by q449's recall
-    * certificate at the round-11 dials, and DIALED AWAY by q452's
-    * sweep: q441 now ships its winner, shardBits = max(1, bits − 5),
-    * kcPerShard = 16, nprobe = 8, which reads 0.98× the flat layout's
-    * recall@5 at 1.34× its candidates/query on the gate corpus). cid =
-    * seed vector id stays globally unique, so downstream joins key on
-    * cid alone.
-    */
-  /** Exact integer squared-L2 between a vector and a centroid — the
-    * native codegen'd [[graft.functions.SqDistLong]] (bit-identical to
-    * the HOF chain it replaced; same NULL contract).
-    */
-  private val shardQdist = expr("graft_sqdist(qemb, cemb)")
-
-  /** Shard-local nearest-cell assignment, map-only: each vector
-    * compares ONLY against its own shard's ≤kcPerShard centroids in
-    * the pinned codebook ([[nearestCells]] — no broadcast join, no
-    * per-id Exchange); argmin ranking identical to the replaced
-    * min(struct(d, cid)), and the null-cid filter drops rows exactly
-    * where the old inner equi-join on `shard` dropped them (a shard
-    * with no codebook entry).
-    */
-  private def ivfShardedAssign(e: DataFrame, cent: DataFrame): DataFrame =
-    e.select(col("id"),
-        get(nearestCells(cellIndexOf(cent, 1), col("shard"),
-          col("qemb")), lit(0)).as("cid"))
-      .filter(col("cid").isNotNull)
-
-  /** Train the per-shard codebooks: per-shard md5 seeds (bounded
-    * TopKAggregator) + `rounds` shard-local exact Lloyd rounds.
-    * Returns (sharded signature table, final (cid, shard, cemb)
-    * codebook).
-    */
-  private def ivfShardedFit(df: DataFrame, idCol: String, embCol: String,
-                            kcPerShard: Int, rounds: Int,
-                            shardBits: Int): (DataFrame, DataFrame) = {
-    val e = shardQuantized(df, idCol, embCol, shardBits)
-    (e, ivfShardedFitOn(e, kcPerShard, rounds))
-  }
-
-  /** The Lloyd half of [[ivfShardedFit]] over a pre-built sharded
-    * signature table — factored out so the dial sweep (q452) trains
-    * its three per-shard codebook widths off ONE shardQuantized scan
-    * per shard level instead of re-quantizing the corpus per dial.
-    */
-  private def ivfShardedFitOn(e: DataFrame, kcPerShard: Int,
-                              rounds: Int): DataFrame = {
-    require(rounds >= 1, "sharded IVF training needs at least one round")
-    val seeds = e.withColumn("__u", md5U(col("id")))
-      .groupBy(col("shard"))
-      .agg(graft.functions.TopKAggregator.topK(kcPerShard,
-        -col("__u").cast("double"), col("id")).as("__top"))
-      .select(col("shard"), explode(col("__top")).as("t"))
-      .select(col("shard"), col("t.id").as("cid"))
-    val c0 = pinLocal(seeds
-      .join(e.select(col("id").as("cid"), col("qemb").as("cemb")),
-        Seq("cid")))
-    Iterator.iterate(c0)(c =>
-      pinLocal(ivfShardedLloydRound(e, c)))
-      .drop(rounds).next()
-  }
-
-  /** Per-vector `nprobe` nearest own-shard cells — map-only
-    * [[nearestCells]] over the pinned codebook + explode (was a
-    * broadcast join + TopKAggregator groupBy(id): one Exchange and one
-    * hash aggregate removed; same (d ASC, cid ASC) order).
-    */
-  private def ivfShardedProbes(e: DataFrame, cFinal: DataFrame,
-                               nprobe: Int): DataFrame =
-    e.select(col("id"),
-      explode(nearestCells(cellIndexOf(cFinal, nprobe), col("shard"),
-        col("qemb"))).as("cid"))
 
   /** Frozen-index sharded SEARCH core: route each query row of `q` (a
     * sharded signature table — same shape as `e`) to its `nprobe`
@@ -2112,43 +1995,51 @@ object SimilarityOps {
       cFinal, nprobe, k)
 
   /** The search tail over a prebuilt candidate index side `b`
-    * (neighbor_id, b_emb, b_nrm, cid): map-only probe projection on
-    * the query side, equi-join on the cell id, exact double cosine,
-    * bounded top-k.
+    * (neighbor_id, b_emb, b_nrm, cid): probe list AND payload in ONE
+    * map-only projection on the query side, equi-join on the cell id,
+    * exact double cosine, bounded top-k.
     */
   private def ivfShardedSearchOn(q: DataFrame, b: DataFrame,
                                  cFinal: DataFrame,
                                  nprobe: Int, k: Int): DataFrame = {
-    // probe list AND payload in ONE map-only projection: the probes
-    // come from the pinned-codebook kernel, so the old
-    // probes-join-back-to-q shuffle is vestigial (r14, guide §2.4)
     val a = q.select(col("id").as("vec_id"), col("emb").as("a_emb"),
       col("nrm").as("a_nrm"),
-      explode(nearestCells(cellIndexOf(cFinal, nprobe), col("shard"),
-        col("qemb"))).as("cid"))
-    val pairs = a.join(b, "cid")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-      .select(col("vec_id"), col("neighbor_id"), col("sim"))
-    selectTopK(pairs, k)
+      explode(nearestCells(cFinal, nprobe)).as("cid"))
+    selectTopK(candidatePairs(a, b, "cid"), k)
   }
 
+  /** Sharded trained-IVF ANN — the IMI-style 100 TB layout for the
+    * q440 family: a data-INDEPENDENT first level (`shardBits` leading
+    * sign bits → 2^shardBits shards) partitions the corpus, then each
+    * shard trains its OWN exact-integer codebook and every
+    * assignment/probe compares a vector only against its shard's
+    * centroids — n·kcPerShard instead of the one-shard n·kCent sweep,
+    * and each shard's codebook stays bounded no matter how large the
+    * corpus grows. The FULLY-linear dial setting is the q441 one:
+    * shardBits rides the count schedule (so shards ∝ n) with
+    * kcPerShard FIXED — assignment stays n·kcPerShard and the mean cell
+    * n/(2^shardBits·kc) stays bounded at any corpus size; q448 keeps
+    * the fixed-4-bit first level as the measured IMI comparison point.
+    * Search is shard-local (cross-shard neighbors are foregone, the
+    * standard IMI trade — measured per corpus by q449's recall
+    * certificate at the round-11 dials, and DIALED AWAY by q452's
+    * sweep: q441 ships its winner, shardBits = max(1, bits − 5),
+    * kcPerShard = 16, nprobe = 8, which reads 0.98× the flat layout's
+    * recall@5 at 1.34× its candidates/query on the gate corpus).
+    * shardBits = 0 is the flat trained-IVF ANN (index side in its
+    * nearest cell, queries probe `nprobe` cells).
+    */
   def ivfAnnTopKSharded(df: DataFrame, idCol: String, embCol: String,
                         k: Int, kcPerShard: Int, nprobe: Int = 2,
                         rounds: Int = 2, shardBits: Int = 4): DataFrame = {
     val (e, cFinal) = ivfShardedFit(df, idCol, embCol, kcPerShard,
       rounds, shardBits)
     // full-corpus ANN trains and searches in one plan, so the home
-    // assignment folds into the index-side projection map-only (the
-    // ivfProbeCands b-side shape) — one self-join of the signature
-    // checkpoint removed; the serving twin (q453) keeps the frozen
-    // home table through [[ivfShardedSearch]] by design.
-    val b = e.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-        col("nrm").as("b_nrm"),
-        get(nearestCells(cellIndexOf(cFinal, 1), col("shard"),
-          col("qemb")), lit(0)).as("cid"))
-      .filter(col("cid").isNotNull)
-    ivfShardedSearchOn(e, b, cFinal, nprobe, k)
+    // assignment folds into the index-side projection map-only — one
+    // self-join of the signature checkpoint removed; the serving twin
+    // (q453) keeps the frozen home table through [[ivfShardedSearch]]
+    // by design.
+    ivfShardedSearchOn(e, indexSide(e, cFinal), cFinal, nprobe, k)
   }
 
   /** Declared serving twin of the sharded STREAMING recall path
@@ -2193,11 +2084,11 @@ object SimilarityOps {
     * column `pcell` = "<shard>_<cid>", ≤ 2^shardBits · kcPerShard
     * distinct values), repartitioned by pcell first so each cell is a
     * compact file set. A request then never scans the corpus: the
-    * router probes the broadcast codebook and reads back ONLY its
-    * probed cells via partition-PRUNED point reads — the storage
-    * analogue of an ANN server's in-memory posting lists, and the
-    * mechanism [[ivfServeBatchPruned]] measures (graft.ServeBench).
-    * Returns the frozen codebook for the router.
+    * router probes the pinned codebook and reads back ONLY its probed
+    * cells via partition-PRUNED point reads — the storage analogue of
+    * an ANN server's in-memory posting lists, and the mechanism
+    * [[ivfServeBatchPruned]] measures (graft.ServeBench). Returns the
+    * frozen codebook for the router.
     */
   def ivfServeIndexWrite(df: DataFrame, idCol: String, embCol: String,
                          kcPerShard: Int, rounds: Int, shardBits: Int,
@@ -2214,27 +2105,24 @@ object SimilarityOps {
 
   /** One serving micro-batch against the [[ivfServeIndexWrite]]
     * layout: route each request to its `nprobe` nearest own-shard
-    * cells (kcPerShard broadcast distances per request — the
-    * graft_sqdist kernel), collect the tiny distinct probed-cell list
-    * (the router's request-path lookup, ≤ batch·nprobe values), and
-    * read ONLY those cells back through the parquet partition filter —
-    * per-batch data touched is Σ probed cell sizes, independent of
-    * corpus row count. Exact double cosine within the candidates,
-    * bounded top-k. Rows are identical to [[ivfShardedSearch]] on the
-    * same frozen index (ServeBench asserts that parity before
-    * timing).
+    * cells (kcPerShard distances per request, map-only), collect the
+    * tiny distinct probed-cell list (the router's request-path lookup,
+    * ≤ batch·nprobe values), and read ONLY those cells back through
+    * the parquet partition filter — per-batch data touched is Σ probed
+    * cell sizes, independent of corpus row count. Exact double cosine
+    * within the candidates, bounded top-k. Rows are identical to
+    * [[ivfShardedSearch]] on the same frozen index (IvfSpec and
+    * ServeBench assert that parity).
     */
   def ivfServeBatchPruned(requests: DataFrame, idCol: String,
                           embCol: String, index: DataFrame,
                           cFinal: DataFrame, shardBits: Int,
                           nprobe: Int, k: Int): DataFrame = {
-    val q = shardQuantized(requests, idCol, embCol, shardBits)
-    // probe list, shard AND payload in one map-only projection (the
-    // pinned-codebook kernel; no join-back — r14, guide §2.4)
-    val probes = q.select(col("id"), col("shard"), col("emb"),
-        col("nrm"),
-        explode(nearestCells(cellIndexOf(cFinal, nprobe), col("shard"),
-          col("qemb"))).as("cid"))
+    // probe list, shard AND payload in one map-only projection
+    val probes = shardQuantized(requests, idCol, embCol, shardBits)
+      .select(col("id").as("vec_id"), col("emb").as("a_emb"),
+        col("nrm").as("a_nrm"), col("shard"),
+        explode(nearestCells(cFinal, nprobe)).as("cid"))
       .withColumn("pcell", concat_ws("_", col("shard"), col("cid")))
     val cells = probes.select("pcell").distinct()
       .collect().map(_.getString(0)).toSeq
@@ -2246,25 +2134,18 @@ object SimilarityOps {
     // driver — O(total cells) = O(corpus) per request batch, which is
     // exactly the corpus-size dependence the layout exists to remove
     // (measured: it alone doubled sf1 batch latency in ServeBench).
-    val idx = index.filter(col("pcell").isin(cells: _*))
-    val a = probes.join(q, "id")
-      .select(col("id").as("vec_id"), col("emb").as("a_emb"),
-        col("nrm").as("a_nrm"), col("pcell"))
-    val b = idx.select(col("id").as("neighbor_id"),
-      col("emb").as("b_emb"), col("nrm").as("b_nrm"), col("pcell"))
-    val pairs = a.join(b, "pcell")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim",
-        dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-      .select(col("vec_id"), col("neighbor_id"), col("sim"))
-    selectTopK(pairs, k)
+    val b = index.filter(col("pcell").isin(cells: _*))
+      .select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
+        col("nrm").as("b_nrm"), col("pcell"))
+    selectTopK(candidatePairs(probes.drop("shard", "cid"), b, "pcell"), k)
   }
 
   /** The trained PER-SHARD codebook — (shard, cid, cemb bigint[]):
     * the artifact a serving layer freezes and folds into the map-only
-    * sharded streaming assigner
+    * streaming assigner
     * ([[graft.streaming.StreamingIvfAssign.assignSharded]]), the same
-    * train-batch / serve-stream split as the flat [[ivfCodebook]].
+    * train-batch / serve-stream split as the DSIR scorer. shardBits = 0
+    * is the flat codebook, every cell in shard 0.
     */
   def ivfShardedCodebook(df: DataFrame, idCol: String, embCol: String,
                          kcPerShard: Int, rounds: Int = 2,
@@ -2275,193 +2156,95 @@ object SimilarityOps {
   /** Batch twin of the sharded STREAMING assigner
     * ([[graft.streaming.StreamingIvfAssign.assignSharded]]): assign
     * vectors to the cells of a FROZEN (shard, cid, cemb) codebook — no
-    * training, just the shard routing + shard-local argmin. Output is
-    * the stream's (id, shard, cid, dist2) contract INCLUDING its
-    * dead-letter rows: a vector routed to a shard with no codebook
-    * entry, or one whose distance cannot be computed (malformed /
-    * wrong-dimension embedding), emits NULL cid/dist2 via the LEFT
-    * join — never a silent drop and never a phantom argmin over NULL
-    * distances. The spec pins stream ≡ batch on this pair, dead
-    * letters included. (Training-loop assignment keeps the inner-join
-    * [[ivfShardedAssign]]: there every vector's shard has ≥1 seed by
-    * construction.)
+    * training, just the shard routing + the map-only shard-local
+    * argmin, with dist2 recomputed against the chosen cell's centroid
+    * (a broadcast lookup of the ≤2^16-row codebook, no per-id
+    * aggregate). Output is the stream's (id, shard, cid, dist2)
+    * contract INCLUDING its dead-letter rows: a vector routed to a
+    * shard with no codebook entry, or one whose distance cannot be
+    * computed (malformed / wrong-dimension embedding — its dist2 is
+    * NULL), emits NULL cid/dist2 — never a silent drop and never a
+    * phantom argmin over NULL distances. The spec pins stream ≡ batch
+    * on this pair, dead letters included.
     */
   def ivfShardedAssignFrozen(df: DataFrame, idCol: String,
                              embCol: String, codebook: DataFrame,
-                             shardBits: Int): DataFrame = {
-    val e = shardQuantized(df, idCol, embCol, shardBits)
-    val assigned = e.select(col("id"), col("shard"), col("qemb"))
-      .join(broadcast(codebook), Seq("shard"))
-      .withColumn("__d", shardQdist)
-      .filter(col("__d").isNotNull)
-      .groupBy(col("id"))
-      .agg(min(struct(col("__d"), col("cid"))).as("__m"))
-      .select(col("id"), col("__m.cid").as("cid"),
-        col("__m.__d").as("dist2"))
-    e.select(col("id"), col("shard"))
-      .join(assigned, Seq("id"), "left")
-      .select(col("id"), col("shard"), col("cid"), col("dist2"))
-  }
+                             shardBits: Int): DataFrame =
+    shardQuantized(df, idCol, embCol, shardBits)
+      .select(col("id"), col("shard"), col("qemb"),
+        homeCell(codebook).as("cid"))
+      .join(broadcast(codebook.select(col("cid"), col("cemb"))),
+        Seq("cid"), "left")
+      .withColumn("dist2", expr("graft_sqdist(qemb, cemb)"))
+      .select(col("id"), col("shard"),
+        when(col("dist2").isNotNull, col("cid")).as("cid"), col("dist2"))
 
-  /** Measured recall certificate for the SHARDED trained quantizer
-    * (q449) — [[ivfRecallAudit]]'s shape on [[ivfAnnTopKSharded]]'s
-    * layout at the SAME dials as the declared q441: recall@k per
-    * own-shard nprobe ∈ {1, 2, 3} vs the exact top-k of a
-    * 1-in-`sampleMod` md5-class query sample over the FULL corpus —
-    * so cross-shard true neighbors (the IMI shard-locality trade this
-    * layout deliberately forgoes) count AGAINST recall here; the gap
-    * between this table and q444's flat numbers IS the measured price
-    * of sharding. Same deliberate-cartesian whitelist class as
-    * q397/q438/q439/q444 (the exact side samples the corpus once).
-    */
-  def ivfRecallAuditSharded(df: DataFrame, idCol: String, embCol: String,
-                            k: Int, kcPerShard: Int, shardBits: Int,
-                            sampleMod: Int = 20,
-                            rounds: Int = 2): DataFrame = {
-    val (e, cFinal) = ivfShardedFit(df, idCol, embCol, kcPerShard,
-      rounds, shardBits)
-    val q = e.filter(pmod(col("id"), lit(sampleMod)) === 0)
-      .localCheckpoint(false)
-    val exact = selectTopK(pairSim(q, e), k)
-      .select(col("vec_id"), col("neighbor_id"), lit(1L).as("__e"))
-    // probe ranks / home assignment AND payload in one map-only
-    // projection per side (pinned-codebook kernel; the old join-backs
-    // were vestiges of the groupBy(id) form — r14, guide §2.4)
-    val a = q.select(col("id").as("vec_id"), col("emb").as("a_emb"),
-        col("nrm").as("a_nrm"),
-        posexplode(nearestCells(cellIndexOf(cFinal, 3), col("shard"),
-          col("qemb"))).as(Seq("__p", "cid")))
-      .withColumn("pr", (col("__p") + 1).cast("long"))
-    val b = e.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-        col("nrm").as("b_nrm"),
-        get(nearestCells(cellIndexOf(cFinal, 1), col("shard"),
-          col("qemb")), lit(0)).as("cid"))
-      .filter(col("cid").isNotNull)
-    val cand = a.join(b, "cid")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-      .groupBy(col("vec_id"), col("neighbor_id"))
-      .agg(min(col("pr")).as("pr"), max(col("sim")).as("sim"))
-      // three nprobe filters read the candidate table.
-      .localCheckpoint(false)
-    val ann = Seq(1, 2, 3).map { lvl =>
-      selectTopK(cand.filter(col("pr") <= lvl)
-          .select(col("vec_id"), col("neighbor_id"), col("sim")), k)
-        .withColumn("nprobe", lit(lvl.toLong))
-    }.reduce(_ unionAll _)
-    val nq = q.agg(count(lit(1)).as("__nq"))
-    ann.join(exact, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy(col("nprobe"))
-      .agg(count(col("__e")).as("n_hits"))
-      .crossJoin(broadcast(nq))
-      .select(lit(shardBits.toLong).as("shard_bits"), col("nprobe"),
-        col("__nq").as("n_queries"), col("n_hits"),
-        expr(s"CAST((n_hits * 2000000 + $k * __nq) " +
-          s"div (2 * $k * __nq) AS BIGINT)").as("recall_ppm"))
-  }
-
-  /** Measured recall certificate for the TRAINED quantizer — the
-    * q438/q439 audit shape applied to [[ivfAnnTopK]]: recall@k per
-    * nprobe ∈ {1, 2, 3} against the exact top-k of a 1-in-`sampleMod`
-    * md5-class query sample (the sampled brute-force ground truth —
-    * same deliberate-cartesian whitelist class as q397/q438/q439).
-    * Read next to q438/q439 this answers the index-design question
-    * directly: does adapting cells to corpus density buy recall over
-    * the data-independent sign planes at equal candidate cost?
-    */
-  /** Multi-probe candidate-pair table over the FLAT trained codebook:
-    * each query's `maxProbe` nearest cells (bounded TopKAggregator
-    * over the broadcast codebook distances) equi-joined to the home
-    * assignments — one row per DISTINCT reachable pair, tagged with
-    * its minimum probe rank `pr` and cosine. localCheckpointed — the
-    * per-nprobe recall filters AND q450's candidate counts read it.
-    */
-  private def ivfProbeCands(q: DataFrame, e: DataFrame,
-                            cFinal: DataFrame,
-                            maxProbe: Int = 3): DataFrame = {
-    // probe ranks / home assignment AND payload in one map-only
-    // projection per side over the pinned codebook — no groupBy(id),
-    // no join-backs (r14, guide §2.4)
-    val a = q.select(col("id").as("vec_id"), col("emb").as("a_emb"),
-        col("nrm").as("a_nrm"),
-        posexplode(nearestCells(cellIndexOf(cFinal, maxProbe), lit(0L),
-          col("qemb"))).as(Seq("__p", "cid")))
-      .withColumn("pr", (col("__p") + 1).cast("long"))
-    val b = e.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-        col("nrm").as("b_nrm"),
-        get(nearestCells(cellIndexOf(cFinal, 1), lit(0L), col("qemb")),
-          lit(0)).as("cid"))
-      .filter(col("cid").isNotNull)
-    a.join(b, "cid")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-      .groupBy(col("vec_id"), col("neighbor_id"))
-      .agg(min(col("pr")).as("pr"), max(col("sim")).as("sim"))
-      .localCheckpoint(false)
-  }
-
-  /** [[ivfProbeCands]]'s shape on the SHARDED layout: each query's
-    * `maxProbe` nearest OWN-SHARD cells (equi-join on shard — never
-    * the flat broadcast-everything sweep) equi-joined to the frozen
-    * home assignments; one row per DISTINCT reachable (query,
-    * neighbor) pair tagged with its minimum probe rank and cosine.
-    * localCheckpointed — the dial sweep's per-nprobe recall filters
-    * and candidate counts all read it.
+  /** Multi-probe candidate-pair table over a trained codebook: each
+    * query's `maxProbe` nearest OWN-SHARD cells equi-joined to the
+    * home assignments — one row per DISTINCT reachable (query,
+    * neighbor) pair tagged with its minimum probe rank `pr` and
+    * cosine. Probe ranks and home cells ride map-only projections over
+    * the pinned codebook — no groupBy(id), no join-backs (r14, guide
+    * §2.4). localCheckpointed — the per-nprobe recall filters and the
+    * candidate counts (q450/q452) all read it.
     */
   private def ivfShardedProbeCands(q: DataFrame, e: DataFrame,
                                    cFinal: DataFrame,
                                    maxProbe: Int): DataFrame = {
-    // same map-only probe/assign projections as [[ivfProbeCands]],
-    // shard-local
     val a = q.select(col("id").as("vec_id"), col("emb").as("a_emb"),
         col("nrm").as("a_nrm"),
-        posexplode(nearestCells(cellIndexOf(cFinal, maxProbe),
-          col("shard"), col("qemb"))).as(Seq("__p", "cid")))
+        posexplode(nearestCells(cFinal, maxProbe)).as(Seq("__p", "cid")))
       .withColumn("pr", (col("__p") + 1).cast("long"))
-    val b = e.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
-        col("nrm").as("b_nrm"),
-        get(nearestCells(cellIndexOf(cFinal, 1), col("shard"),
-          col("qemb")), lit(0)).as("cid"))
-      .filter(col("cid").isNotNull)
-    a.join(b, "cid")
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+    candidatePairs(a, indexSide(e, cFinal), "cid")
       .groupBy(col("vec_id"), col("neighbor_id"))
       .agg(min(col("pr")).as("pr"), max(col("sim")).as("sim"))
       .localCheckpoint(false)
   }
 
-  def ivfRecallAudit(df: DataFrame, idCol: String, embCol: String,
-                     k: Int, kCent: Int, sampleMod: Int = 20,
-                     rounds: Int = 2, trainMod: Int = 1): DataFrame = {
-    // trainMod > 1 puts the Lloyd rounds on the q440 md5-sampled slice
-    // (32·kCent vectors) — the round-12 fix for this audit's measured
-    // full-corpus-training drift (×13.7 → ×17.9 at 10× data): the
-    // certificate only needs a REPRESENTATIVE codebook, and only the
-    // one home-assignment sweep plus the declared-quadratic sampled
-    // exact side still read the whole corpus.
-    val (e, _, cFinal, _) = ivfFit(df, idCol, embCol, kCent, rounds,
-      trainMod)
+  /** Measured recall certificate for the SHARDED trained quantizer
+    * (q449) — the q438/q439 audit shape on [[ivfAnnTopKSharded]]'s
+    * layout: recall@k per own-shard nprobe ∈ {1, 2, 3} vs the exact
+    * top-k of a 1-in-`sampleMod` md5-class query sample over the FULL
+    * corpus — so cross-shard true neighbors (the IMI shard-locality
+    * trade this layout deliberately forgoes) count AGAINST recall
+    * here; the gap between this table and q444's flat (shardBits = 0)
+    * numbers IS the measured price of sharding. Same
+    * deliberate-cartesian whitelist class as q397/q438/q439/q444 (the
+    * exact side samples the corpus once). `trainMod` > 1 puts the
+    * Lloyd rounds on the md5-sampled slice.
+    */
+  def ivfRecallAuditSharded(df: DataFrame, idCol: String, embCol: String,
+                            k: Int, kcPerShard: Int, shardBits: Int,
+                            sampleMod: Int = 20, rounds: Int = 2,
+                            trainMod: Int = 1): DataFrame = {
+    val (e, cFinal) = ivfShardedFit(df, idCol, embCol, kcPerShard,
+      rounds, shardBits, trainMod)
     val q = e.filter(pmod(col("id"), lit(sampleMod)) === 0)
       .localCheckpoint(false)
-    val exact = selectTopK(pairSim(q, e), k)
-      .select(col("vec_id"), col("neighbor_id"), lit(1L).as("__e"))
+    val exact = exactMarks(q, e, k)
     // three nprobe filters read the shared candidate table.
-    val cand = ivfProbeCands(q, e, cFinal)
-    val ann = Seq(1, 2, 3).map { lvl =>
-      selectTopK(cand.filter(col("pr") <= lvl)
-          .select(col("vec_id"), col("neighbor_id"), col("sim")), k)
-        .withColumn("nprobe", lit(lvl.toLong))
-    }.reduce(_ unionAll _)
-    val nq = q.agg(count(lit(1)).as("__nq"))
-    ann.join(exact, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy(col("nprobe"))
-      .agg(count(col("__e")).as("n_hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("nprobe"), col("__nq").as("n_queries"), col("n_hits"),
-        expr(s"CAST((n_hits * 2000000 + $k * __nq) " +
-          s"div (2 * $k * __nq) AS BIGINT)").as("recall_ppm"))
+    val cand = ivfShardedProbeCands(q, e, cFinal, 3)
+    levelRecall(cand, "pr", Seq(1, 2, 3), "nprobe", exact, q, k)
+      .select(lit(shardBits.toLong).as("shard_bits"), col("*"))
   }
+
+  /** Measured recall certificate for the TRAINED flat quantizer (q444)
+    * — [[ivfRecallAuditSharded]] at shardBits = 0 without the
+    * shard_bits column. Read next to q438/q439 this answers the
+    * index-design question directly: does adapting cells to corpus
+    * density buy recall over the data-independent sign planes at equal
+    * candidate cost? trainMod > 1 puts the Lloyd rounds on the q440
+    * md5-sampled slice (32·kCent vectors) — the round-12 fix for this
+    * audit's measured full-corpus-training drift (×13.7 → ×17.9 at 10×
+    * data): the certificate only needs a REPRESENTATIVE codebook, and
+    * only the one home-assignment sweep plus the declared-quadratic
+    * sampled exact side still read the whole corpus.
+    */
+  def ivfRecallAudit(df: DataFrame, idCol: String, embCol: String,
+                     k: Int, kCent: Int, sampleMod: Int = 20,
+                     rounds: Int = 2, trainMod: Int = 1): DataFrame =
+    ivfRecallAuditSharded(df, idCol, embCol, k, kCent, 0, sampleMod,
+      rounds, trainMod).drop("shard_bits")
 
   /** Recall-per-CANDIDATE audit (q450) — the index-design question
     * q438 vs q444 left open, answered on equal terms: do
@@ -2502,28 +2285,27 @@ object SimilarityOps {
     val bits = adaptiveSignBits(dev)
     // The sign-bucket side (signature, sample, shared exact ground
     // truth) and the trained-IVF side (Lloyd fit at the SAME cell
-    // count kCent = 2^bits, over the same dev slice) are independent
-    // sub-plan families whose checkpoints/collects block the driver —
-    // build them concurrently (guide §2.6, the ivfDialSweep pattern;
-    // both sides are deterministic pure functions of dev).
+    // count kCent = 2^bits in one shard, over the same dev slice) are
+    // independent sub-plan families whose checkpoints/collects block
+    // the driver — build them concurrently (guide §2.6, the
+    // ivfDialSweep pattern; both sides are deterministic pure functions
+    // of dev).
     var signSide: (DataFrame, DataFrame, DataFrame) = null
     var ivfCand: DataFrame = null
-    runConcurrently(Seq(
+    Concurrent.construct(Seq(
       () => {
         val n = normalized(dev, idCol, embCol)
           .withColumn("bucket", signBucket(bits))
           .localCheckpoint(false)
         val qs = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
-        val exact = selectTopK(pairSim(qs, n), k)
-          .select(col("vec_id"), col("neighbor_id"), lit(1L).as("__e"))
-          .localCheckpoint(false)
+        val exact = exactMarks(qs, n, k).localCheckpoint(false)
         signSide = (qs, exact, signProbeCands(qs, n, bits))
         exact
       },
       () => {
-        val (e, _, cFinal, _) = ivfFit(dev, idCol, embCol, 1 << bits, 2)
+        val (e, cFinal) = ivfShardedFit(dev, idCol, embCol, 1 << bits, 2, 0)
         val qi = e.filter(pmod(col("id"), lit(sampleMod)) === 0)
-        ivfCand = ivfProbeCands(qi, e, cFinal)
+        ivfCand = ivfShardedProbeCands(qi, e, cFinal, 3)
         ivfCand
       }))
     val (qs, exact, signCand) = signSide
@@ -2534,14 +2316,7 @@ object SimilarityOps {
     // each pair into every level that reaches it (sequence(lvl, max)).
     def hits(cand: DataFrame, lvlCol: String, lvls: Seq[Int],
              method: String): DataFrame =
-      lvls.map { lvl =>
-        selectTopK(cand.filter(col(lvlCol) <= lvl)
-            .select(col("vec_id"), col("neighbor_id"), col("sim")), k)
-          .withColumn("setting", lit(lvl.toLong))
-      }.reduce(_ unionAll _)
-        .join(exact, Seq("vec_id", "neighbor_id"), "left")
-        .groupBy(col("setting"))
-        .agg(count(col("__e")).as("n_hits"))
+      levelHits(cand, lvlCol, lvls, "setting", exact, k)
         .withColumn("method", lit(method))
     def cands(cand: DataFrame, lvlCol: String, maxLvl: Int,
               method: String): DataFrame =
@@ -2573,8 +2348,7 @@ object SimilarityOps {
         expr("CAST((coalesce(n_candidates, 0) * 2 + __nq) " +
           "div (2 * __nq) AS BIGINT)").as("cand_per_query"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        expr(s"CAST((coalesce(n_hits, 0) * 2000000 + $k * __nq) " +
-          s"div (2 * $k * __nq) AS BIGINT)").as("recall_ppm"))
+        recallPpm(k, "coalesce(n_hits, 0)"))
       .orderBy(col("method"), col("setting"))
   }
 
@@ -2589,14 +2363,7 @@ object SimilarityOps {
                        kc: Int): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
-    val hits = lvls.map { lvl =>
-      selectTopK(cand.filter(col("pr") <= lvl)
-          .select(col("vec_id"), col("neighbor_id"), col("sim")), k)
-        .withColumn("nprobe", lit(lvl.toLong))
-    }.reduce(_ unionAll _)
-      .join(exact, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy(col("nprobe"))
-      .agg(count(col("__e")).as("n_hits"))
+    val hits = levelHits(cand, "pr", lvls, "nprobe", exact, k)
     // candidate counts: one pass — each pair explodes into every
     // swept level that reaches it (pr ≤ level), then a per-level count
     val lvlArr = lvls.map(l => s"${l}L").mkString("array(", ", ", ")")
@@ -2641,9 +2408,7 @@ object SimilarityOps {
     // shared exact ground truth (the declared-quadratic sampled side)
     val nn = normalized(df, idCol, embCol).localCheckpoint(false)
     val qn = nn.filter(pmod(col("id"), lit(sampleMod)) === 0)
-    val exact = selectTopK(pairSim(qn, nn), k)
-      .select(col("vec_id"), col("neighbor_id"), lit(1L).as("__e"))
-      .localCheckpoint(false)
+    val exact = exactMarks(qn, nn, k).localCheckpoint(false)
     val nq = qn.agg(count(lit(1)).as("__nq"))
     // The flat reference and every (shardBits, kcPerShard) dial train
     // and checkpoint INDEPENDENT sub-plans, but each one's Lloyd
@@ -2653,37 +2418,31 @@ object SimilarityOps {
     // (guide §2.6 overlap independent jobs): results are unchanged
     // (each dial is a deterministic pure function of df and its dials;
     // the union order below is fixed by the task list, and the output
-    // is orderBy'd anyway). One shardQuantized scan per shard level,
-    // one trained codebook per (shardBits, kcPerShard), as before.
-    val shardLevels = shardBitsList.map { sb =>
-      val es = shardQuantized(df, idCol, embCol, sb)
-      (sb, es, es.filter(pmod(col("id"), lit(sampleMod)) === 0))
+    // is orderBy'd anyway). One shardQuantized scan per shard level
+    // (the flat reference is level 0), one trained codebook per
+    // (shardBits, kcPerShard).
+    def dial(layout: String, sb: Int, es: DataFrame, kc: Int,
+             trainMod: Int, lvls: Seq[Int]): () => DataFrame = () => {
+      val cs = ivfShardedFitOn(trainSlice(es, trainMod), kc, 2).last
+      val qs = es.filter(pmod(col("id"), lit(sampleMod)) === 0)
+      dialRows(ivfShardedProbeCands(qs, es, cs, lvls.max), exact, k, lvls,
+        layout, sb, kc)
     }
-    val flatTask: () => DataFrame = () => {
-      val (ef, _, cf, _) = ivfFit(df, idCol, embCol, flatKc, 2,
-        flatTrainMod)
-      val qf = ef.filter(pmod(col("id"), lit(sampleMod)) === 0)
-      dialRows(ivfProbeCands(qf, ef, cf, 3),
-        exact, k, Seq(1, 2, 3), "flat", 0, flatKc)
-    }
-    val shardTasks: Seq[() => DataFrame] = for {
-      (sb, es, qsAll) <- shardLevels
+    val flatTask = dial("flat", 0, shardQuantized(df, idCol, embCol, 0),
+      flatKc, flatTrainMod, Seq(1, 2, 3))
+    val shardTasks = for {
+      sb <- shardBitsList
+      es = shardQuantized(df, idCol, embCol, sb)
       kc <- kcs
-    } yield { () =>
-      val cs = ivfShardedFitOn(es, kc, 2)
-      val cand = ivfShardedProbeCands(qsAll, es, cs, nprobes.max)
-      dialRows(cand, exact, k, nprobes, "sharded", sb, kc)
-    }
-    runConcurrently(flatTask +: shardTasks).reduce(_ unionAll _)
+    } yield dial("sharded", sb, es, kc, 1, nprobes)
+    Concurrent.construct(flatTask +: shardTasks).reduce(_ unionAll _)
       .crossJoin(broadcast(nq))
       .select(col("layout"), col("shard_bits"), col("kc"),
         col("nprobe"), col("__nq").as("n_queries"),
         col("n_candidates"),
         expr("CAST((n_candidates * 2 + __nq) div (2 * __nq) " +
           "AS BIGINT)").as("cand_per_query"),
-        col("n_hits"),
-        expr(s"CAST((n_hits * 2000000 + $k * __nq) " +
-          s"div (2 * $k * __nq) AS BIGINT)").as("recall_ppm"))
+        col("n_hits"), recallPpm(k, "n_hits"))
       .orderBy(col("layout"), col("shard_bits"), col("kc"),
         col("nprobe"))
   }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable streaming pipeline over the real events parquet: file
@@ -18,13 +17,7 @@ object StreamPipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

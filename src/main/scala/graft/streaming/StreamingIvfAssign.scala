@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.SimilarityOps
+
 /** Streaming twin of the trained-IVF assignment
   * ([[graft.operators.SimilarityOps]] q440/q441): route a vector
   * STREAM to the cells of a FROZEN codebook trained batch-side.
@@ -64,18 +66,15 @@ object StreamingIvfAssign {
   private def scored(c: Column): Column =
     when(col("__best.cid") =!= lit(Long.MaxValue), c)
 
-  /** Assign each streamed vector against the FLAT frozen codebook:
-    * output (idCol, cid, dist2); cid/dist2 are NULL for malformed
-    * vectors (see object doc).
+  /** Assign each streamed vector against the FLAT frozen codebook —
+    * [[assignSharded]] with every cell in shard 0: output (idCol, cid,
+    * dist2); cid/dist2 are NULL for malformed vectors (see object doc).
     */
   def assign(stream: DataFrame, idCol: String, embCol: String,
              codebook: Seq[(Long, Seq[Long])]): DataFrame = {
     require(codebook.nonEmpty, "cannot assign against an empty codebook")
-    stream
-      .withColumn("__q", quantized(embCol))
-      .withColumn("__best", bestCell(typedLit(codebook)))
-      .select(col(idCol), scored(col("__best.cid")).as("cid"),
-        scored(col("__best.d")).as("dist2"))
+    assignSharded(stream, idCol, embCol, Map(0 -> codebook), shardBits = 0)
+      .drop("shard")
   }
 
   /** Assign each streamed vector against the SHARDED frozen codebook
@@ -93,12 +92,9 @@ object StreamingIvfAssign {
                     codebooks: Map[Int, Seq[(Long, Seq[Long])]],
                     shardBits: Int): DataFrame = {
     require(codebooks.nonEmpty, "cannot assign against an empty codebook")
-    val shard = (0 until shardBits)
-      .map(j => expr(s"CAST($embCol[$j] > 0 AS INT) * ${1 << j}"))
-      .reduce(_ + _)
     stream
       .withColumn("__q", quantized(embCol))
-      .withColumn("shard", shard)
+      .withColumn("shard", SimilarityOps.signBucket(shardBits, embCol))
       .withColumn("__best", bestCell(
         element_at(typedLit(codebooks), col("shard"))))
       .select(col(idCol), col("shard"),

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
 
@@ -39,10 +40,10 @@ class IvfSpec extends SparkSpec {
       (6L, 3L, 1000000L, 200000L)))
   }
 
-  test("ivfAnnTopK: nprobe covering every trained cell equals the " +
-    "exact cosine baseline") {
-    val ann = SimilarityOps.ivfAnnTopK(df, "vec_id", "embedding",
-        k = 2, kCent = 2, nprobe = 2)
+  test("flat IVF (shardBits = 0): probing every trained cell equals " +
+    "exact top-k") {
+    val ann = SimilarityOps.ivfAnnTopKSharded(df, "vec_id", "embedding",
+        k = 2, kcPerShard = 2, nprobe = 2, shardBits = 0)
       .orderBy("vec_id", "neighbor_id").collect().toSeq
     val exact = SimilarityOps.cosineTopK(df, "vec_id", "embedding", 2)
       .orderBy("vec_id", "neighbor_id").collect().toSeq
@@ -118,6 +119,32 @@ class IvfSpec extends SparkSpec {
     assert(rows.length == 2500)
     assert(rows.map(r => r._1 * 1000003L + r._2).sum == 623752489331L)
     assert(rows.map(r => math.round(r._3 * 1e6)).sum == 545449788L)
+  }
+
+  test("ivfServeBatchPruned: pruned cell reads equal ivfServeSharded " +
+    "on one frozen index") {
+    // 240 seeded 8-dim vectors: 2 shards x 4 cells, every request
+    // probes 2 of its shard's cells
+    val rnd = new scala.util.Random(7)
+    val corpus = (1L to 240L).map(i =>
+      i -> Seq.fill(8)((rnd.nextGaussian() * 0.5).toFloat))
+      .toDF("vec_id", "embedding")
+    val (kc, rounds, sb, nprobe, k, queryMod) = (4, 2, 1, 2, 3, 3)
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "ivf-serve").resolve("index")
+    val cb = SimilarityOps.ivfServeIndexWrite(corpus, "vec_id",
+      "embedding", kc, rounds, sb, dir.toString)
+    val requests = corpus.filter(pmod(conv(substring(
+      md5(col("vec_id").cast("string")), 1, 8), 16, 10).cast("long"),
+      lit(queryMod)) === 0)
+    def rows(d: DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val pruned = rows(SimilarityOps.ivfServeBatchPruned(requests,
+      "vec_id", "embedding", spark.read.parquet(dir.toString), cb, sb,
+      nprobe, k))
+    val served = rows(SimilarityOps.ivfServeSharded(corpus, "vec_id",
+      "embedding", k, kc, nprobe, rounds, sb, queryMod))
+    assert(served.nonEmpty && pruned == served)
   }
 
   test("ivfTrain: kCent larger than the corpus keeps every vector a " +

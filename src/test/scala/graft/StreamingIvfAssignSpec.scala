@@ -24,7 +24,8 @@ class StreamingIvfAssignSpec extends SparkSpec {
     val df = vecs.toDF("vec_id", "embedding")
     // the IvfSpec fixture's converged round-2 codebook, collected the
     // way a serving layer would freeze it
-    val codebook = SimilarityOps.ivfCodebook(df, "vec_id", "embedding", 2)
+    val codebook = SimilarityOps.ivfShardedCodebook(df, "vec_id",
+        "embedding", 2, shardBits = 0)
       .collect()
       .map(r => r.getAs[Long]("cid") ->
         r.getAs[scala.collection.Seq[Long]]("cemb").toSeq).toSeq
@@ -63,7 +64,8 @@ class StreamingIvfAssignSpec extends SparkSpec {
   test("assign: a wrong-dimension or null-element vector emits NULL " +
     "cid/dist2, never a phantom Long.MaxValue cell") {
     val df = vecs.toDF("vec_id", "embedding")
-    val codebook = SimilarityOps.ivfCodebook(df, "vec_id", "embedding", 2)
+    val codebook = SimilarityOps.ivfShardedCodebook(df, "vec_id",
+        "embedding", 2, shardBits = 0)
       .collect()
       .map(r => r.getAs[Long]("cid") ->
         r.getAs[scala.collection.Seq[Long]]("cemb").toSeq).toSeq
