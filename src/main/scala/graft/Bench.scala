@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver bench contract: time every SparkEntry query on
   * $SPARK_GRAFT_SF_DIR, print one JSON line.
@@ -15,6 +15,25 @@ import org.apache.spark.sql.SparkSession
   *    per-query numbers measure the queries, not the JVM.
   */
 object Bench {
+  /** Materialize through the noop sink: every output column is computed
+    * and serialized (a bare .count() lets Catalyst prune final
+    * projections — e.g. round(sim, 6) — and under-reports).
+    */
+  def drain(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Untimed warmup: exercise codegen + file listing on a cheap query.
+    * A failure is logged to stderr, never swallowed.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    try {
+      SparkEntry.queries.get("q03_group_count")
+        .foreach(f => drain(f(spark, sfDir)))
+      spark.range(1000000L).selectExpr("sum(id)").collect()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -26,20 +45,7 @@ object Bench {
         .config("spark.sql.files.maxPartitionBytes", "8m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // Materialize through the noop sink: every output column is computed
-    // and serialized (a bare .count() lets Catalyst prune final
-    // projections — e.g. round(sim, 6) — and under-reports).
-    def drain(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // Untimed warmup: exercise codegen + file listing on a cheap query.
-    try {
-      SparkEntry.queries.get("q03_group_count").foreach(f => drain(f(spark, sfDir)))
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
-    }
+    warmup(spark, sfDir)
 
     // min of 2 runs per query: measures the query, not GC/OS jitter
     // (single-run noise on a shared host is ±30%). A failed run records
@@ -54,7 +60,7 @@ object Bench {
       case None => SparkEntry.queries
     }
     def timeOnce(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+                 fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       try { drain(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
@@ -132,7 +138,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("target", "bench_detail.json"),
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$detail,"retimed":$retimedJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] bench_detail.json write failed: ${e.getMessage}")
+    }
 
     // The stdout contract line MUST stay short: the harness keeps only the
     // last ~2000 chars of stdout (plus sbt's [success] footer) and parses

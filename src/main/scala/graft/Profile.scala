@@ -24,13 +24,7 @@ object Profile {
         .config("spark.sql.files.maxPartitionBytes", "8m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def drain(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // warmup (same as Bench)
-    try {
-      SparkEntry.queries.get("q03_group_count").foreach(f => drain(f(spark, dir)))
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-    } catch { case _: Throwable => () }
+    Bench.warmup(spark, dir)
 
     // parquet metadata cost: fresh read (listing + footer) per call
     val tnames = Seq("lineitem", "orders", "events", "documents",
@@ -76,7 +70,7 @@ object Profile {
         val j1 = jobs.get()
         df.queryExecution.executedPlan // optimize + initial physical plan
         val t2 = System.nanoTime()
-        drain(df)
+        Bench.drain(df)
         val t3 = System.nanoTime()
         val j2 = jobs.get()
         spark.catalog.clearCache()

@@ -21,13 +21,13 @@ object ScaleDial {
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables.embeddings(spark, sfDir)
     // warmup (codegen + file listing)
-    SimilarityOps.mutualKnnBucketed(emb.limit(200), "vec_id",
-      "embedding", 5, 4).write.format("noop").mode("overwrite").save()
+    Bench.drain(SimilarityOps.mutualKnnBucketed(emb.limit(200), "vec_id",
+      "embedding", 5, 4))
     val out = bits.map { b =>
       val t0 = System.nanoTime()
       val df = SimilarityOps.mutualKnnBucketed(emb, "vec_id",
         "embedding", 5, b)
-      df.write.format("noop").mode("overwrite").save()
+      Bench.drain(df)
       val secs = (System.nanoTime() - t0) / 1e9
       val pairs = df.count()
       (b, secs, pairs)

@@ -107,7 +107,10 @@ object ServeBench {
         java.nio.file.Paths.get("target", "serve_bench_detail.json"),
         s"""{"sf":"$sfDir","corpus":$n,"n_cells":$nCells,"batch_ms":$detail}"""
           .getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(
+        s"[serve] serve_bench_detail.json write failed: ${e.getMessage}")
+    }
     println(f"""{"metric":"serve_batch_p50_ms","value":$p50%.1f,"p99_ms":$p99%.1f,""" +
       f""""per_request_p50_ms":${p50 / batchSize}%.2f,""" +
       s""""batch_size":$batchSize,"n_batches":${times.length},""" +

@@ -66,8 +66,7 @@ object ShuffleProbe {
     names.foreach { name =>
       bytes.set(0L); records.set(0L)
       val t0 = System.nanoTime()
-      targets(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Bench.drain(targets(name)(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       // listener events drain asynchronously (the bus is private[spark],

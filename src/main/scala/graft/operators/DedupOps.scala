@@ -1583,6 +1583,58 @@ object DedupOps {
         max(col("__sz")).as("max_cluster"))
   }
 
+  /** Position-indexed n-gram fingerprints of the split-token array
+    * column `t`: one (`pos`, `s`) row per gram start, where `s` is the
+    * 16-byte `unhex(md5(gram))` digest (see [[dupSubstringCensus]] for
+    * why the shuffle key is the digest, not the gram text). Select it
+    * from rows with at least `n` tokens.
+    */
+  private def gramPositions(n: Int): Column = {
+    val grams = (0 until n).map(j => s"t[i + $j]").mkString(", ")
+    posexplode(expr(s"transform(sequence(0, size(t) - $n), " +
+      s"i -> unhex(md5(concat_ws(' ', $grams))))")).as(Seq("pos", "s"))
+  }
+
+  /** The corpus-global FIRST occurrence of every duplicated gram of
+    * `pos` (an (`idCol`, `pos`, `s`) table): min(struct(doc, pos)) per
+    * gram, a deterministic canonical keeper both engines agree on.
+    * Output: (`s`, `__kid`, `__kpos`) for grams occurring ≥ 2 times;
+    * linear in occurrences, never pairwise.
+    */
+  private def firstKeeper(pos: DataFrame, idCol: String): DataFrame =
+    pos.groupBy(col("s"))
+      .agg(min(struct(col(idCol), col("pos"))).as("__k"),
+        count(lit(1)).as("__c"))
+      .filter(col("__c") >= 2)
+      .select(col("s"), col(s"__k.$idCol").as("__kid"),
+        col("__k.pos").as("__kpos"))
+
+  /** True on an occurrence joined to its [[firstKeeper]] row that is
+    * not the keeper itself — a redundant copy.
+    */
+  private def notKeeper(idCol: String): Column =
+    col(idCol) =!= col("__kid") || col("pos") =!= col("__kpos")
+
+  /** Overlap-aware gaps-and-islands over per-doc gram positions:
+    * positions whose n-token intervals OVERLAP (gap ≤ n − 1) merge into
+    * one span — the plain pos − row_number trick would count
+    * overlapping interval tails twice and overshoot the doc length.
+    * Output per (`idCol`, `__isl`) span: `__r` positions and `__cov`,
+    * the exact token count of the interval union.
+    */
+  private def gramIslands(positions: DataFrame, idCol: String,
+                          n: Int): DataFrame = {
+    val wDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
+    positions
+      .withColumn("__new", when(coalesce(col("pos") -
+        lag(col("pos"), 1).over(wDoc), lit(n)) > n - 1, 1L).otherwise(0L))
+      .withColumn("__isl", sum(col("__new")).over(
+        wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy(col(idCol), col("__isl"))
+      .agg(count(lit(1)).as("__r"),
+        (max(col("pos")) - min(col("pos")) + n).as("__cov"))
+  }
+
   /** Corpus-INTERNAL duplicated-substring census — the exact-substring
     * dedup signal of Lee et al. 2022 ("Deduplicating Training Data
     * Makes Language Models Better"), re-expressed relationally: an
@@ -1612,29 +1664,15 @@ object DedupOps {
     */
   def dupSubstringCensus(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3): DataFrame = {
-    val grams = (0 until n).map(j => s"t[i + $j]").mkString(", ")
     val base = df.withColumn("t", split(col(textCol), " "))
       .select(col(idCol), size(col("t")).as("n_tokens"), col("t"))
       .localCheckpoint(false)
     val pos = base.filter(col("n_tokens") >= n)
-      .select(col(idCol), posexplode(expr(
-        s"transform(sequence(0, size(t) - $n), " +
-          s"i -> unhex(md5(concat_ws(' ', $grams))))")).as(Seq("pos", "s")))
+      .select(col(idCol), gramPositions(n))
       .localCheckpoint(false)
     val dup = pos.groupBy(col("s")).agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= 2).select("s")
-    // islands merge positions whose n-token intervals OVERLAP
-    // (gap ≤ n − 1) — the plain pos − row_number trick would count
-    // overlapping interval tails twice and overshoot the doc length.
-    val wDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-    val spans = pos.join(dup, Seq("s"), "left_semi")
-      .withColumn("__new", when(coalesce(col("pos") -
-        lag(col("pos"), 1).over(wDoc), lit(n)) > n - 1, 1L).otherwise(0L))
-      .withColumn("__isl", sum(col("__new")).over(
-        wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col(idCol), col("__isl"))
-      .agg(count(lit(1)).as("__r"),
-        (max(col("pos")) - min(col("pos")) + n).as("__cov"))
+    val spans = gramIslands(pos.join(dup, Seq("s"), "left_semi"), idCol, n)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_spans"), max(col("__r")).as("longest_run"),
         sum(col("__cov")).as("dup_tokens"))
@@ -1669,36 +1707,17 @@ object DedupOps {
     */
   def dupSubstringExcise(df: DataFrame, idCol: String, textCol: String,
                          srcCol: String, n: Int = 3): DataFrame = {
-    val grams = (0 until n).map(j => s"t[i + $j]").mkString(", ")
     val base = df.withColumn("t", split(col(textCol), " "))
       .select(col(idCol), col(srcCol).as("source"),
         size(col("t")).as("n_tokens"), col("t"))
       .localCheckpoint(false)
     val pos = base.filter(col("n_tokens") >= n)
-      .select(col(idCol), posexplode(expr(
-        s"transform(sequence(0, size(t) - $n), " +
-          s"i -> unhex(md5(concat_ws(' ', $grams))))")).as(Seq("pos", "s")))
+      .select(col(idCol), gramPositions(n))
       .localCheckpoint(false)
-    val keeper = pos.groupBy(col("s"))
-      .agg(min(struct(col(idCol), col("pos"))).as("__k"),
-        count(lit(1)).as("__c"))
-      .filter(col("__c") >= 2)
-      .select(col("s"), col(s"__k.$idCol").as("__kid"),
-        col("__k.pos").as("__kpos"))
-    val redundant = pos.join(keeper, Seq("s"))
-      .filter(col(idCol) =!= col("__kid") || col("pos") =!= col("__kpos"))
+    val redundant = pos.join(firstKeeper(pos, idCol), Seq("s"))
+      .filter(notKeeper(idCol))
       .select(col(idCol), col("pos"))
-    // same overlap-aware islands as [[dupSubstringCensus]]: merge
-    // redundant positions whose n-token intervals overlap so the
-    // excised-token count is the exact interval-union size.
-    val wDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-    val excised = redundant
-      .withColumn("__new", when(coalesce(col("pos") -
-        lag(col("pos"), 1).over(wDoc), lit(n)) > n - 1, 1L).otherwise(0L))
-      .withColumn("__isl", sum(col("__new")).over(
-        wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col(idCol), col("__isl"))
-      .agg((max(col("pos")) - min(col("pos")) + n).as("__cov"))
+    val excised = gramIslands(redundant, idCol, n)
       .groupBy(col(idCol))
       .agg(sum(col("__cov")).as("__exc"))
     base.select(col(idCol), col("source"), col("n_tokens"))
@@ -1734,26 +1753,18 @@ object DedupOps {
   def dupSubstringProvenance(df: DataFrame, idCol: String,
                              textCol: String, srcCol: String,
                              n: Int = 3): DataFrame = {
-    val grams = (0 until n).map(j => s"t[i + $j]").mkString(", ")
     val pos = df.withColumn("t", split(col(textCol), " "))
       .filter(size(col("t")) >= n)
-      .select(col(idCol), col(srcCol).as("__src"), posexplode(expr(
-        s"transform(sequence(0, size(t) - $n), " +
-          s"i -> unhex(md5(concat_ws(' ', $grams))))")).as(Seq("pos", "s")))
+      .select(col(idCol), col(srcCol).as("__src"), gramPositions(n))
       .localCheckpoint(false)
-    val keeper = pos.groupBy(col("s"))
-      .agg(min(struct(col(idCol), col("pos"))).as("__k"),
-        count(lit(1)).as("__c"))
-      .filter(col("__c") >= 2)
-      .select(col("s"), col(s"__k.$idCol").as("__kid"),
-        col("__k.pos").as("__kpos"))
+    val keeper = firstKeeper(pos, idCol)
       // re-attach the keeper's source via an id-keyed join with the
       // (small) distinct doc->source table, not by dragging source
       // through the min(struct) (struct order must stay (doc, pos))
       .join(df.select(col(idCol).as("__kid"),
         col(srcCol).as("src_from")).distinct(), Seq("__kid"))
     pos.join(keeper, Seq("s"))
-      .filter(col(idCol) =!= col("__kid") || col("pos") =!= col("__kpos"))
+      .filter(notKeeper(idCol))
       .groupBy(col("src_from"), col("__src").as("src_to"))
       .agg(count(lit(1)).as("n_occurrences"),
         count_distinct(col("s")).as("n_grams"))
@@ -1787,11 +1798,8 @@ object DedupOps {
     val total = base.agg(sum(col("n_tokens").cast("long"))
       .as("tokens_total"))
     val rungs = ns.map { n =>
-      val grams = (0 until n).map(j => s"t[i + $j]").mkString(", ")
       val pos = base.filter(col("n_tokens") >= n)
-        .select(col(idCol), posexplode(expr(
-          s"transform(sequence(0, size(t) - $n), " +
-            s"i -> unhex(md5(concat_ws(' ', $grams))))")).as(Seq("pos", "s")))
+        .select(col(idCol), gramPositions(n))
         .localCheckpoint(false)
       // NOT checkpointed by choice (r14 A/B): materializing keeper and
       // red to avoid their double evaluation (keeper feeds the join +
@@ -1799,25 +1807,11 @@ object DedupOps {
       // REGRESSED the rung 4.1 → 6.6 s at sf0.1 — the per-checkpoint
       // AQE stage-materialization jobs and block writes cost more than
       // the saved re-aggregation from the pos checkpoint.
-      val keeper = pos.groupBy(col("s"))
-        .agg(min(struct(col(idCol), col("pos"))).as("__k"),
-          count(lit(1)).as("__c"))
-        .filter(col("__c") >= 2)
-        .select(col("s"), col(s"__k.$idCol").as("__kid"),
-          col("__k.pos").as("__kpos"))
+      val keeper = firstKeeper(pos, idCol)
       val red = pos.join(keeper, Seq("s"))
-        .filter(col(idCol) =!= col("__kid") ||
-          col("pos") =!= col("__kpos"))
+        .filter(notKeeper(idCol))
         .select(col(idCol), col("pos"))
-      val wDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-      val exc = red
-        .withColumn("__new", when(coalesce(col("pos") -
-          lag(col("pos"), 1).over(wDoc), lit(n)) > n - 1, 1L)
-          .otherwise(0L))
-        .withColumn("__isl", sum(col("__new")).over(
-          wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col(idCol), col("__isl"))
-        .agg((max(col("pos")) - min(col("pos")) + n).as("__cov"))
+      val exc = gramIslands(red, idCol, n)
       keeper.agg(count(lit(1)).as("n_dup_grams"))
         .crossJoin(red.agg(count_distinct(col(idCol))
           .as("docs_affected")))
@@ -1848,12 +1842,9 @@ object DedupOps {
     */
   def gramMultiplicitySpectrum(df: DataFrame, idCol: String,
                                textCol: String, n: Int = 5): DataFrame = {
-    val grams = (0 until n).map(j => s"t[i + $j]").mkString(", ")
     df.withColumn("t", split(col(textCol), " "))
       .filter(size(col("t")) >= n)
-      .select(col(idCol), posexplode(expr(
-        s"transform(sequence(0, size(t) - $n), " +
-          s"i -> unhex(md5(concat_ws(' ', $grams))))")).as(Seq("pos", "s")))
+      .select(col(idCol), gramPositions(n))
       .groupBy(col("s")).agg(count(lit(1)).as("__c"))
       .withColumn("octave", (length(bin(col("__c"))) - 1).cast("int"))
       .groupBy(col("octave"))

@@ -103,6 +103,149 @@ object MetricOps {
       .drop(valCols.flatMap(c => Seq(s"__in_$c", s"__pb_$c")): _*)
   }
 
+  /** Risk table of a right-censored cohort — the shared core of
+    * [[kaplanMeier]], [[kaplanMeierCi]], [[rmst]] and [[nelsonAalen]].
+    * Input is one row per subject (`durCol` integer time bucket,
+    * `eventCol` 1 event / 0 censored); output is one row per distinct
+    * duration `t` with events `d`, censorings `c` and the risk set
+    * `n_risk` = N − (subjects gone before t). It computes on the
+    * DURATION HISTOGRAM (calendar-bounded, never subject-count sized)
+    * with one [[rangeCumSum]].
+    */
+  private[operators] def riskTable(df: DataFrame, durCol: String,
+                                   eventCol: String): DataFrame = {
+    val hist = df.groupBy(col(durCol).cast("long").as("t"))
+      .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("d"),
+        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("c"))
+      .withColumn("__all", col("d") + col("c"))
+    val tot = hist.agg(sum(col("__all")).as("__N"))
+    rangeCumSum(hist, "t", Seq("__all")).crossJoin(broadcast(tot))
+      .withColumn("n_risk", col("__N") - (col("__cum___all") - col("__all")))
+      .select(col("t"), col("d"), col("c"), col("n_risk"))
+  }
+
+  /** Product-limit factors of a [[riskTable]] row: `__lnf` = ln(1 − d/n)
+    * snapped to 12 dp as DECIMAL(28,14), so its cumulative sum is
+    * partition-order-independent (the [[graft.operators.TextOps.zipfFit]]
+    * moment discipline), and `__zero` = 1 on a saturated step (d = n).
+    * A saturated step would make ln(0) = −∞ poison the decimal sum, so
+    * its factor is 0 and the zero-crossing rides `__zero` instead.
+    */
+  private[operators] def productLimitFactors(risk: DataFrame): DataFrame =
+    risk.withColumn("__lnf", when(col("d") > 0 && col("d") < col("n_risk"),
+        round(log(lit(1.0) - col("d") / col("n_risk")), 12))
+      .otherwise(lit(0.0)).cast("decimal(28,14)"))
+      .withColumn("__zero", when(col("d") === col("n_risk"), 1L)
+        .otherwise(0L))
+
+  /** Ŝ from cumulated [[productLimitFactors]]: exp(Σ ln factors), or
+    * exact 0 once any step has saturated.
+    */
+  private[operators] def plSurvival(cumLnf: Column, cumZero: Column): Column =
+    when(cumZero > 0, lit(0.0)).otherwise(exp(cumLnf.cast("double")))
+
+  /** Two-sample value histogram — the shared core of the two-sample
+    * family ([[wasserstein1D]], [[mannWhitney]], [[effectSizes]],
+    * [[energyDistance]], [[cvmTwoSample]], [[andersonDarlingTwoSample]],
+    * [[hellingerDrift]], [[kuiperTwoSample]]). Keeps the rows of
+    * `sideA` and `sideB`, groups them by the caller's quantized value
+    * `v` (bounded vocabulary, the [[globalRank]] discipline) into
+    * `__v`, and counts each side per value into `__na` and `__nb`.
+    */
+  private[operators] def twoSampleHist(df: DataFrame, sideCol: String,
+                                       sideA: Any, sideB: Any,
+                                       v: Column): DataFrame =
+    df.filter(col(sideCol).isin(sideA, sideB))
+      .select(v.as("__v"),
+        when(col(sideCol) === lit(sideA), 1L).otherwise(0L).as("__ia"))
+      .groupBy(col("__v"))
+      .agg(sum(col("__ia")).as("__na"),
+        sum(lit(1L) - col("__ia")).as("__nb"))
+
+  /** Doubled average rank of a tie block of `t` rows that follows
+    * `before` rows: 2·before + t + 1. Integral, so rank sums accumulate
+    * exactly as DECIMAL(38,0).
+    */
+  private[operators] def midrank2(before: Column, t: Column): Column =
+    lit(2) * before + t + 1
+
+  /** Lag-product sums of a bucketed series — the shared core of
+    * [[ljungBox]] and [[pacf]]. Deviations from the per-group mean snap
+    * to 6 dp off exact integer moments; the per-lag products come from
+    * ONE calendar join of the deviation table against itself under an
+    * exploded 1..`maxLag` lag spine (maxLag·|buckets| rows, the
+    * [[crossCorrelation]] shape). The numerator products and the
+    * denominator squares accumulate as 12-dp-snapped exact decimals.
+    * Output: (`__g`, `lag`, `__num`, `__ss`); each caller forms
+    * ρ̂_k = __num/__ss with its own rounding.
+    */
+  private[operators] def lagProducts(series: DataFrame, groupCol: String,
+                                     xCol: String, yCol: String,
+                                     maxLag: Int): DataFrame = {
+    val base = series.select(col(groupCol).as("__g"),
+      col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
+    val mom = base.groupBy("__g").agg(
+      count(lit(1)).as("__n"),
+      sum(col("__y")).cast("decimal(38,0)").as("__sy"))
+    val dev = base.join(broadcast(mom), "__g")
+      .withColumn("__d", round(col("__y").cast("double") -
+        col("__sy").cast("double") / col("__n"), 6))
+      .select(col("__g"), col("__x"), col("__d"))
+      .localCheckpoint(true) // current + lagged + denominator read it
+    val den = dev.groupBy("__g")
+      .agg(sum(round(col("__d") * col("__d"), 12).cast("decimal(38,12)"))
+        .as("__ss"))
+    val spine = series.sparkSession.range(1).select(
+      explode(sequence(lit(1L), lit(maxLag.toLong))).as("lag"))
+    val lagged = dev.select(col("__g"), col("__x").as("__lx"),
+        col("__d").as("__dl"))
+      .crossJoin(broadcast(spine))
+      .withColumn("__x", col("__lx") + col("lag"))
+    dev.join(lagged, Seq("__g", "__x"))
+      .groupBy("__g", "lag")
+      .agg(sum(round(col("__d") * col("__dl"), 12).cast("decimal(38,12)"))
+        .as("__num"))
+      .join(den, "__g")
+  }
+
+  /** Complete blocks of a (block, treatment, value) table — the shared
+    * filter of [[friedman]], [[pageTrend]] and [[kendallW]]. Output
+    * columns are `__b`, `__t` (the caller's `treat` column) and `__v`
+    * (the value at 4 dp). A block is complete when it holds every
+    * treatment EXACTLY once: its distinct treatment count AND its row
+    * count both equal k. A row count alone lets a block with a
+    * duplicate treatment plus a missing one slip through. The
+    * collect_set over the block window is bounded by the k-treatment
+    * vocabulary, never by row count.
+    */
+  private[operators] def completeBlocks(df: DataFrame, blockCol: String,
+                                        treat: Column,
+                                        valCol: String): DataFrame = {
+    val base = df.select(col(blockCol).as("__b"), treat.as("__t"),
+      round(col(valCol).cast("double"), 4).as("__v"))
+    val k = base.agg(countDistinct(col("__t")).as("__k"))
+    base
+      .withColumn("__bn", count(lit(1))
+        .over(Window.partitionBy(col("__b"))))
+      .withColumn("__bd", size(collect_set(col("__t"))
+        .over(Window.partitionBy(col("__b")))))
+      .crossJoin(broadcast(k))
+      .filter(col("__bn") === col("__k") && col("__bd") === col("__k"))
+  }
+
+  /** Within-block ranks of [[completeBlocks]] rows as `__r2`, the
+    * DOUBLED tie-averaged rank 2·rank() + ties − 1. The doubling keeps
+    * the .5 granularity integral. Every window is bounded by the k rows
+    * of one block.
+    */
+  private[operators] def blockRanks2(complete: DataFrame): DataFrame =
+    complete
+      .withColumn("__rnk",
+        rank().over(Window.partitionBy(col("__b")).orderBy(col("__v"))))
+      .withColumn("__tie", count(lit(1))
+        .over(Window.partitionBy(col("__b"), col("__v"))))
+      .withColumn("__r2", col("__rnk") * 2 + col("__tie") - 1)
+
   /** A9: rank-formula ROC-AUC with deterministic tiebreak — one
     * aggregate over the distributed ranks.
     */
@@ -878,38 +1021,18 @@ object MetricOps {
     * Input is one row per subject: (`durCol` — integer time bucket,
     * `eventCol` — 1 event observed, 0 censored). The curve computes on
     * the DURATION HISTOGRAM (bounded by the calendar, never
-    * subject-count sized): risk sets come from one [[rangeCumSum]]
-    * (n_t = N − all-subjects-gone-before-t), and the product limit
-    * Π(1 − d/n) is a SECOND rangeCumSum of ln factors — each factor
-    * snapped to 12 dp and accumulated as DECIMAL(28,14) so the product
-    * is partition-order-independent (the [[graft.operators.TextOps.zipfFit]]
-    * moment discipline), then one exp at the end. A saturated step
-    * (d = n, survival hits exact 0) would make ln(0) = −∞ poison the
-    * decimal sum, so zero-crossing is tracked as a separate cumulated
-    * indicator and Ŝ is forced to 0 from that step on.
+    * subject-count sized): risk sets come from [[riskTable]], and the
+    * product limit Π(1 − d/n) is a SECOND [[rangeCumSum]] of the
+    * [[productLimitFactors]] ln factors, then one exp at the end; Ŝ is
+    * forced to 0 from a saturated step on.
     */
   def kaplanMeier(df: DataFrame, durCol: String, eventCol: String,
-                  roundTo: Int = 6): DataFrame = {
-    val hist = df.groupBy(col(durCol).cast("long").as("t"))
-      .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("d"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("c"))
-      .withColumn("__all", col("d") + col("c"))
-    val cum = rangeCumSum(hist, "t", Seq("__all"))
-    val tot = hist.agg(sum(col("__all")).as("__N"))
-    val risk = cum.crossJoin(broadcast(tot))
-      .withColumn("n_risk", col("__N") - (col("__cum___all") - col("__all")))
-      .withColumn("__lnf", when(col("d") > 0 && col("d") < col("n_risk"),
-          round(log(lit(1.0) - col("d") / col("n_risk")), 12))
-        .otherwise(lit(0.0)).cast("decimal(28,14)"))
-      .withColumn("__zero", when(col("d") === col("n_risk"), 1L)
-        .otherwise(0L))
-      .select(col("t"), col("d"), col("c"), col("n_risk"),
-        col("__lnf"), col("__zero"))
-    rangeCumSum(risk, "t", Seq("__lnf", "__zero"))
-      .withColumn("survival", when(col("__cum___zero") > 0, lit(0.0))
-        .otherwise(round(exp(col("__cum___lnf").cast("double")), roundTo)))
-      .select(col("t"), col("n_risk"), col("d"), col("c"), col("survival"))
-  }
+                  roundTo: Int = 6): DataFrame =
+    rangeCumSum(productLimitFactors(riskTable(df, durCol, eventCol)),
+        "t", Seq("__lnf", "__zero"))
+      .select(col("t"), col("n_risk"), col("d"), col("c"),
+        round(plSurvival(col("__cum___lnf"), col("__cum___zero")), roundTo)
+          .as("survival"))
 
   /** Two-group log-rank test — the inferential companion to
     * [[kaplanMeier]]: are the two sides' survival curves the same?
@@ -1106,11 +1229,8 @@ object MetricOps {
     */
   def wasserstein1D(df: DataFrame, valueCol: String, sideCol: String,
                     sideA: Any, sideB: Any, roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .withColumn("__v", round(col(valueCol).cast("double"), 4))
-      .groupBy(col("__v"))
-      .agg(sum(when(col(sideCol) === sideA, 1L).otherwise(0L)).as("__na"),
-        sum(when(col(sideCol) === sideB, 1L).otherwise(0L)).as("__nb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+        round(col(valueCol).cast("double"), 4))
       .withColumn("__one", lit(1L))
     val cum = rangeCumSum(hist, "__v", Seq("__na", "__nb", "__one"))
       .select(col("__v"), col("__cum___na").as("__ca"),
@@ -1192,19 +1312,13 @@ object MetricOps {
     */
   def mannWhitney(df: DataFrame, valueCol: String, sideCol: String,
                   sideA: Any, sideB: Any, roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .withColumn("__v", round(col(valueCol).cast("double"), 4))
-      .groupBy(col("__v"))
-      .agg(sum(when(col(sideCol) === sideA, 1L).otherwise(0L)).as("__na"),
-        sum(when(col(sideCol) === sideB, 1L).otherwise(0L)).as("__nb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+        round(col(valueCol).cast("double"), 4))
       .withColumn("__t", col("__na") + col("__nb"))
     val cum = rangeCumSum(hist, "__v", Seq("__na", "__nb"))
     val s = cum
-      .withColumn("__before",
-        col("__cum___na") + col("__cum___nb") - col("__t"))
-      // doubled average rank of the tie block — integral, so the
-      // rank-sum moment is exact in DECIMAL(38,0)
-      .withColumn("__ar2", lit(2) * col("__before") + col("__t") + 1)
+      .withColumn("__ar2", midrank2(
+        col("__cum___na") + col("__cum___nb") - col("__t"), col("__t")))
       .agg(sum(col("__na").cast("decimal(38,0)") *
           col("__ar2").cast("decimal(38,0)")).as("__ra2"),
         sum(col("__na")).cast("decimal(38,0)").as("__qa"),
@@ -1334,8 +1448,7 @@ object MetricOps {
     val histv = cells.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
     val ranked = rangeCumSum(histv, "__v", Seq("__t"))
       // doubled tie-averaged rank of the block — integral
-      .withColumn("__ar2",
-        lit(2) * (col("__cum___t") - col("__t")) + col("__t") + 1)
+      .withColumn("__ar2", midrank2(col("__cum___t") - col("__t"), col("__t")))
     val grp = cells.join(ranked.select(col("__v"), col("__ar2")), "__v")
       .groupBy(col("__g"))
       .agg(sum(col("__c")).as("__n"),
@@ -1666,8 +1779,7 @@ object MetricOps {
         sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__pos"))
     val cum = rangeCumSum(hist, "__ad", Seq("__t"))
     val s = cum
-      .withColumn("__before", col("__cum___t") - col("__t"))
-      .withColumn("__ar2", lit(2) * col("__before") + col("__t") + 1)
+      .withColumn("__ar2", midrank2(col("__cum___t") - col("__t"), col("__t")))
       .agg(sum(col("__pos").cast("decimal(38,0)") *
           col("__ar2").cast("decimal(38,0)")).as("__wp2"),
         sum(col("__t")).cast("decimal(38,0)").as("__n"),
@@ -1788,11 +1900,8 @@ object MetricOps {
     */
   def effectSizes(df: DataFrame, valueCol: String, sideCol: String,
                   sideA: Any, sideB: Any, roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .withColumn("__v", round(col(valueCol).cast("double"), 4))
-      .groupBy(col("__v"))
-      .agg(sum(when(col(sideCol) === sideA, 1L).otherwise(0L)).as("__na"),
-        sum(when(col(sideCol) === sideB, 1L).otherwise(0L)).as("__nb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+      round(col(valueCol).cast("double"), 4))
     val cum = rangeCumSum(hist, "__v", Seq("__na", "__nb"))
     val totB = hist.agg(sum(col("__nb")).as("__nbt"))
     val vd = cum.crossJoin(broadcast(totB))
@@ -1989,43 +2098,18 @@ object MetricOps {
     * detrending ([[durbinWatson]] asks it for lag 1 only).
     *
     * ρ̂_k uses the conventional ACF estimator (global mean and
-    * variance): deviations snap to 6 dp off exact integer moments,
-    * the per-lag products come from ONE calendar join of the deviation
-    * table against itself under an exploded 1..m lag spine
-    * (m·|buckets| rows, the [[crossCorrelation]] shape), and both the
-    * numerator products and the denominator squares accumulate as
-    * 12-dp-snapped exact decimals. Output: per (group, lag) ρ̂_k with
-    * the shared Q and n repeated (the [[woeIv]] reporting shape).
+    * variance) over the [[lagProducts]] sums. Output: per (group,
+    * lag) ρ̂_k with the shared Q and n repeated (the [[woeIv]]
+    * reporting shape).
     */
   def ljungBox(series: DataFrame, groupCol: String, xCol: String,
                yCol: String, m: Int = 5, roundTo: Int = 6): DataFrame = {
-    val base = series.select(col(groupCol).as("__g"),
-      col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-    val mom = base.groupBy("__g").agg(
-      count(lit(1)).as("__n"),
-      sum(col("__y")).cast("decimal(38,0)").as("__sy"))
-    val dev = base.join(broadcast(mom), "__g")
-      .withColumn("__d", round(col("__y").cast("double") -
-        col("__sy").cast("double") / col("__n"), 6))
-      .select(col("__g"), col("__x"), col("__d"))
-      .localCheckpoint(true) // current + lagged + denominator read it
-    val den = dev.groupBy("__g")
-      .agg(sum(round(col("__d") * col("__d"), 12).cast("decimal(38,12)"))
-        .as("__ss"))
-    val spine = series.sparkSession.range(1).select(
-      explode(sequence(lit(1L), lit(m.toLong))).as("lag"))
-    val lagged = dev.select(col("__g"), col("__x").as("__lx"),
-        col("__d").as("__dl"))
-      .crossJoin(broadcast(spine))
-      .withColumn("__x", col("__lx") + col("lag"))
-    val rho = dev.join(lagged, Seq("__g", "__x"))
-      .groupBy("__g", "lag")
-      .agg(sum(round(col("__d") * col("__dl"), 12).cast("decimal(38,12)"))
-        .as("__num"))
-      .join(den, "__g")
+    val rho = lagProducts(series, groupCol, xCol, yCol, m)
       .withColumn("rho", when(col("__ss") > 0,
         col("__num").cast("double") / col("__ss").cast("double"))
         .otherwise(lit(0.0)))
+    val mom = series.groupBy(col(groupCol).as("__g"))
+      .agg(count(lit(1)).as("__n"))
     val q = rho.join(broadcast(mom), "__g")
       .groupBy(col("__g"))
       .agg(first(col("__n")).as("__nn"),
@@ -2148,28 +2232,8 @@ object MetricOps {
     */
   def friedman(df: DataFrame, blockCol: String, treatCol: String,
                valCol: String, roundTo: Int = 6): DataFrame = {
-    val base = df.select(col(blockCol).as("__b"), col(treatCol).as("__t"),
-      round(col(valCol).cast("double"), 4).as("__v"))
-    val k = base.agg(countDistinct(col("__t")).as("__k"))
-    // complete block = every treatment EXACTLY once: require distinct
-    // treatment count == k as well as row count == k, else a block
-    // with a duplicate treatment + a missing one passes on row count
-    // alone (the kendallW fix, applied to the whole rank family)
-    val complete = base
-      .withColumn("__bn", count(lit(1))
-        .over(Window.partitionBy(col("__b"))))
-      .withColumn("__bd", size(collect_set(col("__t"))
-        .over(Window.partitionBy(col("__b")))))
-      .crossJoin(broadcast(k))
-      .filter(col("__bn") === col("__k") && col("__bd") === col("__k"))
-    val wb = Window.partitionBy(col("__b"))
-    val ranked = complete
-      .withColumn("__rnk", rank().over(wb.orderBy(col("__v"))))
-      .withColumn("__tie", count(lit(1))
-        .over(Window.partitionBy(col("__b"), col("__v"))))
-      // average rank over a tie run: rank() + (ties−1)/2, doubled to
-      // keep integer arithmetic (granularity .5 → decimal scale 1)
-      .withColumn("__r2", col("__rnk") * 2 + col("__tie") - 1)
+    val ranked = blockRanks2(
+      completeBlocks(df, blockCol, col(treatCol), valCol))
     val perTreat = ranked.groupBy(col("__t"))
       .agg((sum(col("__r2")).cast("decimal(38,0)") / 2)
         .cast("decimal(38,1)").as("__rsum"),
@@ -2596,45 +2660,41 @@ object MetricOps {
   def energyDistance(df: DataFrame, sideCol: String, valCol: String,
                      sideA: String, sideB: String,
                      roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .select(round(col(valCol).cast("double") * 100, 0)
-          .cast("decimal(38,0)").as("__v"),
-        (col(sideCol) === sideA).cast("long").as("__ia"))
-      .groupBy("__v")
-      .agg(sum(col("__ia")).as("__ca"), sum(lit(1L) - col("__ia")).as("__cb"))
-      .withColumn("__sa", col("__ca") * col("__v"))
-      .withColumn("__sb", col("__cb") * col("__v"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+        round(col(valCol).cast("double") * 100, 0).cast("decimal(38,0)"))
+      .withColumn("__sa", col("__na") * col("__v"))
+      .withColumn("__sb", col("__nb") * col("__v"))
     val cum = rangeCumSum(hist, "__v",
-      Seq("__ca", "__cb", "__sa", "__sb"))
-    val tot = hist.agg(sum(col("__ca")).as("__na"),
-      sum(col("__cb")).as("__nb"),
+      Seq("__na", "__nb", "__sa", "__sb"))
+    val tot = hist.agg(sum(col("__na")).as("__qa"),
+      sum(col("__nb")).as("__qb"),
       sum(col("__sa")).as("__ta"), sum(col("__sb")).as("__tb"))
     // below-exclusive cumulants per distinct value; above = total−cum
     val terms = cum.crossJoin(broadcast(tot))
-      .withColumn("__calt", col("__cum___ca") - col("__ca"))
-      .withColumn("__cblt", col("__cum___cb") - col("__cb"))
+      .withColumn("__calt", col("__cum___na") - col("__na"))
+      .withColumn("__cblt", col("__cum___nb") - col("__nb"))
       .withColumn("__salt", col("__cum___sa") - col("__sa"))
       .withColumn("__sblt", col("__cum___sb") - col("__sb"))
-      .withColumn("__cagt", col("__na") - col("__cum___ca"))
-      .withColumn("__cbgt", col("__nb") - col("__cum___cb"))
+      .withColumn("__cagt", col("__qa") - col("__cum___na"))
+      .withColumn("__cbgt", col("__qb") - col("__cum___nb"))
       .withColumn("__sagt", col("__ta") - col("__cum___sa"))
       .withColumn("__sbgt", col("__tb") - col("__cum___sb"))
     val sums = terms.agg(
-      sum(col("__ca") * (col("__v") * col("__cblt") - col("__sblt") +
+      sum(col("__na") * (col("__v") * col("__cblt") - col("__sblt") +
         col("__sbgt") - col("__v") * col("__cbgt"))).as("__pab"),
-      sum(col("__ca") * (col("__v") * col("__calt") - col("__salt") +
+      sum(col("__na") * (col("__v") * col("__calt") - col("__salt") +
         col("__sagt") - col("__v") * col("__cagt"))).as("__paa"),
-      sum(col("__cb") * (col("__v") * col("__cblt") - col("__sblt") +
+      sum(col("__nb") * (col("__v") * col("__cblt") - col("__sblt") +
         col("__sbgt") - col("__v") * col("__cbgt"))).as("__pbb"))
     sums.crossJoin(broadcast(tot))
       .withColumn("__exy", col("__pab").cast("double") /
-        (col("__na") * col("__nb")).cast("double") / 100.0)
+        (col("__qa") * col("__qb")).cast("double") / 100.0)
       .withColumn("__exx", col("__paa").cast("double") /
-        (col("__na") * col("__na")).cast("double") / 100.0)
+        (col("__qa") * col("__qa")).cast("double") / 100.0)
       .withColumn("__eyy", col("__pbb").cast("double") /
-        (col("__nb") * col("__nb")).cast("double") / 100.0)
-      .select(col("__na").cast("long").as("n_a"),
-        col("__nb").cast("long").as("n_b"),
+        (col("__qb") * col("__qb")).cast("double") / 100.0)
+      .select(col("__qa").cast("long").as("n_a"),
+        col("__qb").cast("long").as("n_b"),
         round(col("__exy"), roundTo).as("e_xy"),
         round(col("__exx"), roundTo).as("e_xx"),
         round(col("__eyy"), roundTo).as("e_yy"),
@@ -2693,29 +2753,25 @@ object MetricOps {
   def cvmTwoSample(df: DataFrame, sideCol: String, valCol: String,
                    sideA: String, sideB: String,
                    roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .select(round(col(valCol).cast("double"), 4).as("__v"),
-        (col(sideCol) === sideA).cast("long").as("__ia"))
-      .groupBy("__v")
-      .agg(sum(col("__ia")).as("__ca"),
-        sum(lit(1L) - col("__ia")).as("__cb"))
-    val cum = rangeCumSum(hist, "__v", Seq("__ca", "__cb"))
-    val tot = hist.agg(sum(col("__ca")).as("__na"),
-      sum(col("__cb")).as("__nb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+      round(col(valCol).cast("double"), 4))
+    val cum = rangeCumSum(hist, "__v", Seq("__na", "__nb"))
+    val tot = hist.agg(sum(col("__na")).as("__qa"),
+      sum(col("__nb")).as("__qb"))
     val terms = cum.crossJoin(broadcast(tot))
-      .withColumn("__d", (col("__cum___ca") * col("__nb") -
-        col("__cum___cb") * col("__na")).cast("decimal(38,0)"))
-      .agg(sum(col("__d") * col("__d") * (col("__ca") + col("__cb")))
+      .withColumn("__d", (col("__cum___na") * col("__qb") -
+        col("__cum___nb") * col("__qa")).cast("decimal(38,0)"))
+      .agg(sum(col("__d") * col("__d") * (col("__na") + col("__nb")))
         .as("__s"))
     // T = S / (N²·n_a·n_b): the CDF gaps were cleared of their
     // denominators inside S, so this restores (F−G)²·(n_a n_b/N²)·w
     terms.crossJoin(broadcast(tot))
-      .select(col("__na").cast("long").as("n_a"),
-        col("__nb").cast("long").as("n_b"),
+      .select(col("__qa").cast("long").as("n_a"),
+        col("__qb").cast("long").as("n_b"),
         round(col("__s").cast("double") /
-          ((col("__na") + col("__nb")) * (col("__na") + col("__nb")))
+          ((col("__qa") + col("__qb")) * (col("__qa") + col("__qb")))
             .cast("double") /
-          col("__na").cast("double") / col("__nb").cast("double"),
+          col("__qa").cast("double") / col("__qb").cast("double"),
           roundTo).as("cvm_stat"))
   }
 
@@ -2726,39 +2782,15 @@ object MetricOps {
     * φ₂₁ = ρ₁(1 − φ₂₂) — the AR-order fingerprint the raw ACF can't
     * show (an AR(1) has geometric ACF but a single PACF spike).
     *
-    * ρ̂_k comes from the [[ljungBox]] machinery (global-mean
-    * deviations snapped to 6 dp, one calendar lag-spine join, exact
-    * decimal moment sums); ρ̂ snaps to 6 dp BEFORE the recursion so
+    * ρ̂_k comes from the [[lagProducts]] sums shared with
+    * [[ljungBox]]; ρ̂ snaps to 6 dp BEFORE the recursion so
     * both engines run the identical double arithmetic. Degenerate
     * denominators (|·| ≤ 1e-12: constant or perfectly correlated
     * series) yield null, not ±Inf.
     */
   def pacf(series: DataFrame, groupCol: String, xCol: String,
            yCol: String, roundTo: Int = 6): DataFrame = {
-    val base = series.select(col(groupCol).as("__g"),
-      col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-    val mom = base.groupBy("__g").agg(
-      count(lit(1)).as("__n"),
-      sum(col("__y")).cast("decimal(38,0)").as("__sy"))
-    val dev = base.join(broadcast(mom), "__g")
-      .withColumn("__d", round(col("__y").cast("double") -
-        col("__sy").cast("double") / col("__n"), 6))
-      .select(col("__g"), col("__x"), col("__d"))
-      .localCheckpoint(true) // current + lagged + denominator read it
-    val den = dev.groupBy("__g")
-      .agg(sum(round(col("__d") * col("__d"), 12).cast("decimal(38,12)"))
-        .as("__ss"))
-    val spine = series.sparkSession.range(1).select(
-      explode(sequence(lit(1L), lit(3L))).as("lag"))
-    val lagged = dev.select(col("__g"), col("__x").as("__lx"),
-        col("__d").as("__dl"))
-      .crossJoin(broadcast(spine))
-      .withColumn("__x", col("__lx") + col("lag"))
-    val rho = dev.join(lagged, Seq("__g", "__x"))
-      .groupBy("__g", "lag")
-      .agg(sum(round(col("__d") * col("__dl"), 12).cast("decimal(38,12)"))
-        .as("__num"))
-      .join(den, "__g")
+    val rho = lagProducts(series, groupCol, xCol, yCol, 3)
       .withColumn("rho", when(col("__ss") > 0,
         round(col("__num").cast("double") / col("__ss").cast("double"), 6))
         .otherwise(lit(0.0)))
@@ -2860,24 +2892,8 @@ object MetricOps {
     */
   def pageTrend(df: DataFrame, blockCol: String, treatCol: String,
                 valCol: String, roundTo: Int = 6): DataFrame = {
-    val base = df.select(col(blockCol).as("__b"),
-      col(treatCol).cast("long").as("__t"),
-      round(col(valCol).cast("double"), 4).as("__v"))
-    val k = base.agg(countDistinct(col("__t")).as("__k"))
-    // complete block = every treatment exactly once (see [[friedman]])
-    val complete = base
-      .withColumn("__bn", count(lit(1))
-        .over(Window.partitionBy(col("__b"))))
-      .withColumn("__bd", size(collect_set(col("__t"))
-        .over(Window.partitionBy(col("__b")))))
-      .crossJoin(broadcast(k))
-      .filter(col("__bn") === col("__k") && col("__bd") === col("__k"))
-    val wb = Window.partitionBy(col("__b"))
-    val ranked = complete
-      .withColumn("__rnk", rank().over(wb.orderBy(col("__v"))))
-      .withColumn("__tie", count(lit(1))
-        .over(Window.partitionBy(col("__b"), col("__v"))))
-      .withColumn("__r2", col("__rnk") * 2 + col("__tie") - 1)
+    val ranked = blockRanks2(
+      completeBlocks(df, blockCol, col(treatCol).cast("long"), valCol))
     val perTreat0 = ranked.groupBy(col("__t"))
       .agg(sum(col("__r2")).as("__rs2"), count(lit(1)).as("__bc"))
     // order index s_j via a broadcast triangular self-join on the
@@ -3279,8 +3295,7 @@ object MetricOps {
       .localCheckpoint(true) // value histogram + rank join both read it
     val histv = cells.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
     val ranked = rangeCumSum(histv, "__v", Seq("__t"))
-      .withColumn("__ar2",
-        lit(2) * (col("__cum___t") - col("__t")) + col("__t") + 1)
+      .withColumn("__ar2", midrank2(col("__cum___t") - col("__t"), col("__t")))
     val grp = cells.join(ranked.select(col("__v"), col("__ar2")), "__v")
       .groupBy(col("__g"))
       .agg(sum(col("__c")).as("__n"),
@@ -3469,18 +3484,10 @@ object MetricOps {
     */
   def nelsonAalen(df: DataFrame, durCol: String, eventCol: String,
                   roundTo: Int = 6): DataFrame = {
-    val hist = df.groupBy(col(durCol).cast("long").as("t"))
-      .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("d"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("c"))
-      .withColumn("__all", col("d") + col("c"))
-    val cum = rangeCumSum(hist, "t", Seq("__all"))
-    val tot = hist.agg(sum(col("__all")).as("__N"))
-    val risk = cum.crossJoin(broadcast(tot))
-      .withColumn("n_risk", col("__N") - (col("__cum___all") - col("__all")))
+    val risk = riskTable(df, durCol, eventCol)
       .withColumn("__h", when(col("n_risk") > 0,
           round(col("d").cast("double") / col("n_risk"), 12))
         .otherwise(lit(0.0)).cast("decimal(28,14)"))
-      .select(col("t"), col("d"), col("c"), col("n_risk"), col("__h"))
     rangeCumSum(risk, "t", Seq("__h"))
       .select(col("t"), col("n_risk"), col("d"), col("c"),
         round(col("__cum___h").cast("double"), roundTo).as("cum_hazard"),
@@ -3502,27 +3509,13 @@ object MetricOps {
     */
   def rmst(df: DataFrame, durCol: String, eventCol: String,
            roundTo: Int = 6): DataFrame = {
-    val hist = df.groupBy(col(durCol).cast("long").as("t"))
-      .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("d"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("c"))
-      .withColumn("__all", col("d") + col("c"))
-    val cum = rangeCumSum(hist, "t", Seq("__all"))
-    val tot = hist.agg(sum(col("__all")).as("__N"))
-    val risk = cum.crossJoin(broadcast(tot))
-      .withColumn("n_risk", col("__N") - (col("__cum___all") - col("__all")))
-      .withColumn("__lnf", when(col("d") > 0 && col("d") < col("n_risk"),
-          round(log(lit(1.0) - col("d") / col("n_risk")), 12))
-        .otherwise(lit(0.0)).cast("decimal(28,14)"))
-      .withColumn("__zero", when(col("d") === col("n_risk"), 1L)
-        .otherwise(0L))
-      .select(col("t"), col("d"), col("n_risk"), col("__lnf"), col("__zero"))
+    val risk = productLimitFactors(riskTable(df, durCol, eventCol))
+      .drop("c")
     val curve = rangeCumSum(risk, "t", Seq("__lnf", "__zero"))
       // S_prev excludes this row's own factor AND its own zero-crossing
-      .withColumn("__sprev",
-        when(col("__cum___zero") - col("__zero") > 0, lit(0.0))
-          .otherwise(exp((col("__cum___lnf") - col("__lnf")).cast("double"))))
-      .withColumn("__s", when(col("__cum___zero") > 0, lit(0.0))
-        .otherwise(exp(col("__cum___lnf").cast("double"))))
+      .withColumn("__sprev", plSurvival(col("__cum___lnf") - col("__lnf"),
+        col("__cum___zero") - col("__zero")))
+      .withColumn("__s", plSurvival(col("__cum___lnf"), col("__cum___zero")))
       .withColumn("__drop", round(when(col("d") === col("n_risk"),
           col("__sprev"))
         .otherwise(col("__s") * col("d") /
@@ -3556,23 +3549,19 @@ object MetricOps {
   def andersonDarlingTwoSample(df: DataFrame, sideCol: String,
                                valCol: String, sideA: Any, sideB: Any,
                                roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .select(round(col(valCol).cast("double"), 4).as("__v"),
-        when(col(sideCol) === lit(sideA), 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__la"),
-        sum(lit(1L) - col("__ia")).as("__lb"))
-      .withColumn("__l", col("__la") + col("__lb"))
-    val tot = hist.agg(sum(col("__la")).as("__na"),
-      sum(col("__lb")).as("__nb"), sum(col("__l")).as("__nn"))
-    val cum = rangeCumSum(hist, "__v", Seq("__l", "__la", "__lb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+        round(col(valCol).cast("double"), 4))
+      .withColumn("__l", col("__na") + col("__nb"))
+    val tot = hist.agg(sum(col("__na")).as("__qa"),
+      sum(col("__nb")).as("__qb"), sum(col("__l")).as("__nn"))
+    val cum = rangeCumSum(hist, "__v", Seq("__l", "__na", "__nb"))
       .crossJoin(broadcast(tot))
       .withColumn("__b2",
         lit(2) * (col("__cum___l") - col("__l")) + col("__l"))
       .withColumn("__m2a",
-        lit(2) * col("__cum___la") - col("__la"))
+        lit(2) * col("__cum___na") - col("__na"))
       .withColumn("__m2b",
-        lit(2) * col("__cum___lb") - col("__lb"))
+        lit(2) * col("__cum___nb") - col("__nb"))
       .withColumn("__den", (col("__b2").cast("decimal(38,0)") *
         (lit(2) * col("__nn") - col("__b2")) -
         col("__nn").cast("decimal(38,0)") * col("__l")).cast("double"))
@@ -3581,10 +3570,10 @@ object MetricOps {
           pow((col("__nn").cast("decimal(38,0)") * col(m2) -
             col("__b2").cast("decimal(38,0)") * col(n)).cast("double"), 2)
           / col("__den"), 12)).cast("decimal(38,12)"))
-    cum.agg(first(col("__na")).cast("long").as("n_a"),
-        first(col("__nb")).cast("long").as("n_b"),
-        sideSum("__m2a", "__na").as("__sa"),
-        sideSum("__m2b", "__nb").as("__sb"),
+    cum.agg(first(col("__qa")).cast("long").as("n_a"),
+        first(col("__qb")).cast("long").as("n_b"),
+        sideSum("__m2a", "__qa").as("__sa"),
+        sideSum("__m2b", "__qb").as("__sb"),
         first(col("__nn")).as("__N"))
       .select(col("n_a"), col("n_b"),
         when(col("n_a") > 0 && col("n_b") > 0 && col("__N") > 1,
@@ -3703,29 +3692,14 @@ object MetricOps {
     */
   def kaplanMeierCi(df: DataFrame, durCol: String, eventCol: String,
                     z: Double = 1.96, roundTo: Int = 6): DataFrame = {
-    val hist = df.groupBy(col(durCol).cast("long").as("t"))
-      .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("d"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("c"))
-      .withColumn("__all", col("d") + col("c"))
-    val cum = rangeCumSum(hist, "t", Seq("__all"))
-    val tot = hist.agg(sum(col("__all")).as("__N"))
-    val risk = cum.crossJoin(broadcast(tot))
-      .withColumn("n_risk", col("__N") - (col("__cum___all") - col("__all")))
-      .withColumn("__lnf", when(col("d") > 0 && col("d") < col("n_risk"),
-          round(log(lit(1.0) - col("d") / col("n_risk")), 12))
-        .otherwise(lit(0.0)).cast("decimal(28,14)"))
+    val risk = productLimitFactors(riskTable(df, durCol, eventCol))
       .withColumn("__gw", when(col("d") > 0 && col("d") < col("n_risk"),
           round(col("d").cast("double") /
             (col("n_risk").cast("double") * (col("n_risk") - col("d"))),
             12))
         .otherwise(lit(0.0)).cast("decimal(28,14)"))
-      .withColumn("__zero", when(col("d") === col("n_risk"), 1L)
-        .otherwise(0L))
-      .select(col("t"), col("d"), col("c"), col("n_risk"),
-        col("__lnf"), col("__gw"), col("__zero"))
     rangeCumSum(risk, "t", Seq("__lnf", "__gw", "__zero"))
-      .withColumn("__s", when(col("__cum___zero") > 0, lit(0.0))
-        .otherwise(exp(col("__cum___lnf").cast("double"))))
+      .withColumn("__s", plSurvival(col("__cum___lnf"), col("__cum___zero")))
       .withColumn("__se", when(col("__cum___zero") > 0, lit(0.0))
         .otherwise(col("__s") * sqrt(col("__cum___gw").cast("double"))))
       .select(col("t"), col("n_risk"), col("d"), col("c"),
@@ -3819,12 +3793,8 @@ object MetricOps {
   def hellingerDrift(df: DataFrame, sideCol: String, valCol: String,
                      sideA: Any, sideB: Any, roundVals: Int = 1,
                      roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .select(round(col(valCol).cast("double"), roundVals).as("__v"),
-        when(col(sideCol) === lit(sideA), 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__na"),
-        sum(lit(1L) - col("__ia")).as("__nb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+      round(col(valCol).cast("double"), roundVals))
     hist.agg(sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"),
         sum(round(sqrt((col("__na") * col("__nb")).cast("double")), 12)
           .cast("decimal(38,12)")).as("__bcn"))
@@ -4013,19 +3983,15 @@ object MetricOps {
     */
   def kuiperTwoSample(df: DataFrame, sideCol: String, valCol: String,
                       sideA: Any, sideB: Any, roundTo: Int = 6): DataFrame = {
-    val hist = df.filter(col(sideCol).isin(sideA, sideB))
-      .select(round(col(valCol).cast("double"), 4).as("__v"),
-        when(col(sideCol) === lit(sideA), 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__la"),
-        sum(lit(1L) - col("__ia")).as("__lb"))
-    val tot = hist.agg(sum(col("__la")).as("__ta"),
-      sum(col("__lb")).as("__tb"))
-    rangeCumSum(hist, "__v", Seq("__la", "__lb"))
+    val hist = twoSampleHist(df, sideCol, sideA, sideB,
+      round(col(valCol).cast("double"), 4))
+    val tot = hist.agg(sum(col("__na")).as("__ta"),
+      sum(col("__nb")).as("__tb"))
+    rangeCumSum(hist, "__v", Seq("__na", "__nb"))
       .crossJoin(broadcast(tot))
       .withColumn("__gap",
-        col("__cum___la").cast("decimal(38,0)") * col("__tb") -
-          col("__cum___lb").cast("decimal(38,0)") * col("__ta"))
+        col("__cum___na").cast("decimal(38,0)") * col("__tb") -
+          col("__cum___nb").cast("decimal(38,0)") * col("__ta"))
       .agg(first(col("__ta")).cast("long").as("n_a"),
         first(col("__tb")).cast("long").as("n_b"),
         greatest(max(col("__gap")), lit(0).cast("decimal(38,0)"))
@@ -4537,29 +4503,12 @@ object MetricOps {
     */
   def kendallW(df: DataFrame, raterCol: String, itemCol: String,
                valCol: String, roundTo: Int = 6): DataFrame = {
-    val base = df.select(col(raterCol).as("__b"), col(itemCol).as("__t"),
-      round(col(valCol).cast("double"), 4).as("__v"))
-    val k = base.agg(countDistinct(col("__t")).as("__k"))
-    // Balanced panel means the rater rated EVERY item EXACTLY ONCE: a
-    // row count alone lets a rater with a duplicate item + a missing
-    // item slip through (same total), leaving items with unequal m and
-    // a wrong first(__m) in the W denominator — so require distinct
-    // item count == k AND row count == k. collect_set over the rater
-    // window is bounded by the n-item slate, never row count.
-    val complete = base
-      .withColumn("__bn", count(lit(1))
-        .over(Window.partitionBy(col("__b"))))
-      .withColumn("__bd", size(collect_set(col("__t"))
-        .over(Window.partitionBy(col("__b")))))
-      .crossJoin(broadcast(k))
-      .filter(col("__bn") === col("__k") && col("__bd") === col("__k"))
+    // Balanced panel: a rater with a duplicate item + a missing item
+    // would leave items with unequal m and a wrong first(__m) in the W
+    // denominator, so only complete raters are kept.
+    val complete = completeBlocks(df, raterCol, col(itemCol), valCol)
       .localCheckpoint(true) // rank windows + tie correction read it
-    val wb = Window.partitionBy(col("__b"))
-    val ranked = complete
-      .withColumn("__rnk", rank().over(wb.orderBy(col("__v"))))
-      .withColumn("__tie", count(lit(1))
-        .over(Window.partitionBy(col("__b"), col("__v"))))
-      .withColumn("__r2", col("__rnk") * 2 + col("__tie") - 1)
+    val ranked = blockRanks2(complete)
     val perItem = ranked.groupBy(col("__t"))
       .agg((sum(col("__r2")).cast("decimal(38,0)") / 2)
         .cast("decimal(38,1)").as("__rsum"),

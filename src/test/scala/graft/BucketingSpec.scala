@@ -1,8 +1,10 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import graft.sources.Bucketing
+import graft.sources.BucketedTables
 
 /** Bucketed join: both sides bucketed on the join key ⇒ zero shuffle
   * exchanges in the physical plan (the co-location contract).
@@ -13,14 +15,15 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("join of two tables bucketed on the key plans no shuffle exchange") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    val dir = Files.createTempDirectory("graft_bkt").toString
     try {
       val a = (0 until 1000).map(i => (i.toLong % 50, i.toLong)).toDF("k", "v")
       val b = (0 until 500).map(i => (i.toLong % 50, i.toDouble)).toDF("k", "w")
-      Bucketing.writeBucketed(a, "bkt_a", "k", 8)
-      Bucketing.writeBucketed(b, "bkt_b", "k", 8)
+      BucketedTables.writeBucketed(a, "bkt_a", "k", 8, s"$dir/a")
+      BucketedTables.writeBucketed(b, "bkt_b", "k", 8, s"$dir/b")
 
-      val joined = Bucketing.readTable(spark, "bkt_a")
-        .join(Bucketing.readTable(spark, "bkt_b"), "k")
+      val joined = BucketedTables.read(spark, "bkt_a")
+        .join(BucketedTables.read(spark, "bkt_b"), "k")
       joined.count()   // materialize so AQE finalizes the plan
 
       val shuffles = collectWithSubqueries(joined.queryExecution.executedPlan) {
