@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.{FeatMeta, RecsysModels}
-import graft.operators.{RelationalOps, RetrievalOps}
+import graft.operators.{Concurrent, RelationalOps, RetrievalOps}
 import graft.tables.Tables
 
 /** The reference's full offline→online pipeline (readme.md:14 three
@@ -15,9 +15,13 @@ import graft.tables.Tables
   *   FeatMeta-assembled features) → hybrid recall (R1+R2+R3) →
   *   in-engine scoring (M3) → per-user top-k (O3).
   *
-  * One driver program, one lazy DAG per stage, artifacts as keyed
-  * DataFrames — the Spark-native shape of
-  * offline/preprocess → offline/recall → offline/rank → online/main.
+  * One driver program, artifacts as keyed DataFrames — the Spark-native
+  * shape of offline/preprocess → offline/recall → offline/rank →
+  * online/main. The PIT feature frame is materialized once and shared
+  * by every later stage; the recall branch (ALS → vector export) and
+  * the rank branch (constant prune → FeatMeta → FM ranker) are
+  * independent and fitted concurrently (`Concurrent.run`). Serving,
+  * scoring and top-k stay one lazy DAG over their outputs.
   *
   * `main` runs it at sf0.001 and prints stage row counts — the
   * runnable end-to-end sample for the library surface.
@@ -53,29 +57,43 @@ object Pipeline {
         org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
     val split = RelationalOps.threeWaySplit(rn, "rn", "u_cnt", 10, 0.2)
 
-    // --- offline/preprocess s2: PIT behavior features (W2)
+    // --- offline/preprocess s2: PIT behavior features (W2), materialized
+    // once: both model fits, both AUC evaluations and the serving-state
+    // read below would each re-run the events scan and both windows.
+    // A local checkpoint, not cache(): `recommendations` reads the frame
+    // lazily after run returns, so there is no point at which to unpersist.
     val feat = RelationalOps.pitWindow(split, "user_id",
         Seq(col("ts"), col("event_id")), "label", 10)
       .select(col("user_id"), col("item"), col("event_id"), col("istest"),
         col("label").cast("double").as("label"),
         col("pit_imp").cast("double").as("pit_imp"),
         col("pit_clk").cast("double").as("pit_clk"))
+      .localCheckpoint()
 
     val train = feat.filter(col("istest") === 0)
     val test = feat.filter(col("istest") === 1)
 
     // --- offline/recall: M1 ALS → vector export (S6 artifact shape)
-    val als = RecsysModels.trainRecall(train, "user_id", "item", "label")
-    val (userVec, itemVec) = RecsysModels.exportVectors(als)
+    lazy val vectors = RecsysModels.exportVectors(
+      RecsysModels.trainRecall(train, "user_id", "item", "label"))
 
     // --- offline/rank: P8 constant-feature prune (the reference drops
     // dead features before training, s1_feature_engi.py:25-27,37-39,50-52),
     // then FeatMeta (A6) + M6 assemble + M2/M4 train
-    val denseKept = pruneConstant(train, Seq("pit_imp", "pit_clk"))
-    val meta = FeatMeta.derive(train, Seq("user_id", "item"), Nil, denseKept)
-    val (ranker, auc) = RecsysModels.trainRanker(
-      RecsysModels.assemble(train, meta), RecsysModels.assemble(test, meta),
-      "label", maxRounds = 2, itersPerRound = 10)
+    lazy val rank = {
+      val denseKept = pruneConstant(train, Seq("pit_imp", "pit_clk"))
+      val meta = FeatMeta.derive(train, Seq("user_id", "item"), Nil, denseKept)
+      (meta, RecsysModels.trainRanker(
+        RecsysModels.assemble(train, meta), RecsysModels.assemble(test, meta),
+        "label", maxRounds = 2, itersPerRound = 10))
+    }
+
+    // The reference trains recall and rank as two programs over the same
+    // samples; here they are two independent branches whose driver-bound
+    // fit loops overlap on one pool, which forces both lazy vals.
+    Concurrent.run(Seq(() => vectors, () => rank))
+    val (userVec, itemVec) = vectors
+    val (meta, (ranker, auc)) = rank
 
     // --- online: hybrid recall (R1 term + R2 kNN + R3 union) over the
     // serving snapshot, then M3 in-engine scoring and O3 top-k.

@@ -3,7 +3,8 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * throws does not stop the dump; after everything else is written the
-  * run names every failed query on stderr and exits 1. */
+  * run lists every failed query in failed.json (`[]` on a clean run, else
+  * one {name, error} per failure), names them on stderr and exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
@@ -18,7 +19,7 @@ object Verify {
     val spark = Sessions.bounded(Sessions.builder(cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val failed = Seq.newBuilder[String]
+    val failed = Seq.newBuilder[(String, Throwable)]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -26,7 +27,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed += name
+        failed += name -> e
       }
       // operators now localCheckpoint (GC-cleaned) instead of persist;
       // clearCache stays as a belt-and-braces guard for any cached plan
@@ -47,11 +48,14 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
     val failures = failed.result()
+    Files.writeString(Paths.get(s"$outDir/failed.json"), failures
+      .map { case (name, e) => s"""{"name": ${q(name)}, "error": ${q(e.toString)}}""" }
+      .mkString("[", ",", "]"))
+    spark.stop()
     if (failures.nonEmpty) {
       System.err.println(s"[verify] ${failures.size} queries failed: " +
-        failures.mkString(", "))
+        failures.map(_._1).mkString(", "))
       sys.exit(1)
     }
   }

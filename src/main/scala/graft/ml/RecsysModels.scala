@@ -81,9 +81,6 @@ object RecsysModels {
   def trainRanker(train: DataFrame, test: DataFrame, labelCol: String,
                   maxRounds: Int = 5, itersPerRound: Int = 10,
                   patience: Int = 2): (FMClassificationModel, Double) = {
-    val evaluator = new BinaryClassificationEvaluator()
-      .setLabelCol(labelCol).setRawPredictionCol("rawPrediction")
-      .setMetricName("areaUnderROC")
     var best: (FMClassificationModel, Double) = (null, Double.NegativeInfinity)
     var bad = 0
     var round = 1
@@ -100,8 +97,8 @@ object RecsysModels {
         .fit(train)
         .copy(org.apache.spark.ml.param.ParamMap.empty)
         .asInstanceOf[FMClassificationModel]
-      val auc = evaluator.evaluate(m.transform(test))
-      if (auc > best._2) { best = (m, auc); bad = 0 } else bad += 1
+      val roundAuc = auc(m, test, labelCol)
+      if (roundAuc > best._2) { best = (m, roundAuc); bad = 0 } else bad += 1
       round += 1
     }
     best

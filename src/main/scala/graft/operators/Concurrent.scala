@@ -1,25 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
-/** Construct independent sub-plan families from a small driver pool so
-  * their blocking collect/localCheckpoint jobs overlap instead of
+import scala.jdk.CollectionConverters._
+
+/** Run independent driver-side tasks from a small pool so their
+  * blocking collect/localCheckpoint/fit jobs overlap instead of
   * serializing (guide §2.6: "2-3 jobs in flight is plenty" — enough to
   * fill each job's scheduling tail, not enough to fight for cores).
   * Deterministic: tasks must be pure functions of their inputs; the
-  * returned Seq preserves task order, and a task failure rethrows at
-  * the await. Used by the IVF dial sweep / recall-per-candidate audit
-  * (SimilarityOps).
+  * returned Seq preserves task order. Every task runs to completion
+  * before the call returns, so no task is still launching jobs after a
+  * sibling fails; the first failure in task order is then rethrown.
+  * Used by the IVF dial sweep / recall-per-candidate audit
+  * (SimilarityOps) and the recall/rank model fits (Pipeline).
   */
-private[operators] object Concurrent {
-  def construct(tasks: Seq[() => DataFrame]): Seq[DataFrame] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+private[graft] object Concurrent {
+  def run[A](tasks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(3)
     try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      tasks.map(t => scala.concurrent.Future(t()))
-        .map(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
+      // invokeAll returns only once every task has completed
+      val done = pool.invokeAll(tasks.map(t => (() => t()): Callable[A]).asJava)
+      done.asScala.toSeq.map { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
     } finally pool.shutdown()
   }
 }

@@ -2290,24 +2290,20 @@ object SimilarityOps {
     // the driver — build them concurrently (guide §2.6, the
     // ivfDialSweep pattern; both sides are deterministic pure functions
     // of dev).
-    var signSide: (DataFrame, DataFrame, DataFrame) = null
-    var ivfCand: DataFrame = null
-    Concurrent.construct(Seq(
-      () => {
-        val n = normalized(dev, idCol, embCol)
-          .withColumn("bucket", signBucket(bits))
-          .localCheckpoint(false)
-        val qs = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
-        val exact = exactMarks(qs, n, k).localCheckpoint(false)
-        signSide = (qs, exact, signProbeCands(qs, n, bits))
-        exact
-      },
-      () => {
-        val (e, cFinal) = ivfShardedFit(dev, idCol, embCol, 1 << bits, 2, 0)
-        val qi = e.filter(pmod(col("id"), lit(sampleMod)) === 0)
-        ivfCand = ivfShardedProbeCands(qi, e, cFinal, 3)
-        ivfCand
-      }))
+    lazy val signSide = {
+      val n = normalized(dev, idCol, embCol)
+        .withColumn("bucket", signBucket(bits))
+        .localCheckpoint(false)
+      val qs = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
+      val exact = exactMarks(qs, n, k).localCheckpoint(false)
+      (qs, exact, signProbeCands(qs, n, bits))
+    }
+    lazy val ivfCand = {
+      val (e, cFinal) = ivfShardedFit(dev, idCol, embCol, 1 << bits, 2, 0)
+      val qi = e.filter(pmod(col("id"), lit(sampleMod)) === 0)
+      ivfShardedProbeCands(qi, e, cFinal, 3)
+    }
+    Concurrent.run(Seq(() => signSide, () => ivfCand))
     val (qs, exact, signCand) = signSide
     val nq = qs.agg(count(lit(1)).as("__nq"))
     // ONE plan, not 12 per-level jobs: per method, the tagged per-level
@@ -2435,7 +2431,7 @@ object SimilarityOps {
       es = shardQuantized(df, idCol, embCol, sb)
       kc <- kcs
     } yield dial("sharded", sb, es, kc, 1, nprobes)
-    Concurrent.construct(flatTask +: shardTasks).reduce(_ unionAll _)
+    Concurrent.run(flatTask +: shardTasks).reduce(_ unionAll _)
       .crossJoin(broadcast(nq))
       .select(col("layout"), col("shard_bits"), col("kc"),
         col("nprobe"), col("__nq").as("n_queries"),

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -100,7 +101,8 @@ class MovieLensSyntheticSpec extends SparkSpec {
     assert(off == 0, s"$off users break the flush-after-append off-by-one")
   }
 
-  test("Pipeline.run end-to-end on a 200-user ml-1m-shaped slice") {
+  /** The 200-user slice as a parquet events table, for Pipeline.run. */
+  private lazy val sliceDir = {
     val dir = Files.createTempDirectory(Paths.get("target"), "ml-synth").toString
     val types = Seq("click", "error", "purchase", "signup", "view")
     // event_type is decoupled from the rating-derived label: a perfect
@@ -112,8 +114,11 @@ class MovieLensSyntheticSpec extends SparkSpec {
       types((u * 3 + i * 11) % 5), rating(u, i) * 30.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    dir
+  }
 
-    val res = Pipeline.run(spark, dir)
+  test("Pipeline.run end-to-end on a 200-user ml-1m-shaped slice") {
+    val res = Pipeline.run(spark, sliceDir)
     val nTrain = res.train.count()
     val expTrain = (1 to 200).map { u =>
       val n = nRows(u)
@@ -124,5 +129,34 @@ class MovieLensSyntheticSpec extends SparkSpec {
     assert(res.auc > 0.5, s"ranker AUC ${res.auc} no better than chance")
     assert(res.userVectors.count() > 0 && res.itemVectors.count() > 0)
     assert(res.recommendations.count() > 0)
+  }
+
+  test("Pipeline.run materializes the PIT frame once and repeats its outputs") {
+    val a = Pipeline.run(spark, sliceDir)
+    // train reads the checkpointed frame: no window is re-derived
+    val plan = a.train.queryExecution.analyzed
+    assert(plan.collectFirst {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.isEmpty, s"train re-derives a window:\n$plan")
+    assert(plan.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.nonEmpty, s"train does not read a materialized frame:\n$plan")
+
+    // concurrent fits are still deterministic: a second run agrees
+    val b = Pipeline.run(spark, sliceDir)
+    assert(a.auc == b.auc)
+    def recs(r: Pipeline.Result) = r.recommendations
+      .select("user_id", "item", "score").as[(Long, Long, Double)].collect().toSet
+    val recsA = recs(a)
+    assert(recsA.nonEmpty && recsA == recs(b))
+    def vecs(df: DataFrame) =
+      df.as[(Int, Array[Float])].collect().map { case (id, v) => id -> v.toSeq }.toMap
+    for ((va, vb) <- Seq(a.userVectors -> b.userVectors,
+                         a.itemVectors -> b.itemVectors)) {
+      val (ma, mb) = (vecs(va), vecs(vb))
+      assert(ma.nonEmpty && ma.keySet == mb.keySet)
+      for ((id, v) <- ma; (x, y) <- v.zip(mb(id)))
+        assert(math.abs(x - y) <= 1e-6, s"vector $id: $x vs $y")
+    }
   }
 }
