@@ -1,26 +1,42 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Driver bench contract: time every SparkEntry query on
-  * $SPARK_GRAFT_SF_DIR, print one JSON line.
+  * $SPARK_GRAFT_SF_DIR (or only the comma list in
+  * $SPARK_GRAFT_BENCH_ONLY), min of 2 runs after one untimed warmup;
+  * write `target/bench_detail.json` (every time, plus one layer record
+  * per query) and print the JSON contract line as the last stdout line.
   *
-  * Config notes (local[N] at sf0.1):
-  *  - shuffle.partitions = cores (harness contract);
-  *  - files.maxPartitionBytes lowered so the single-file parquet tables
-  *    split across cores instead of scanning on one thread (at cluster
-  *    scale the default 128 MB is right — this knob tracks the SF, per
-  *    SURVEY §7.5.7);
-  *  - one untimed warmup pass absorbs JVM/codegen/file-index startup so
-  *    per-query numbers measure the queries, not the JVM.
+  * The 8 MB split size lets the single-file parquet tables split across
+  * cores instead of scanning on one thread (at cluster scale the default
+  * 128 MB is right — this knob tracks the SF, per SURVEY §7.5.7).
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Local property (and noop write option) naming the run and phase a
+    * job or drain belongs to: `<query>#<run>/construct|execute`. */
+  val Tag = "graft.bench.run"
+
   /** Materialize through the noop sink: every output column is computed
     * and serialized (a bare .count() lets Catalyst prune final
-    * projections — e.g. round(sim, 6) — and under-reports).
+    * projections — e.g. round(sim, 6) — and under-reports). The tag
+    * rides the write command so the drain's QueryExecution is found.
     */
-  def drain(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  def drain(df: DataFrame, tag: String = ""): Unit =
+    df.write.format("noop").mode("overwrite").option(Tag, tag).save()
 
   /** Untimed warmup: exercise codegen + file listing on a cheap query.
     * A failure is logged to stderr, never swallowed.
@@ -34,146 +50,171 @@ object Bench {
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
 
+  /** One successful timed run: `fn(spark, dir)`, then its drain. */
+  final case class Run(tag: String, constructS: Double, executeS: Double) {
+    def seconds: Double = constructS + executeS
+  }
+
+  /** Charges every job, and the shuffle writes of its stages, to the
+    * [[Tag]] it was started under (threads a query starts inherit the
+    * property), and keeps the planner phases of each tagged drain.
+    * Exact once the listener bus is drained — e.g. by `spark.stop()`.
+    */
+  final class Recorder extends SparkListener with QueryExecutionListener {
+    private final class Counts {
+      var jobs = 0
+      var bytes, records = 0L
+      var phases = Map.empty[String, Long]
+    }
+    private val byTag = mutable.Map.empty[String, Counts]
+    private val stageTag = mutable.Map.empty[Int, String]
+    private def counts(tag: String) = byTag.getOrElseUpdate(tag, new Counts)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach { t =>
+        counts(t).jobs += 1
+        e.stageIds.foreach(stageTag(_) = t)
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val m = e.stageInfo.taskMetrics
+      stageTag.get(e.stageInfo.stageId).filter(_ => m != null).foreach { t =>
+        counts(t).bytes += m.shuffleWriteMetrics.bytesWritten
+        counts(t).records += m.shuffleWriteMetrics.recordsWritten
+      }
+    }
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.logical match {
+        case w: OverwriteByExpression => w.writeOptions.get(Tag).foreach { t =>
+          val phases = qe.tracker.phases.map { case (k, v) => k -> v.durationMs }
+          synchronized(counts(t).phases = phases)
+        }
+        case _ =>
+      }
+
+    override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+
+    /** The layer record of one run: seconds and jobs per phase, the
+      * drain's planner phase ms, and the run's shuffle writes. */
+    def record(r: Run): JObject = synchronized {
+      val (c, x) = (counts(s"${r.tag}/construct"), counts(s"${r.tag}/execute"))
+      ("construct_s" -> r.constructS) ~ ("execute_s" -> r.executeS) ~
+        ("construct_jobs" -> c.jobs) ~ ("execute_jobs" -> x.jobs) ~
+        JObject(x.phases.toList.sorted.map { case (k, v) => s"${k}_ms" -> JLong(v) }) ~
+        ("shuffle_write_bytes" -> (c.bytes + x.bytes)) ~
+        ("shuffle_write_records" -> (c.records + x.records))
+    }
+  }
+
+  /** Times run `run` of one query; None when it throws (a crashing
+    * query must show as broken, never as its time-to-exception). */
+  def timeOnce(spark: SparkSession, sfDir: String, name: String, fn: Query,
+               run: Int): Option[Run] = {
+    val sc = spark.sparkContext
+    val tag = s"$name#$run"
+    try {
+      val t0 = System.nanoTime()
+      sc.setLocalProperty(Tag, s"$tag/construct")
+      val df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      sc.setLocalProperty(Tag, s"$tag/execute")
+      drain(df, s"$tag/execute")
+      Some(Run(tag, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
+    } finally {
+      sc.setLocalProperty(Tag, null)
+      // Persisted intermediates would leak across queries and let run 2
+      // read run 1's cache (identical lineage hits the CacheManager),
+      // making min-of-2 a cache-hit measurement.
+      spark.catalog.clearCache()
+    }
+  }
+
+  /** The faster of two runs per query (single-run noise on a shared host
+    * is ±30%); None when both failed. */
+  def measure(spark: SparkSession, queries: Map[String, Query],
+              sfDir: String): Map[String, Option[Run]] =
+    queries.map { case (name, fn) =>
+      name -> (1 to 2).flatMap(timeOnce(spark, sfDir, name, fn, _)).minByOption(_.seconds)
+    }
+
+  /** Prior per-query seconds from a bench detail file: only its
+    * `queries` object, only when its `sf` is `sfDir` (priors apply at
+    * their own scale), only values > 0; empty when malformed. */
+  def priorTimes(json: String, sfDir: String): Map[String, Double] =
+    try {
+      val j = parse(json)
+      if (j \ "sf" != JString(sfDir)) Map.empty
+      else (j \ "queries" match {
+        case JObject(fs) => fs.collect {
+          case (k, JDouble(v)) => k -> v
+          case (k, JInt(v)) => k -> v.toDouble
+        }
+        case _ => Nil
+      }).filter(_._2 > 0.0).toMap
+    } catch { case _: Exception => Map.empty }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shared session config lives in graft.Sessions (one builder for
-    // all driver-contract mains — ADVICE r13); the 8 MB split size is
-    // Bench-specific (tracks the SF so single-file tables split across
-    // cores; at cluster scale the 128 MB default is right).
     val spark = Sessions.bounded(Sessions.builder(cpus)
         .config("spark.sql.files.maxPartitionBytes", "8m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    spark.listenerManager.register(rec)
     warmup(spark, sfDir)
 
-    // min of 2 runs per query: measures the query, not GC/OS jitter
-    // (single-run noise on a shared host is ±30%). A failed run records
-    // -1, never its time-to-exception — a crashing query must show as
-    // broken in the JSON, not as "fast".
-    // Tuning aid: SPARK_GRAFT_BENCH_ONLY=q104_setsim_join,q26_cosine_topk
-    // times just those queries (full map when unset — the driver path).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    def timeOnce(name: String,
-                 fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { drain(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
-      }
-      finally {
-        // Operators that persist() compact intermediates (containment/
-        // set-sim arrays) would otherwise leak cached blocks across
-        // 133 queries — dead storage that steals execution memory from
-        // later queries' sorts — AND let run 2 of the same query read
-        // run 1's cache (its identical lineage hits the CacheManager),
-        // which would turn min-of-2 into a cache-hit measurement.
-        // Clearing OUTSIDE the timed window keeps every run cold and
-        // isolated.
-        spark.catalog.clearCache()
-      }
-    }
+    val selected = only.fold(SparkEntry.queries)(n => SparkEntry.queries.filter(kv => n(kv._1)))
+    val best = measure(spark, selected, sfDir)
+    val results = best.map { case (k, r) => k -> r.fold(-1.0)(_.seconds) }
+    val total = results.values.sum
 
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to 2).map(_ => timeOnce(name, fn))
-      val ok = times.filter(_ >= 0)
-      name -> (if (ok.nonEmpty) ok.min else -1.0)
-    }
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-
-    // Weather guard: one GC/compaction storm on a shared host can
-    // poison a single query's committed number (round 11: the driver's
-    // run read q207 at 42.26 s against three independent ~1.8 s
-    // measurements). Against the committed prior-round detail
-    // (bench_prior.json at the repo root, refreshed each round), any
-    // query reading >3× its prior AND >= 1 s is re-timed once at end
-    // of run — the quiet tail, after the storm — and BOTH numbers are
-    // emitted (`retimed`), so a future comparison can spot the
-    // outlier instead of trusting it.
-    val prior: Map[String, Double] = try {
-      val p = java.nio.file.Paths.get("bench_prior.json")
-      if (java.nio.file.Files.exists(p)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // priors only apply at THEIR scale factor: an sf1 probe run
-        // against sf0.1 priors would otherwise re-time everything
-        val priorSf = """"sf"\s*:\s*"([^"]*)"""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        if (priorSf.contains(sfDir)) {
-          // Parse q-keys ONLY inside the prior's "queries" object: the
-          // detail file also carries a "retimed" object whose entries
-          // would otherwise shadow the committed times (later-match-wins
-          // toMap), and a failed retime recorded as -1 would then
-          // disable the guard for that query via the prior>0 check.
-          // The queries object is flat (no nested braces), so [^}]* is
-          // exact.
-          val qobj = """"queries"\s*:\s*\{([^}]*)\}""".r
-            .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-          """"(q[0-9][^"]*)"\s*:\s*([0-9.Ee+-]+)""".r
-            .findAllMatchIn(qobj)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter(_._2 > 0.0).toMap
-        } else Map.empty
-      } else Map.empty
-    } catch { case _: Throwable => Map.empty }
-    val retimed: Map[String, Double] = results.collect {
-      case (name, t) if t >= 1.0 && prior.getOrElse(name, 0.0) > 0.0 &&
-        t > 3.0 * prior(name) =>
-        name -> timeOnce(name, selected(name))
-    }.toMap.filter(_._2 > 0.0) // a FAILED retime (-1) is not a time —
-    // dropping it keeps the original (suspect) number authoritative
-    // rather than emitting -1 into the detail as if it were fast
-    val retimedJson = retimed.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-
-    // Full-precision per-query detail → a file (for BENCHLOG analysis).
-    val detail = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("target", "bench_detail.json"),
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$detail,"retimed":$retimedJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_detail.json write failed: ${e.getMessage}")
-    }
-
-    // The stdout contract line MUST stay short: the harness keeps only the
-    // last ~2000 chars of stdout (plus sbt's [success] footer) and parses
-    // the JSON out of that window. At 150+ queries even compact keys +
-    // 1-dp values outgrow it (round-9's line truncated to an unparseable
-    // tail), so the line carries the TOTAL plus the 40 slowest queries —
-    // the profile a reader acts on — and the full full-precision map
-    // stays in target/bench_detail.json (committed per round as
-    // bench_detail_r{N}_full.json).
-    def fmt(v: Double, dp: Int): String = {
-      val s = BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP)
-      s.bigDecimal.toPlainString
-    }
-    // FULL query names in the stdout line: the driver joins these keys
-    // against its own query list to build the per-query PERF comparison
-    // — truncated keys ("q452" for q452_ivf_dial_sweep) can never join
-    // and left PERF_r*.per_query empty for 13 rounds. Full names at
-    // 1 dp for the top 40 fit in ~1300 chars, inside the harness's
-    // ~2000-char stdout tail window; the full-precision full map stays
-    // in target/bench_detail.json.
-    def compactLine(dp: Int, topN: Int): String = {
-      val qs = results.toSeq.sortBy(-_._2).take(topN).map { case (k, v) =>
-        s"\"" + k + "\":" + fmt(v, dp)
-      }.mkString("{", ",", "}")
-      // retimed outliers ride the stdout line too (few or none): a
-      // reader of the contract line sees the weather flag directly
-      val rt = retimed.map { case (k, v) =>
-        s"\"" + k + "\":" + fmt(v, dp)
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, dp)},"unit":"sec","n_queries":${results.size},"queries":$qs,"retimed":$rt,"sf":"$sfDir"}"""
-    }
-    val line1 = compactLine(1, 40)
-    println(if (line1.length <= 1800) line1 else compactLine(1, 22))
+    // Weather guard: one GC storm on a shared host can poison a single
+    // query's number (round 11: q207 read 42.26 s against three ~1.8 s
+    // measurements). A query >= 1 s and >3× its committed prior
+    // (bench_prior.json) is re-timed once at the quiet end of the run and
+    // both numbers are emitted; a failed retime keeps the original.
+    val priorFile = Paths.get("bench_prior.json")
+    val prior = if (!Files.exists(priorFile)) Map.empty[String, Double]
+      else priorTimes(new String(Files.readAllBytes(priorFile), "UTF-8"), sfDir)
+    val retimed = results.collect {
+      case (name, t) if t >= 1.0 && prior.get(name).exists(t > 3.0 * _) =>
+        timeOnce(spark, sfDir, name, selected(name), 3).map(name -> _.seconds)
+    }.flatten.toMap
+    // Stopping the context delivers every queued listener event.
     spark.stop()
+
+    val records = best.collect { case (k, Some(r)) => k -> rec.record(r) }
+    val detail = ("metric" -> "total") ~ ("value" -> total) ~ ("unit" -> "sec") ~
+      ("queries" -> results) ~ ("retimed" -> retimed) ~ ("sf" -> sfDir) ~
+      ("records" -> JObject(records.toList))
+    // The contract line stays short: its reader parses it from the last
+    // ~2000 chars of stdout, so it carries the total and the slowest
+    // queries under their FULL names (per-query comparisons join on them)
+    // at 1 dp; the full-precision map stays in bench_detail.json.
+    def dp1(v: Double): Double = math.round(v * 10) / 10.0
+    def line(topN: Int): String = compact(render(
+      ("metric" -> "total") ~ ("value" -> dp1(total)) ~ ("unit" -> "sec") ~
+        ("n_queries" -> results.size) ~
+        ("queries" -> JObject(results.toList.sortBy(-_._2).take(topN)
+          .map { case (k, v) => k -> JDouble(dp1(v)) })) ~
+        ("retimed" -> retimed.map { case (k, v) => k -> dp1(v) }) ~ ("sf" -> sfDir)))
+    val contract = Some(line(40)).filter(_.length <= 1800).getOrElse(line(22))
+    try {
+      Files.createDirectories(Paths.get("target"))
+      Files.write(Paths.get("target", "bench_detail.json"), compact(render(detail)).getBytes("UTF-8"))
+      Files.write(Paths.get("target", "bench_line.json"), (contract + "\n").getBytes("UTF-8"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] detail write failed: ${e.getMessage}")
+    }
+    System.out.println(contract)
+    System.out.flush()
   }
 }

@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.config.LoggerConfig
+import org.apache.logging.log4j.core.filter.RegexFilter
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
-/** ONE SparkSession builder for every main (Bench, Verify, Profile,
-  * Explain, Pipeline, CorpusPipeline, StreamPipeline, ServeBench,
-  * ShuffleProbe, ScaleDial) so their knobs cannot drift (ADVICE r13 —
-  * Profile had already re-inlined Bench's config by hand). Mains add
-  * only their own extras on top (the 8 MB split size of the timing
-  * mains).
+/** ONE SparkSession builder for every main (Bench, Verify, Explain,
+  * Pipeline, CorpusPipeline, StreamPipeline, ServeBench) so their knobs
+  * cannot drift (ADVICE r13 — a side profiler had already re-inlined
+  * Bench's config by hand). Mains add only their own extras on top
+  * (Bench's 8 MB split size).
   *
   * Config notes (local[N] at the gate SFs):
   *  - master/shuffle.partitions = `$SPARK_GRAFT_CPUS` (harness
@@ -16,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *  - UTC + nanosAsLong: events.parquet ships TIMESTAMP(NANOS);
   *  - UI off in all mains.
   */
-object Sessions {
+object Sessions extends Logging {
   def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -24,9 +28,9 @@ object Sessions {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
 
-  /** Bounded-driver-state knobs for the LONG mains (Bench/Verify/
-    * Profile run 450+ queries in one JVM; ServeBench and ShuffleProbe
-    * repeat many jobs; one-shot tools like Explain don't need these):
+  /** Bounded-driver-state knobs for the LONG mains (Bench/Verify run
+    * 450+ queries in one JVM; ServeBench repeats many jobs; one-shot
+    * tools like Explain don't need these):
     *  - periodicGC 1min: localCheckpoint blocks are only reclaimed by
     *    the ContextCleaner after a full GC, and the default 30-min
     *    interval never fires inside one run — accumulated blocks turn
@@ -35,15 +39,38 @@ object Sessions {
     *    weak-ref'd accumulators of already-released plans, so late
     *    task-end events log "Failed to update accumulator" ERRORs —
     *    log noise, not a correctness or timing hazard (diagnosed r14).
+    *    That one message is filtered out of DAGScheduler's log; every
+    *    other DAGScheduler ERROR still prints.
     *  - retention caps: the UI is off but the AppStatus listener still
     *    retains per-job/stage state for every query — dead driver heap
     *    the tail pays for in GC (r13 fix). Values are generous for any
     *    single query at any scale.
     */
-  def bounded(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.cleaner.periodicGC.interval", "1min")
-    .config("spark.ui.retainedJobs", "100")
-    .config("spark.ui.retainedStages", "100")
-    .config("spark.ui.retainedTasks", "1000")
-    .config("spark.sql.ui.retainedExecutions", "50")
+  def bounded(b: SparkSession.Builder): SparkSession.Builder = {
+    accumulatorErrorFilter
+    b.config("spark.cleaner.periodicGC.interval", "1min")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "50")
+  }
+
+  /** Installed once per JVM: a DENY-on-match RegexFilter on the
+    * DAGScheduler logger, whose level stays inherited. Spark swaps in its
+    * own log4j configuration when its logging starts, so it is started
+    * before the filter is added. */
+  private lazy val accumulatorErrorFilter: Unit = {
+    initializeLogIfNecessary(false)
+    val name = "org.apache.spark.scheduler.DAGScheduler"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val lc = Option(cfg.getLoggers.get(name)).getOrElse {
+      val c = new LoggerConfig(name, null, true)
+      cfg.addLogger(name, c)
+      c
+    }
+    lc.addFilter(RegexFilter.createFilter("(?s)Failed to update accumulator .*",
+      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    ctx.updateLoggers()
+  }
 }

@@ -220,20 +220,6 @@ object GraphOps {
     ranks.select(col("node"), round(col("rank"), 6).as("rank"))
   }
 
-  /** Triangle count with DEGREE-ORDERED edge orientation — the trick
-    * that makes wedge enumeration survive skew: each undirected edge is
-    * directed from its lower-(degree, id) endpoint to the higher one,
-    * so every node's out-degree is bounded by √(2·|E|) regardless of
-    * how hub-heavy the graph is, and the wedge join's cost Σ out-deg²
-    * is O(|E|^1.5) instead of the hub's degree squared. Each triangle
-    * has exactly one node with two out-edges under this orientation, so
-    * it is counted exactly once: wedges (v, w) from a common source are
-    * closed by probing the oriented edge v→w (a hash equi-join).
-    *
-    * Input edges may be directed/duplicated; they are canonicalized to
-    * distinct undirected (a < b) pairs first. Self-loops are dropped.
-    * Output: one row (n_nodes, n_edges, n_wedges, n_triangles).
-    */
   /** Deterministic 2-step random walk over a bipartite graph — the
     * positive-pair sampler behind DeepWalk/node2vec-style embedding
     * training (start → via → end becomes a (start, end) skip-gram
@@ -330,6 +316,20 @@ object GraphOps {
       .select(col("__p").as("node"), col("__a").cast("double").as("authority"))
   }
 
+  /** Triangle count with DEGREE-ORDERED edge orientation — the trick
+    * that makes wedge enumeration survive skew: each undirected edge is
+    * directed from its lower-(degree, id) endpoint to the higher one,
+    * so every node's out-degree is bounded by √(2·|E|) regardless of
+    * how hub-heavy the graph is, and the wedge join's cost Σ out-deg²
+    * is O(|E|^1.5) instead of the hub's degree squared. Each triangle
+    * has exactly one node with two out-edges under this orientation, so
+    * it is counted exactly once: wedges (v, w) from a common source are
+    * closed by probing the oriented edge v→w (a hash equi-join).
+    *
+    * Input edges may be directed/duplicated; they are canonicalized to
+    * distinct undirected (a < b) pairs first. Self-loops are dropped.
+    * Output: one row (n_nodes, n_edges, n_wedges, n_triangles).
+    */
   def triangleCount(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
     val canon = edges
@@ -618,20 +618,6 @@ object GraphOps {
             col("__dd").cast("double"), roundTo)).as("morans_i"))
   }
 
-  /** Global transitivity (clustering coefficient) of an undirected
-    * graph: 3·triangles / paths-of-length-2. On a near-dup candidate
-    * graph this is the audit behind the "cluster = transitive closure"
-    * assumption every connected-components dedup makes: transitivity
-    * near 1 means LSH components are genuine copy-families; low
-    * transitivity means chains of marginal pairs are welding unrelated
-    * documents into one cluster and the survivor policy will delete
-    * non-duplicates.
-    *
-    * Scale: triangles via [[triangleCount]]'s degree-oriented wedge
-    * join (O(E^1.5) under any skew); the path-2 denominator
-    * Σ deg·(deg−1)/2 is one extra hash agg over the SMALL edge list —
-    * both reduce to 1-row tables that merge as broadcasts.
-    */
   /** Degree assortativity of an undirected graph: the Pearson
     * correlation of endpoint degrees over all (symmetrized) edges
     * (Newman 2002). On a near-dup graph the sign reads the dup
@@ -717,6 +703,20 @@ object GraphOps {
       .agg(count(lit(1)).as("n_nodes"))
   }
 
+  /** Global transitivity (clustering coefficient) of an undirected
+    * graph: 3·triangles / paths-of-length-2. On a near-dup candidate
+    * graph this is the audit behind the "cluster = transitive closure"
+    * assumption every connected-components dedup makes: transitivity
+    * near 1 means LSH components are genuine copy-families; low
+    * transitivity means chains of marginal pairs are welding unrelated
+    * documents into one cluster and the survivor policy will delete
+    * non-duplicates.
+    *
+    * Scale: triangles via [[triangleCount]]'s degree-oriented wedge
+    * join (O(E^1.5) under any skew); the path-2 denominator
+    * Σ deg·(deg−1)/2 is one extra hash agg over the SMALL edge list —
+    * both reduce to 1-row tables that merge as broadcasts.
+    */
   def transitivity(edges: DataFrame, srcCol: String,
                    dstCol: String): DataFrame = {
     // EAGER localCheckpoint: the edge lineage (e.g. a full LSH

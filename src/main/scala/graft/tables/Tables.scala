@@ -20,7 +20,7 @@ object Tables {
     * read (it lists the directory and parses a footer, driver-side), a
     * schema-pinned read still pays ~8 ms of listing + relation
     * construction, and a reused analyzed DataFrame costs ~3 ms
-    * (graft.Profile, re-measured r14) — and every query re-reads its
+    * (measured r14) — and every query re-reads its
     * 1-3 base tables inside the bench's timed region, across 453
     * queries. A real deployment fronts these paths with a catalog
     * (Hive/Iceberg) whose table handle is O(1); this map is that
