@@ -37,17 +37,19 @@ object Sessions extends Logging {
     *    the tail queries into eviction storms (r12 fix; ~100 ms/GC).
     *    Known benign side effect: the minute-boundary GC clears
     *    weak-ref'd accumulators of already-released plans, so late
-    *    task-end events log "Failed to update accumulator" ERRORs —
-    *    log noise, not a correctness or timing hazard (diagnosed r14).
-    *    That one message is filtered out of DAGScheduler's log; every
-    *    other DAGScheduler ERROR still prints.
+    *    task-end events log "Failed to update accumulator" ERRORs
+    *    (DAGScheduler) and "Attempted to access garbage collected
+    *    accumulator" WARNs (AccumulatorContext) — log noise, not a
+    *    correctness or timing hazard (diagnosed r14). Those two
+    *    messages are filtered out of their loggers; every other line
+    *    of either logger still prints.
     *  - retention caps: the UI is off but the AppStatus listener still
     *    retains per-job/stage state for every query — dead driver heap
     *    the tail pays for in GC (r13 fix). Values are generous for any
     *    single query at any scale.
     */
   def bounded(b: SparkSession.Builder): SparkSession.Builder = {
-    accumulatorErrorFilter
+    accumulatorLogFilters
     b.config("spark.cleaner.periodicGC.interval", "1min")
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
@@ -55,22 +57,27 @@ object Sessions extends Logging {
       .config("spark.sql.ui.retainedExecutions", "50")
   }
 
-  /** Installed once per JVM: a DENY-on-match RegexFilter on the
-    * DAGScheduler logger, whose level stays inherited. Spark swaps in its
-    * own log4j configuration when its logging starts, so it is started
-    * before the filter is added. */
-  private lazy val accumulatorErrorFilter: Unit = {
+  /** Installed once per JVM: a DENY-on-match RegexFilter per (logger,
+    * message) pair, each logger's level left inherited. Spark swaps in
+    * its own log4j configuration when its logging starts, so it is
+    * started before the filters are added. */
+  private lazy val accumulatorLogFilters: Unit = {
     initializeLogIfNecessary(false)
-    val name = "org.apache.spark.scheduler.DAGScheduler"
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val cfg = ctx.getConfiguration
-    val lc = Option(cfg.getLoggers.get(name)).getOrElse {
-      val c = new LoggerConfig(name, null, true)
-      cfg.addLogger(name, c)
-      c
-    }
-    lc.addFilter(RegexFilter.createFilter("(?s)Failed to update accumulator .*",
-      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    Seq("org.apache.spark.scheduler.DAGScheduler" ->
+        "(?s)Failed to update accumulator .*",
+      "org.apache.spark.util.AccumulatorContext" ->
+        "(?s)Attempted to access garbage collected accumulator .*")
+      .foreach { case (name, regex) =>
+        val lc = Option(cfg.getLoggers.get(name)).getOrElse {
+          val c = new LoggerConfig(name, null, true)
+          cfg.addLogger(name, c)
+          c
+        }
+        lc.addFilter(RegexFilter.createFilter(regex, null, false,
+          Filter.Result.DENY, Filter.Result.NEUTRAL))
+      }
     ctx.updateLoggers()
   }
 }

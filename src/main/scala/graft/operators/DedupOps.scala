@@ -235,6 +235,32 @@ object DedupOps {
     crossOut.unionAll(within)
   }
 
+  /** Per-set distinct element array `__arr` and its size `__n` (long),
+    * one row per `idCol`: the compact table the exact overlap verify
+    * reads, so a candidate pair costs one array intersection instead
+    * of O(|set|) join rows.
+    */
+  private[operators] def setArrays(df: DataFrame, idCol: String,
+                                   elemCol: String): DataFrame =
+    df.groupBy(col(idCol))
+      .agg(collect_set(col(elemCol)).as("__arr"))
+      .withColumn("__n", size(col("__arr")).cast("long"))
+
+  /** Exact set-overlap verify of candidate pairs (doc_a, doc_b): joins
+    * the [[setArrays]] table `arr` onto both sides (`__aa`/`__na`,
+    * `__ab`/`__nb`) and adds `__c` = |A ∩ B| by codegen'd
+    * array_intersect. Each caller forms its own score and filter.
+    */
+  private[operators] def overlapVerify(pairs: DataFrame, arr: DataFrame,
+                                       idCol: String): DataFrame =
+    pairs
+      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
+        col("__n").as("__na")), "doc_a")
+      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
+        col("__n").as("__nb")), "doc_b")
+      .withColumn("__c",
+        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
+
   /** EXACT set-similarity join via prefix filtering (the PPJoin family):
     * all pairs with Jaccard ≥ t, no probabilistic recall. Each set
     * orders its elements rarest-first (global frequency, element string
@@ -263,9 +289,7 @@ object DedupOps {
     // to distinct sets, which is output-neutral — pigeonhole recall
     // holds under ANY shared total order). On a duplicate-heavy corpus
     // the candidate join never sees the g² within-family pair mass.
-    val arr0 = sets.groupBy(col(idCol))
-      .agg(collect_set(col(elemCol)).as("__arr"))
-      .withColumn("__n", size(col("__arr")).cast("long"))
+    val arr0 = setArrays(sets, idCol, elemCol)
     val grouped = collapseIdenticalSets(arr0, idCol)
     val arr = grouped.select(col("__gid").as(idCol), col("__arr"),
       col("__n"))
@@ -305,15 +329,7 @@ object DedupOps {
         lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >=
           lit(t) * (col("__na") + col("__nb")) / (lit(1) + lit(t)) - lit(1e-9))
       .select("doc_a", "doc_b").distinct()
-    // exact verify: codegen'd array intersection per candidate pair —
-    // no O(pairs × |set|) join rows
-    val repPairs = cand
-      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
-        col("__n").as("__na")), "doc_a")
-      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
-        col("__n").as("__nb")), "doc_b")
-      .withColumn("__c",
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
+    val repPairs = overlapVerify(cand, arr, idCol)
       .select(col("doc_a"), col("doc_b"),
         round(col("__c").cast("double") /
           (col("__na") + col("__nb") - col("__c")), 6).as("jaccard"))
@@ -382,24 +398,14 @@ object DedupOps {
     // J = round(n/n, 6) = 1.0). On a duplicate-heavy corpus — the
     // corpus dedup actually runs on — the banded join never sees the
     // g² within-family candidate mass.
-    val arr0 = sh.groupBy(col(idCol))
-      .agg(collect_set(col("shingle")).as("__arr"))
-      .withColumn("__n", size(col("__arr")).cast("long"))
+    val arr0 = setArrays(sh, idCol, "shingle")
     val grouped = collapseIdenticalSets(arr0, idCol)
     val arr = grouped.select(col("__gid").as(idCol), col("__arr"),
       col("__n"))
     val repSh = arr.select(col(idCol), explode(col("__arr")).as("shingle"))
     val cand = minhashCandidates(
       minhashSignature(repSh, idCol, bands, rows), idCol, bands, rows)
-    // exact verify over the compact per-rep array with codegen'd
-    // array_intersect — never O(pairs × |doc|) join rows
-    val repPairs = cand
-      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
-        col("__n").as("__na")), "doc_a")
-      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
-        col("__n").as("__nb")), "doc_b")
-      .withColumn("__c",
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
+    val repPairs = overlapVerify(cand, arr, idCol)
       // the 4-hex band slices are 16-bit hashes — DISJOINT docs can
       // collide into a shared bucket; the verify's job is to kill that
       // noise, so zero-overlap candidates are dropped, not reported as
@@ -759,17 +765,8 @@ object DedupOps {
                    bands: Int = 4, rows: Int = 2): DataFrame = {
     val cand = minhashCandidates(
       minhashSignature(sh, idCol, bands, rows), idCol, bands, rows)
-    val arr = sh.groupBy(col(idCol))
-      .agg(collect_set(col("shingle")).as("__arr"))
-      .withColumn("__n", size(col("__arr")).cast("long"))
-      .localCheckpoint(false)
-    cand
-      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
-        col("__n").as("__na")), "doc_a")
-      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
-        col("__n").as("__nb")), "doc_b")
-      .withColumn("__c",
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
+    val arr = setArrays(sh, idCol, "shingle").localCheckpoint(false)
+    overlapVerify(cand, arr, idCol)
       .filter(col("__c") > 0)
       .withColumn("__u", col("__na") + col("__nb") - col("__c"))
       .withColumn("__mn", least(col("__na"), col("__nb")))
@@ -1009,47 +1006,25 @@ object DedupOps {
       .localCheckpoint(false)
     val cand = minhashCandidates(sig, idCol, 4, 2)
     val slices = for (b <- 0 until 4; r <- 0 until 2) yield s"h_${b}_$r"
-    val arr = sh.groupBy(col(idCol))
-      .agg(collect_set(col("shingle")).as("__arr"))
-      .withColumn("__ns", size(col("__arr")).cast("long"))
-      .localCheckpoint(false)
+    val arr = setArrays(sh, idCol, "shingle").localCheckpoint(false)
     def side(tag: String) = sig.select(
       col(idCol).as(s"doc_$tag") +: slices.map(c => col(c).as(s"${c}_$tag")): _*)
     val matches = slices.map(c =>
       (col(s"${c}_a") === col(s"${c}_b")).cast("int"))
-    val pairs = cand
-      .join(side("a"), "doc_a").join(side("b"), "doc_b")
-      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
-        col("__ns").as("__na")), "doc_a")
-      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
-        col("__ns").as("__nb")), "doc_b")
-      .withColumn("__c",
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
+    val pairs = overlapVerify(
+        cand.join(side("a"), "doc_a").join(side("b"), "doc_b"), arr, idCol)
       .withColumn("__j", col("__c").cast("double") /
         (col("__na") + col("__nb") - col("__c")))
       .withColumn("__m", array(matches: _*))
       .select(col("__j"), col("__m"))
       // the bounded pair table feeds one explode per h in `hs`.
       .localCheckpoint(false)
-    pairs.select(col("__j"), col("__m"),
-        explode(typedLit(hs)).as("n_hashes"))
-      .withColumn("__est",
-        expr("CAST(aggregate(slice(__m, 1, n_hashes), 0, (a, x) -> a + x) " +
-          "AS DOUBLE) / n_hashes")
-      )
-      .withColumn("__err",
-        round(col("__est") - col("__j"), 12).cast("decimal(38,12)"))
-      .withColumn("__abs",
-        round(abs(col("__est") - col("__j")), 12).cast("decimal(38,12)"))
-      .groupBy(col("n_hashes").cast("long").as("n_hashes"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("__abs")).as("__sa"),
-        sum(col("__err")).as("__se"))
-      .select(col("n_hashes"), col("n_pairs"),
-        round(col("__sa").cast("double") / col("n_pairs"), 6)
-          .as("mae"),
-        MetricOps.normZero(
-          round(col("__se").cast("double") / col("n_pairs"), 6))
-          .as("bias"))
+    MetricOps.fidelitySummary(
+      pairs.select(col("__j"), col("__m"),
+          explode(typedLit(hs)).as("n_hashes"))
+        .withColumn("__est", expr("CAST(aggregate(slice(__m, 1, n_hashes), " +
+          "0, (a, x) -> a + x) AS DOUBLE) / n_hashes")),
+      "n_hashes", "n_hashes", col("__est"), col("__j"))
   }
 
   /** Near-dup cluster source-purity report: connected components over
@@ -1479,19 +1454,10 @@ object DedupOps {
         col(s"h_${b}_${r}_a") === col(s"h_${b}_${r}_b"))
         .reduce(_ && _).cast("int")
     }.reduce(_ + _)
-    val arr = sh.groupBy(col(idCol))
-      .agg(collect_set(col("shingle")).as("__arr"))
-      .withColumn("__ns", size(col("__arr")).cast("long"))
-      .localCheckpoint(false)
-    cand
-      .join(side("a"), "doc_a").join(side("b"), "doc_b")
-      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
-        col("__ns").as("__na")), "doc_a")
-      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
-        col("__ns").as("__nb")), "doc_b")
+    val arr = setArrays(sh, idCol, "shingle").localCheckpoint(false)
+    overlapVerify(
+        cand.join(side("a"), "doc_a").join(side("b"), "doc_b"), arr, idCol)
       .withColumn("__bands", bandAgree)
-      .withColumn("__c",
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
       .withColumn("__j", col("__c").cast("double") /
         (col("__na") + col("__nb") - col("__c")))
       .groupBy(col("__bands").cast("long").as("n_bands"))
@@ -1537,20 +1503,12 @@ object DedupOps {
     // the set; the signature's per-slice min is order-independent) —
     // instead of re-running split/transform/explode/distinct over the
     // corpus a second time.
-    val arr = shingles(df, idCol, textCol).groupBy(col(idCol))
-      .agg(collect_set(col("shingle")).as("__arr"))
-      .withColumn("__n", size(col("__arr")).cast("long"))
+    val arr = setArrays(shingles(df, idCol, textCol), idCol, "shingle")
       .localCheckpoint(false)
     val sh = arr.select(col(idCol), explode(col("__arr")).as("shingle"))
     val cand = minhashCandidates(
       minhashSignature(sh, idCol, 4, 2), idCol, 4, 2)
-    val mh = cand
-      .join(arr.select(col(idCol).as("doc_a"), col("__arr").as("__aa"),
-        col("__n").as("__na")), "doc_a")
-      .join(arr.select(col(idCol).as("doc_b"), col("__arr").as("__ab"),
-        col("__n").as("__nb")), "doc_b")
-      .withColumn("__c",
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long"))
+    val mh = overlapVerify(cand, arr, idCol)
       .filter(col("__c") * 3 >= col("__na") + col("__nb"))
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val sp = simhashNearDup(df, idCol, textCol, maxHamming)

@@ -331,21 +331,37 @@ object GraphOps {
     * Output: one row (n_nodes, n_edges, n_wedges, n_triangles).
     */
   def triangleCount(edges: DataFrame, srcCol: String,
-                    dstCol: String): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
+                    dstCol: String): DataFrame =
+    triangleCensus(canonicalEdges(edges, srcCol, dstCol)
+      .localCheckpoint(true)) // degrees + orientation + probe reuse it
+
+  /** Distinct undirected edges as (a, b) with a < b; self-loops are
+    * dropped. The canonical edge table of every undirected-graph
+    * statistic here; callers that read it more than once checkpoint it.
+    */
+  private[operators] def canonicalEdges(edges: DataFrame, srcCol: String,
+                                        dstCol: String): DataFrame =
+    edges.select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true) // degrees + orientation + probe reuse it
+      .filter(col("a") =!= col("b")).distinct()
+
+  /** The degree-ordered wedge core over canonical edges (a < b): the
+    * degree table (node, degree), the oriented edges (src, dst), each
+    * directed from its lower-(degree, id) endpoint and checkpointed
+    * eagerly, and the wedges (src, v, w), v < w, two out-edges of one
+    * source. Under this orientation every triangle is exactly one
+    * wedge closed by the edge (v, w).
+    */
+  private[operators] def orientedWedges(
+      canon: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("__deg"))
+      .groupBy("node").agg(count(lit(1)).as("degree"))
     // orient low → high by (degree, id); broadcast is NOT used for deg
     // (O(|nodes|) rows) — both joins shuffle on the node key
     val withDeg = canon
-      .join(deg.select(col("node").as("a"), col("__deg").as("__da")), "a")
-      .join(deg.select(col("node").as("b"), col("__deg").as("__db")), "b")
+      .join(deg.select(col("node").as("a"), col("degree").as("__da")), "a")
+      .join(deg.select(col("node").as("b"), col("degree").as("__db")), "b")
     val oriented = withDeg.select(
         when(col("__da") < col("__db") ||
           (col("__da") === col("__db") && col("a") < col("b")),
@@ -356,6 +372,12 @@ object GraphOps {
     val wedges = oriented.select(col("src"), col("dst").as("v"))
       .join(oriented.select(col("src"), col("dst").as("w")), Seq("src"))
       .filter(col("v") < col("w"))
+    (deg, oriented, wedges)
+  }
+
+  /** [[triangleCount]]'s census over an already canonical edge table. */
+  private[operators] def triangleCensus(canon: DataFrame): DataFrame = {
+    val (deg, oriented, wedges) = orientedWedges(canon)
     // one pass over the wedge stream: a left probe against the (unique)
     // canonical edge set marks closed wedges, and a single aggregate
     // counts both — the O(E^1.5) wedge join used to be evaluated twice
@@ -366,11 +388,11 @@ object GraphOps {
       .withColumn("__closed", lit(1))
     val wstats = wedges.join(probe, Seq("v", "w"), "left")
       .agg(count(lit(1)).as("n_wedges"), count(col("__closed")).as("n_triangles"))
-    val stats = canon.agg(count(lit(1)).as("n_edges"))
+    canon.agg(count(lit(1)).as("n_edges"))
       .crossJoin(deg.agg(count(lit(1)).as("n_nodes")))
       .crossJoin(wstats)
-    stats.select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-      col("n_triangles"))
+      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
+        col("n_triangles"))
   }
 
   /** First-order Markov transition matrix over per-entity ordered event
@@ -442,28 +464,9 @@ object GraphOps {
     */
   def localClustering(edges: DataFrame, srcCol: String, dstCol: String,
                       roundTo: Int = 6): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .localCheckpoint(true) // degrees + orientation + probe reuse it
-    val deg = canon.select(col("a").as("node"))
-      .unionAll(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
-    val withDeg = canon
-      .join(deg.select(col("node").as("a"), col("degree").as("__da")), "a")
-      .join(deg.select(col("node").as("b"), col("degree").as("__db")), "b")
-    val oriented = withDeg.select(
-        when(col("__da") < col("__db") ||
-          (col("__da") === col("__db") && col("a") < col("b")),
-          struct(col("a").as("src"), col("b").as("dst")))
-        .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true)
-    val wedges = oriented.select(col("src"), col("dst").as("v"))
-      .join(oriented.select(col("src"), col("dst").as("w")), Seq("src"))
-      .filter(col("v") < col("w"))
+    val (deg, _, wedges) = orientedWedges(canon)
     val triangles = wedges
       .join(canon.select(col("a").as("v"), col("b").as("w")),
         Seq("v", "w"), "left_semi")
@@ -498,11 +501,7 @@ object GraphOps {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  topK: Int, maxDegree: Int = 64,
                  roundTo: Int = 6): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .localCheckpoint(true) // adjacency + degree + anti-probe reuse it
     val und = canon.select(col("a").as("w"), col("b").as("nb"))
       .unionAll(canon.select(col("b").as("w"), col("a").as("nb")))
@@ -541,11 +540,7 @@ object GraphOps {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame, nodeCol: String, labelCol: String,
                  roundTo: Int = 6): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
     val lab = labels.select(col(nodeCol).as("__node"),
       col(labelCol).as("__lab"))
     val tagged = canon
@@ -634,11 +629,7 @@ object GraphOps {
     */
   def assortativity(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .localCheckpoint(true) // degrees + both endpoint joins read it
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
@@ -720,16 +711,11 @@ object GraphOps {
   def transitivity(edges: DataFrame, srcCol: String,
                    dstCol: String): DataFrame = {
     // EAGER localCheckpoint: the edge lineage (e.g. a full LSH
-    // verify) must compute once — triangleCount and the degree pass
-    // both read it; triangleCount's internal re-canonicalization is
-    // idempotent on the already-canonical table.
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    // verify) must compute once — the triangle census and the degree
+    // pass both read it, and the census runs on this table as is.
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .localCheckpoint(true)
-    val tc = triangleCount(canon, "a", "b")
+    val tc = triangleCensus(canon)
     val paths = canon
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("__deg"))

@@ -31,6 +31,26 @@ object MetricOps {
   private[operators] def normZero(c: Column): Column =
     when(c === 0.0, lit(0.0)).otherwise(c)
 
+  /** Fidelity summary of an estimate against its exact value, per
+    * `keyCol` (cast to long, output as `keyName`): n_pairs, the mean
+    * absolute error `mae` and the signed mean error `bias`, both at
+    * 6 dp. Per-row error terms snap to 12 dp and sum as DECIMAL(38,12),
+    * so the means reproduce across engines and partitionings; `bias`
+    * is [[normZero]]'d.
+    */
+  private[operators] def fidelitySummary(df: DataFrame, keyCol: String,
+                                         keyName: String, est: Column,
+                                         exact: Column): DataFrame =
+    df.withColumn("__err", round(est - exact, 12).cast("decimal(38,12)"))
+      .withColumn("__abs", round(abs(est - exact), 12).cast("decimal(38,12)"))
+      .groupBy(col(keyCol).cast("long").as(keyName))
+      .agg(count(lit(1)).as("n_pairs"), sum(col("__abs")).as("__sa"),
+        sum(col("__err")).as("__se"))
+      .select(col(keyName), col("n_pairs"),
+        round(col("__sa").cast("double") / col("n_pairs"), 6).as("mae"),
+        normZero(round(col("__se").cast("double") / col("n_pairs"), 6))
+          .as("bias"))
+
   /** Global tie-broken rank per row, distributed (see object doc).
     * Output adds `r` = 1-based rank by (score, tiebreak).
     *

@@ -320,9 +320,27 @@ object SimilarityOps {
   }
 
   /** The [[hammingProbes]] cell ids of each row's `bucket`, as an array. */
-  private def probeCells(signBits: Int, radius: Int): Column =
+  private[operators] def probeCells(signBits: Int, radius: Int): Column =
     expr(hammingProbes(signBits, radius)
       .map(p => s"CAST(bucket AS INT) ^ ${p._1}").mkString("array(", ", ", ")"))
+
+  /** Hamming-≤1 probe pairs of a bucketed signature table `n` (id,
+    * emb, nrm, bucket): side a explodes its [[probeCells]], side b
+    * keeps its own cell, one equi-join on the cell. Columns come out as
+    * id_a/id_b, a_emb/b_emb, a_nrm/b_nrm, plus each of `extra` as
+    * `<c>_a`/`<c>_b`. Only side a explodes, so a pair meets on exactly
+    * one cell — the stream is duplicate-free. Each caller applies its
+    * own pair filter.
+    */
+  private[operators] def probePairs(n: DataFrame, signBits: Int,
+                                    extra: Seq[String]): DataFrame = {
+    def side(tag: String, cell: Column) = n.select(Seq(
+        col("id").as(s"id_$tag"), col("emb").as(s"${tag}_emb"),
+        col("nrm").as(s"${tag}_nrm")) ++
+      extra.map(c => col(c).as(s"${c}_$tag")) :+ cell: _*)
+    side("a", explode(probeCells(signBits, 1)).as("bucket"))
+      .join(side("b", col("bucket")), "bucket")
+  }
 
   /** The sign-bucket ANN body behind [[annTopK]] (radius 0),
     * [[annTopKMultiProbe]] (1) and [[annTopKMultiProbe2]] (2): the
@@ -415,11 +433,9 @@ object SimilarityOps {
         expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("emb"))
       .withColumn("nrm", sqrt(dot("emb", "emb")))
       .withColumn("bucket", signBucket(signBits))
-    val h1 = (0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}")
-    val probes = expr(s"array(bucket, ${h1.mkString(", ")})")
     val a = n.select(col("id").as("vec_id"), col("lbl").as("a_lbl"),
       col("emb").as("a_emb"), col("nrm").as("a_nrm"),
-      explode(probes).as("bucket"))
+      explode(probeCells(signBits, 1)).as("bucket"))
     val b = n.select(col("id").as("neighbor_id"), col("lbl").as("b_lbl"),
       col("emb").as("b_emb"), col("nrm").as("b_nrm"), col("bucket"))
     val pairs = a.join(b, "bucket")
@@ -507,14 +523,8 @@ object SimilarityOps {
     */
   def randomProjection(df: DataFrame, idCol: String, embCol: String,
                        inDim: Int, outDim: Int): DataFrame = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def sign(i: Int, j: Int): Double = {
-      val h = md.digest(s"$i:$j".getBytes("UTF-8"))
-      // first hex char < '8' ⇔ top nibble < 8 ⇔ top bit of byte 0 clear
-      if ((h(0) & 0x80) == 0) 1.0 else -1.0
-    }
     val cols = (0 until outDim).map { j =>
-      val sArr = array((0 until inDim).map(i => lit(sign(i, j))): _*)
+      val sArr = array((0 until inDim).map(i => lit(srpSign(i, j).toDouble)): _*)
       val terms = zip_with(col(embCol).cast("array<double>"), sArr,
         (x, y) => round(x * y, 8).cast("decimal(20,8)"))
       val dotSum = aggregate(terms, lit(0).cast("decimal(28,8)"),
@@ -522,6 +532,17 @@ object SimilarityOps {
       round(dotSum.cast("double") / math.sqrt(outDim.toDouble), 4).as(s"p$j")
     }
     df.select(col(idCol) +: cols: _*)
+  }
+
+  /** The ±1 sign s(i, j) of input dim i on random hyperplane j: md5 of
+    * "i:j", +1 iff the digest's first hex char is < '8' (top bit of
+    * byte 0 clear). Configuration, not data: every engine and run
+    * derives the same matrix.
+    */
+  private[operators] def srpSign(i: Int, j: Int): Int = {
+    val h = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$i:$j".getBytes("UTF-8"))
+    if ((h(0) & 0x80) == 0) 1 else -1
   }
 
   /** Product quantization: split each vector into `m` contiguous
@@ -675,6 +696,37 @@ object SimilarityOps {
       .withColumn("cnrm", sqrt(expr("graft_dot(cent, cent)")))
       .drop("__dc")
 
+  /** [[semDedup]]'s pair stage, shared with [[semDedupSweep]]: the
+    * signature table `j` (id, bucket, emb, nrm, s2c — each vector's
+    * cosine to its sign bucket's [[centroidArrays]] centroid), lazily
+    * checkpointed for both pair sides and the caller's own read, and
+    * the bucket-mate pairs (vec_id, __oid) where __oid out-keeps vec_id:
+    * strictly lower centroid similarity, ties to the smaller id.
+    */
+  private[operators] def outKeptPairs(
+      df: DataFrame, idCol: String, embCol: String,
+      signBits: Int): (DataFrame, DataFrame) = {
+    val n = normalized(df, idCol, embCol)
+      .withColumn("bucket", signBucket(signBits))
+    val cent = centroidArrays(n, "bucket")
+    val j = n.join(broadcast(cent), Seq("bucket"))
+      .withColumn("s2c",
+        expr("graft_dot(emb, cent)") / (col("nrm") * col("cnrm")))
+      .select(col("id"), col("bucket"), col("emb"), col("nrm"),
+        col("s2c"))
+      .localCheckpoint(false)
+    val a = j.select(col("id").as("vec_id"), col("bucket"),
+      col("emb").as("a_emb"), col("nrm").as("a_nrm"),
+      col("s2c").as("a_s"))
+    val b = j.select(col("id").as("__oid"), col("bucket"),
+      col("emb").as("b_emb"), col("nrm").as("b_nrm"),
+      col("s2c").as("b_s"))
+    (j, a.join(b, Seq("bucket"))
+      .filter(col("vec_id") =!= col("__oid"))
+      .filter(col("b_s") < col("a_s") ||
+        (col("b_s") === col("a_s") && col("__oid") < col("vec_id"))))
+  }
+
   /** SemDeDup (Abbas et al. 2023): semantic deduplication inside
     * coarse embedding clusters. Vectors are bucketed by the sign-bit
     * quantizer, each bucket gets a 6 dp-pinned centroid, and within a
@@ -693,28 +745,10 @@ object SimilarityOps {
     */
   def semDedup(df: DataFrame, idCol: String, embCol: String,
                tau: Double, signBits: Int = 4): DataFrame = {
-    val n = normalized(df, idCol, embCol)
-      .withColumn("bucket", signBucket(signBits))
-    val cent = centroidArrays(n, "bucket")
-    val j = n.join(broadcast(cent), Seq("bucket"))
-      .withColumn("s2c",
-        expr("graft_dot(emb, cent)") / (col("nrm") * col("cnrm")))
-      .select(col("id"), col("bucket"), col("emb"), col("nrm"),
-        col("s2c"))
-      // LAZY localCheckpoint: both pair sides + the final projection.
-      .localCheckpoint(false)
-    val a = j.select(col("id").as("vec_id"), col("bucket"),
-      col("emb").as("a_emb"), col("nrm").as("a_nrm"),
-      col("s2c").as("a_s"))
-    val b = j.select(col("id").as("__oid"), col("bucket"),
-      col("emb").as("b_emb"), col("nrm").as("b_nrm"),
-      col("s2c").as("b_s"))
-    val dup = a.join(b, Seq("bucket"))
-      .filter(col("vec_id") =!= col("__oid"))
+    val (j, outKept) = outKeptPairs(df, idCol, embCol, signBits)
+    val dup = outKept
       .filter(expr("graft_dot(a_emb, b_emb)") /
         (col("a_nrm") * col("b_nrm")) > tau)
-      .filter(col("b_s") < col("a_s") ||
-        (col("b_s") === col("a_s") && col("__oid") < col("vec_id")))
       .select(col("vec_id")).distinct()
       .withColumn("__d", lit(1L))
     j.join(dup, col("id") === col("vec_id"), "left")
@@ -904,26 +938,8 @@ object SimilarityOps {
                     signBits: Int = 4,
                     tausPct: Seq[Int] =
                       Seq(20, 30, 40, 50, 60, 70, 80)): DataFrame = {
-    val n = normalized(df, idCol, embCol)
-      .withColumn("bucket", signBucket(signBits))
-    val cent = centroidArrays(n, "bucket")
-    val j = n.join(broadcast(cent), Seq("bucket"))
-      .withColumn("s2c",
-        expr("graft_dot(emb, cent)") / (col("nrm") * col("cnrm")))
-      .select(col("id"), col("bucket"), col("emb"), col("nrm"),
-        col("s2c"))
-      // LAZY localCheckpoint: both pair sides and the vector total.
-      .localCheckpoint(false)
-    val a = j.select(col("id").as("vec_id"), col("bucket"),
-      col("emb").as("a_emb"), col("nrm").as("a_nrm"),
-      col("s2c").as("a_s"))
-    val b = j.select(col("id").as("__oid"), col("bucket"),
-      col("emb").as("b_emb"), col("nrm").as("b_nrm"),
-      col("s2c").as("b_s"))
-    val m = a.join(b, Seq("bucket"))
-      .filter(col("vec_id") =!= col("__oid"))
-      .filter(col("b_s") < col("a_s") ||
-        (col("b_s") === col("a_s") && col("__oid") < col("vec_id")))
+    val (j, outKept) = outKeptPairs(df, idCol, embCol, signBits)
+    val m = outKept
       .withColumn("__sim", expr("graft_dot(a_emb, b_emb)") /
         (col("a_nrm") * col("b_nrm")))
       .groupBy(col("vec_id")).agg(max(col("__sim")).as("__ms"))
@@ -1083,76 +1099,20 @@ object SimilarityOps {
                   signBits: Int = 4): DataFrame = {
     require(widths.forall(w => w > 0 && (w & (w - 1)) == 0),
       "widths must be powers of two so h/w stays exact")
-    val maxW = widths.max
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def sign(i: Int, j: Int): Double = {
-      val h = md.digest(s"$i:$j".getBytes("UTF-8"))
-      if ((h(0) & 0x80) == 0) 1.0 else -1.0
-    }
-    // bits pack into ONE int mask per vector, so the per-pair Hamming
-    // is a codegen'd bit_count(xor) — no array work ever runs on the
-    // pair stream. The projection itself is RELATIONAL: posexplode the
-    // vector once, broadcast-join the inDim×maxW sign table, and
-    // hash-aggregate the 8-dp DECIMAL terms per (vector, plane) — a
-    // giant literal sign matrix inlined per plane costs seconds of
-    // codegen compilation per run, while this shape is three cheap
-    // codegen'd operators (and the (id, plane) agg is exactly how the
-    // signature pass distributes at 100 TB).
-    val sess = df.sparkSession
-    import sess.implicits._
-    // sign table pivoted WIDE (one plane-array per dimension): the
-    // per-(vector, dim) stream joins it broadcast and feeds ONE hash
-    // agg computing all maxW plane sums at once — no (vector, plane)
-    // row expansion, no second shuffle
-    val signDf = broadcast((0 until inDim).map(i =>
-      (i, (0 until maxW).map(j => if (sign(i, j) > 0) 1L else -1L)))
-      .toDF("__i", "__ss"))
-    // hash-spread the vectors BEFORE the dim explode: the maxW-plane
-    // partial agg is the expensive step, and a single parquet input
-    // split would otherwise run it on one thread
+    // hash-spread before the masks (see srpMasks)
     val base = normalized(df, idCol, embCol).repartition(col("id"))
-    // ONE exact 1e8-scaled long per (vector, dim), then pure long
-    // multiply/sum across all maxW planes (was maxW DECIMAL(20,8)
-    // round+multiply+sum per row — 16× the decimal work for identical
-    // integers): signs are ±1 and round-HALF-UP is odd-symmetric, so
-    // round(x·s, 8) = s·round(x, 8) exactly, and the scaled long sum
-    // is > 0 iff the decimal sum is > 0 — bit-identical masks.
-    val planeSums = (0 until maxW).map(j =>
-      sum(col("__xl") * element_at(col("__ss"), j + 1)).as(s"__p$j"))
-    val masks = base
-      .select(col("id"), posexplode(col("emb")).as(Seq("__i", "__x")))
-      .withColumn("__xl", (round(col("__x"), 8).cast("decimal(20,8)") *
-        lit(100000000L)).cast("long"))
-      .join(signDf, "__i")
-      .groupBy(col("id"))
-      .agg(planeSums.head, planeSums.tail: _*)
-      .select(col("id"), (0 until maxW).map(j =>
-        when(col(s"__p$j") > 0, lit(1 << j)).otherwise(lit(0)))
-        .reduce(_ + _).cast("int").as("__mask"))
-    val n = base.join(masks, Seq("id"))
+    val n = base.join(srpMasks(base, widths.max, inDim, "__mask"), Seq("id"))
       .withColumn("bucket", signBucket(signBits))
       // LAZY localCheckpoint: both sides of the candidate join read
       // the signature table (masks computed once, not once per side).
       .localCheckpoint(false)
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
-    val a = n.select(col("id").as("id_a"), col("emb").as("a_emb"),
-      col("nrm").as("a_nrm"), col("__mask").as("__ma"),
-      explode(probes).as("bucket"))
-    val b = n.select(col("id").as("id_b"), col("emb").as("b_emb"),
-      col("nrm").as("b_nrm"), col("__mask").as("__mb"), col("bucket"))
-    // No distinct needed: only the a-side explodes probes, so a pair
-    // (x, y) with Hamming-h buckets (h ≤ 1) matches on exactly ONE
-    // probe cell — the candidate stream is duplicate-free by
-    // construction and flows straight into the width explode without
-    // a wide shuffle or materialization.
-    val pairs = a.join(b, "bucket")
+    val pairs = probePairs(n, signBits, Seq("__mask"))
       // norm guards keep NaN sims (zero vectors) out of the DECIMAL
       // error terms
       .filter(col("id_a") < col("id_b") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
       .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-      .withColumn("__x", expr("__ma ^ __mb"))
+      .withColumn("__x", expr("__mask_a ^ __mask_b"))
     val cosTable: Int => Column = w =>
       array((0 to w).map(h => lit(Math.cos(Math.PI * h / w))): _*)
     val est = widths.map(w => (w, cosTable(w))).foldLeft(lit(null).cast("double")) {
@@ -1165,22 +1125,52 @@ object SimilarityOps {
       struct(lit(w).as("w"),
         expr(s"CAST(bit_count(__x & ${(1 << w) - 1}) AS INT)")
           .as("h"))): _*)
-    pairs
-      .select(col("sim"), explode(whArr).as("wh"))
-      .select(col("sim"), col("wh.w").as("w"), col("wh.h").as("__h"))
-      .withColumn("__est", est)
-      .withColumn("__err", round(col("__est") - col("sim"), 12)
-        .cast("decimal(38,12)"))
-      .withColumn("__abs", round(abs(col("__est") - col("sim")), 12)
-        .cast("decimal(38,12)"))
-      .groupBy(col("w").cast("long").as("width"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("__abs")).as("__sa"),
-        sum(col("__err")).as("__se"))
-      .select(col("width"), col("n_pairs"),
-        round(col("__sa").cast("double") / col("n_pairs"), 6).as("mae"),
-        MetricOps.normZero(
-          round(col("__se").cast("double") / col("n_pairs"), 6))
-          .as("bias"))
+    MetricOps.fidelitySummary(
+      pairs
+        .select(col("sim"), explode(whArr).as("wh"))
+        .select(col("sim"), col("wh.w").as("w"), col("wh.h").as("__h"))
+        .withColumn("__est", est),
+      "w", "width", col("__est"), col("sim"))
+  }
+
+  /** Packed SRP sign mask per vector of `vecs` (id, emb): bit j is set
+    * iff the projection on [[srpSign]] plane j is > 0, for `planes`
+    * planes over `inDim` dims — one int per vector, so a pair's
+    * Hamming distance is a codegen'd bit_count(xor). Callers
+    * hash-spread `vecs` on id first: the per-vector plane aggregate is
+    * the expensive stage, and one input split would run it on one
+    * thread; the aggregate then needs no exchange of its own.
+    *
+    * The projection is RELATIONAL: posexplode each vector once,
+    * broadcast-join the sign table pivoted WIDE (one plane-array per
+    * dimension), and ONE hash agg sums all planes per vector — no
+    * (vector, plane) row expansion, and no giant literal sign matrix
+    * inlined per plane (seconds of codegen compilation per run). Each
+    * component becomes ONE exact 1e8-scaled long, then pure long
+    * multiply/sum across the planes: signs are ±1 and round-HALF-UP is
+    * odd-symmetric, so round(x·s, 8) = s·round(x, 8) exactly, and the
+    * scaled long sum is > 0 iff the DECIMAL sum of round(x·s, 8) terms
+    * is > 0 — the masks are bit-identical to the 8-dp DECIMAL form.
+    */
+  private[operators] def srpMasks(vecs: DataFrame, planes: Int,
+                                  inDim: Int, maskCol: String): DataFrame = {
+    val sess = vecs.sparkSession
+    import sess.implicits._
+    val signDf = broadcast((0 until inDim).map(i =>
+      (i, (0 until planes).map(j => srpSign(i, j).toLong)))
+      .toDF("__i", "__ss"))
+    val planeSums = (0 until planes).map(j =>
+      sum(col("__xl") * element_at(col("__ss"), j + 1)).as(s"__p$j"))
+    vecs
+      .select(col("id"), posexplode(col("emb")).as(Seq("__i", "__x")))
+      .withColumn("__xl", (round(col("__x"), 8).cast("decimal(20,8)") *
+        lit(100000000L)).cast("long"))
+      .join(signDf, "__i")
+      .groupBy(col("id"))
+      .agg(planeSums.head, planeSums.tail: _*)
+      .select(col("id"), (0 until planes).map(j =>
+        when(col(s"__p$j") > 0, lit(1 << j)).otherwise(lit(0)))
+        .reduce(_ + _).cast("int").as(maskCol))
   }
 
   /** Matryoshka (prefix-dimension) fidelity audit: over the
@@ -1213,18 +1203,8 @@ object SimilarityOps {
       // LAZY localCheckpoint: both sides of the candidate join read
       // the (emb, norms, bucket) signature table.
       .localCheckpoint(false)
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
-    def side(tag: String, probe: Boolean) = {
-      val cols = Seq(col("id").as(s"id_$tag"), col("emb").as(s"${tag}_emb"),
-        col("nrm").as(s"${tag}_nrm")) ++
-        dims.map(d => col(s"__n$d").as(s"__n${d}_$tag")) :+
-        (if (probe) explode(probes).as("bucket") else col("bucket"))
-      n.select(cols: _*)
-    }
     val minD = dims.head
-    val pairs = side("a", probe = true)
-      .join(side("b", probe = false), "bucket")
+    val pairs = probePairs(n, signBits, dims.map(d => s"__n$d"))
       .filter(col("id_a") < col("id_b") &&
         col(s"__n${minD}_a") > 0 && col(s"__n${minD}_b") > 0)
       .withColumn("sim",
@@ -1235,25 +1215,15 @@ object SimilarityOps {
       struct(lit(d).as("d"),
         (expr(s"graft_dot_range(a_emb, b_emb, 1, $d)") /
           (col(s"__n${d}_a") * col(s"__n${d}_b"))).as("s"))): _*)
-    pairs.select(col("sim"), explode(dimArr).as("ds"))
-      .select(col("sim"), col("ds.d").as("d"), col("ds.s").as("__sd"))
-      // Embeddings shorter than a requested dim d yield a null prefix
-      // dot (graft_dot_range window-exceeds contract). Drop the row —
-      // otherwise the DECIMAL error sums skip it but count(1) still
-      // counts it, silently deflating mae/bias. Mirrors quantFidelity.
-      .filter(col("__sd").isNotNull)
-      .withColumn("__err", round(col("__sd") - col("sim"), 12)
-        .cast("decimal(38,12)"))
-      .withColumn("__abs", round(abs(col("__sd") - col("sim")), 12)
-        .cast("decimal(38,12)"))
-      .groupBy(col("d").cast("long").as("dim"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("__abs")).as("__sa"),
-        sum(col("__err")).as("__se"))
-      .select(col("dim"), col("n_pairs"),
-        round(col("__sa").cast("double") / col("n_pairs"), 6).as("mae"),
-        MetricOps.normZero(
-          round(col("__se").cast("double") / col("n_pairs"), 6))
-          .as("bias"))
+    MetricOps.fidelitySummary(
+      pairs.select(col("sim"), explode(dimArr).as("ds"))
+        .select(col("sim"), col("ds.d").as("d"), col("ds.s").as("__sd"))
+        // Embeddings shorter than a requested dim d yield a null prefix
+        // dot (graft_dot_range window-exceeds contract). Drop the row —
+        // otherwise the DECIMAL error sums skip it but count(1) still
+        // counts it, silently deflating mae/bias. Mirrors quantFidelity.
+        .filter(col("__sd").isNotNull),
+      "d", "dim", col("__sd"), col("sim"))
   }
 
   /** Scalar-quantization similarity fidelity: over the multi-probe
@@ -1271,36 +1241,12 @@ object SimilarityOps {
   def quantFidelity(df: DataFrame, idCol: String, embCol: String,
                     levels: Seq[Int] = Seq(15, 255),
                     signBits: Int = 4): DataFrame = {
-    val n0 = normalized(df, idCol, embCol)
-      .withColumn("__mn", array_min(col("emb")))
-      .withColumn("__mx", array_max(col("emb")))
-    val n = levels.foldLeft(n0) { (acc, l) =>
-        acc.withColumn(s"__r$l", expr(
-          s"""transform(emb, x -> CAST(round((x - __mn) /
-             |  (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
-             |        ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END))
-             |  AS INT)
-             |  * (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
-             |     ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END)
-             |  + __mn)""".stripMargin))
-          .withColumn(s"__q$l", sqrt(expr(s"graft_dot(__r$l, __r$l)")))
-      }
+    val n = quantReconstructions(normalized(df, idCol, embCol), levels)
       .withColumn("bucket", signBucket(signBits))
       // LAZY localCheckpoint: reconstructions build once, both join
       // sides read them.
       .localCheckpoint(false)
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
-    def side(tag: String, probe: Boolean) = {
-      val cols = Seq(col("id").as(s"id_$tag"), col("emb").as(s"${tag}_emb"),
-        col("nrm").as(s"${tag}_nrm")) ++
-        levels.flatMap(l => Seq(col(s"__r$l").as(s"__r${l}_$tag"),
-          col(s"__q$l").as(s"__q${l}_$tag"))) :+
-        (if (probe) explode(probes).as("bucket") else col("bucket"))
-      n.select(cols: _*)
-    }
-    val pairs = side("a", probe = true)
-      .join(side("b", probe = false), "bucket")
+    val pairs = probePairs(n, signBits, quantCols(levels))
       .filter(col("id_a") < col("id_b") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
       .withColumn("sim",
@@ -1310,22 +1256,37 @@ object SimilarityOps {
         when(col(s"__q${l}_a") > 0 && col(s"__q${l}_b") > 0,
           expr(s"graft_dot(__r${l}_a, __r${l}_b)") /
             (col(s"__q${l}_a") * col(s"__q${l}_b"))).as("s"))): _*)
-    pairs.select(col("sim"), explode(lvlArr).as("ls"))
-      .filter(col("ls.s").isNotNull)
-      .select(col("sim"), col("ls.l").as("l"), col("ls.s").as("__sq"))
-      .withColumn("__err", round(col("__sq") - col("sim"), 12)
-        .cast("decimal(38,12)"))
-      .withColumn("__abs", round(abs(col("__sq") - col("sim")), 12)
-        .cast("decimal(38,12)"))
-      .groupBy(col("l").cast("long").as("level"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("__abs")).as("__sa"),
-        sum(col("__err")).as("__se"))
-      .select(col("level"), col("n_pairs"),
-        round(col("__sa").cast("double") / col("n_pairs"), 6).as("mae"),
-        MetricOps.normZero(
-          round(col("__se").cast("double") / col("n_pairs"), 6))
-          .as("bias"))
+    MetricOps.fidelitySummary(
+      pairs.select(col("sim"), explode(lvlArr).as("ls"))
+        .filter(col("ls.s").isNotNull)
+        .select(col("sim"), col("ls.l").as("l"), col("ls.s").as("__sq")),
+      "l", "level", col("__sq"), col("sim"))
   }
+
+  /** Per-vector scalar-quantized reconstructions of `emb` (per-vector
+    * min/max scale, the q91 embedding-store convention): for each level
+    * l, `__r$l` snaps every component to the nearest of l + 1 evenly
+    * spaced values between the vector's min and max (a constant vector
+    * reconstructs exactly), and `__q$l` is its norm.
+    */
+  private[operators] def quantReconstructions(
+      n: DataFrame, levels: Seq[Int]): DataFrame =
+    levels.foldLeft(n.withColumn("__mn", array_min(col("emb")))
+        .withColumn("__mx", array_max(col("emb")))) { (acc, l) =>
+      acc.withColumn(s"__r$l", expr(
+        s"""transform(emb, x -> CAST(round((x - __mn) /
+           |  (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
+           |        ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END))
+           |  AS INT)
+           |  * (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
+           |     ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END)
+           |  + __mn)""".stripMargin))
+        .withColumn(s"__q$l", sqrt(expr(s"graft_dot(__r$l, __r$l)")))
+    }
+
+  /** The [[quantReconstructions]] columns a probe pair carries. */
+  private def quantCols(levels: Seq[Int]): Seq[String] =
+    levels.flatMap(l => Seq(s"__r$l", s"__q$l"))
 
   /** MMR diversified rerank (Carbonell & Goldstein 1998): from each
     * query's multi-probe ANN top-`m` candidates, greedily select `k`
@@ -1480,12 +1441,10 @@ object SimilarityOps {
       // LAZY localCheckpoint: the query side and the index side both
       // read the signature table.
       .localCheckpoint(false)
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
     val q = n.filter(pmod(col("__g"), lit(queryMod)) === 0)
       .select(col("id").as("__qv"), col("__g").as("qgroup"),
         col("emb").as("a_emb"), col("nrm").as("a_nrm"),
-        explode(probes).as("bucket"))
+        explode(probeCells(signBits, 1)).as("bucket"))
     val c = n.select(col("id").as("__cv"), col("__g").as("cgroup"),
       col("emb").as("b_emb"), col("nrm").as("b_nrm"), col("bucket"))
     q.join(c, "bucket")
@@ -1522,39 +1481,15 @@ object SimilarityOps {
   def quantRecall(df: DataFrame, idCol: String, embCol: String, k: Int,
                   levels: Seq[Int] = Seq(15, 255),
                   signBits: Int = 4): DataFrame = {
-    val n0 = normalized(df, idCol, embCol)
-      .withColumn("__mn", array_min(col("emb")))
-      .withColumn("__mx", array_max(col("emb")))
-    val n = levels.foldLeft(n0) { (acc, l) =>
-        acc.withColumn(s"__r$l", expr(
-          s"""transform(emb, x -> CAST(round((x - __mn) /
-             |  (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
-             |        ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END))
-             |  AS INT)
-             |  * (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
-             |     ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END)
-             |  + __mn)""".stripMargin))
-          .withColumn(s"__q$l", sqrt(expr(s"graft_dot(__r$l, __r$l)")))
-      }
+    val n = quantReconstructions(normalized(df, idCol, embCol), levels)
       .withColumn("bucket", signBucket(signBits))
       // LAZY localCheckpoint: both join sides read the signature table.
       .localCheckpoint(false)
-    val probes = expr(
-      s"array(bucket, ${(0 until signBits).map(j => s"CAST(bucket AS INT) ^ ${1 << j}").mkString(", ")})")
-    def side(tag: String, probe: Boolean) = {
-      val cols = Seq(col("id").as(s"id_$tag"), col("emb").as(s"${tag}_emb"),
-        col("nrm").as(s"${tag}_nrm")) ++
-        levels.flatMap(l => Seq(col(s"__r$l").as(s"__r${l}_$tag"),
-          col(s"__q$l").as(s"__q${l}_$tag"))) :+
-        (if (probe) explode(probes).as("bucket") else col("bucket"))
-      n.select(cols: _*)
-    }
     val simCols = levels.map(l =>
       when(col(s"__q${l}_a") > 0 && col(s"__q${l}_b") > 0,
         expr(s"graft_dot(__r${l}_a, __r${l}_b)") /
           (col(s"__q${l}_a") * col(s"__q${l}_b"))).as(s"__s$l"))
-    val cand = side("a", probe = true)
-      .join(side("b", probe = false), "bucket")
+    val cand = probePairs(n, signBits, quantCols(levels))
       .filter(col("id_a") =!= col("id_b") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
       .select(Seq(col("id_a").as("vec_id"),
@@ -1621,43 +1556,20 @@ object SimilarityOps {
   }
 
   /** Packed SRP sign-mask per vector: `planes` md5-seeded random
-    * hyperplanes (the q396 `srpFidelity` signature stage — same sign
-    * convention, same 8-dp DECIMAL plane sums — exposed as a BUCKET
-    * table for ANN). SRP planes mix ALL dimensions, so at equal width
-    * they quantize cosine far better than the leading-dim signs of
-    * [[signBucket]] — the q438→q439 recall gap measures exactly that.
+    * hyperplanes (the q396 `srpFidelity` signature stage — the same
+    * [[srpMasks]] core: same sign convention, same exact scaled-long
+    * plane sums — exposed as a BUCKET table for ANN). SRP planes mix
+    * ALL dimensions, so at equal width they quantize cosine far better
+    * than the leading-dim signs of [[signBucket]] — the q438→q439
+    * recall gap measures exactly that.
     */
   private def srpMaskTable(df: DataFrame, idCol: String, embCol: String,
-                           planes: Int, inDim: Int = 64): DataFrame = {
-    val sess = df.sparkSession
-    import sess.implicits._
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def sign(i: Int, j: Int): Double = {
-      val h = md.digest(s"$i:$j".getBytes("UTF-8"))
-      if ((h(0) & 0x80) == 0) 1.0 else -1.0
-    }
-    val signDf = broadcast((0 until inDim).map(i =>
-      (i, (0 until planes).map(j => sign(i, j)))).toDF("__i", "__ss"))
-    val planeSums = (0 until planes).map(j =>
-      sum(round(col("__x") * element_at(col("__ss"), j + 1), 8)
-        .cast("decimal(20,8)")).as(s"__p$j"))
-    df.select(col(idCol).as("id"),
-        expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("__e"))
-      // NOT for determinism (DECIMAL plane sums are exact and
-      // order-independent): hash-spread the vectors BEFORE the 64-way
-      // dim explode + broadcast join + partial agg — the expensive
-      // stage — so a single small parquet input split doesn't run it
-      // on one thread. Pre-explode rows are 64× cheaper to shuffle
-      // than post-explode; the later groupBy only moves partials.
-      .repartition(col("id"))
-      .select(col("id"), posexplode(col("__e")).as(Seq("__i", "__x")))
-      .join(signDf, "__i")
-      .groupBy(col("id"))
-      .agg(planeSums.head, planeSums.tail: _*)
-      .select(col("id"), (0 until planes).map(j =>
-        when(col(s"__p$j") > 0, lit(1 << j)).otherwise(lit(0)))
-        .reduce(_ + _).cast("int").as("bucket"))
-  }
+                           planes: Int, inDim: Int = 64): DataFrame =
+    srpMasks(df.select(col(idCol).as("id"),
+        expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("emb"))
+      // hash-spread before the masks (see srpMasks); pre-explode rows
+      // are 64× cheaper to shuffle than post-explode ones
+      .repartition(col("id")), planes, inDim, "bucket")
 
   /** [[annRecallAudit]] with SRP hyperplane buckets at the
     * [[annTopKAdaptive]] width schedule — the quantizer upgrade the
@@ -1678,11 +1590,11 @@ object SimilarityOps {
   /** Multi-probe (Hamming ≤ 2) candidate-pair table over a sign-bucket
     * signature table: one row per DISTINCT reachable (query, neighbor)
     * pair, tagged with its minimum probe distance `hd` and cosine.
-    * localCheckpointed — the per-level recall filters AND q450's
-    * per-level candidate counts all read it.
+    * localCheckpointed (`eager` or lazily) — the per-level recall
+    * filters AND q450's per-level candidate counts all read it.
     */
-  private def signProbeCands(q: DataFrame, n: DataFrame,
-                             signBits: Int): DataFrame = {
+  private def signProbeCands(q: DataFrame, n: DataFrame, signBits: Int,
+                             eager: Boolean): DataFrame = {
     val probes = expr(hammingProbes(signBits, 2).map { case (m, hd) =>
       s"struct(CAST(bucket AS INT) ^ $m AS pb, $hd AS hd)"
     }.mkString("array(", ", ", ")"))
@@ -1695,7 +1607,7 @@ object SimilarityOps {
     candidatePairs(a, b, "bucket")
       .groupBy(col("vec_id"), col("neighbor_id"))
       .agg(min(col("hd")).as("hd"), max(col("sim")).as("sim"))
-      .localCheckpoint(false)
+      .localCheckpoint(eager)
   }
 
   /** Shared recall-audit core over any (id, emb, nrm, bucket)
@@ -1707,7 +1619,7 @@ object SimilarityOps {
     val q = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
     val exact = exactMarks(q, n, k)
     // three level filters read the shared candidate table.
-    val cand = signProbeCands(q, n, signBits)
+    val cand = signProbeCands(q, n, signBits, eager = false)
     levelRecall(cand, "hd", Seq(0, 1, 2), "level", exact, q, k)
   }
 
@@ -2284,19 +2196,21 @@ object SimilarityOps {
       else df.filter(pmod(md5U(col(idCol)), lit(devMod)) === 0)
     val bits = adaptiveSignBits(dev)
     // The sign-bucket side (signature, sample, shared exact ground
-    // truth) and the trained-IVF side (Lloyd fit at the SAME cell
-    // count kCent = 2^bits in one shard, over the same dev slice) are
-    // independent sub-plan families whose checkpoints/collects block
-    // the driver — build them concurrently (guide §2.6, the
-    // ivfDialSweep pattern; both sides are deterministic pure functions
-    // of dev).
+    // truth, probe candidates) and the trained-IVF side (Lloyd fit at
+    // the SAME cell count kCent = 2^bits in one shard, over the same
+    // dev slice) are independent sub-plan families whose checkpoints/
+    // collects block the driver — build them concurrently (the
+    // ivfDialSweep pattern; both sides are deterministic pure
+    // functions of dev). The sign side's checkpoints are EAGER so its
+    // jobs run inside its task; lazy ones would first compute during
+    // the drain, where sibling stages race for the same blocks.
     lazy val signSide = {
       val n = normalized(dev, idCol, embCol)
         .withColumn("bucket", signBucket(bits))
-        .localCheckpoint(false)
+        .localCheckpoint(true)
       val qs = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
-      val exact = exactMarks(qs, n, k).localCheckpoint(false)
-      (qs, exact, signProbeCands(qs, n, bits))
+      val exact = exactMarks(qs, n, k).localCheckpoint(true)
+      (qs, exact, signProbeCands(qs, n, bits, eager = true))
     }
     lazy val ivfCand = {
       val (e, cFinal) = ivfShardedFit(dev, idCol, embCol, 1 << bits, 2, 0)

@@ -90,15 +90,24 @@ class BenchSpec extends SparkSpec {
 
   test("Sessions.bounded filters DAGScheduler's accumulator ERROR and nothing else") {
     Sessions.bounded(SparkSession.builder())
-    val name = "org.apache.spark.scheduler.DAGScheduler"
-    val lc = LogManager.getContext(false).asInstanceOf[LoggerContext]
-      .getConfiguration.getLoggerConfig(name)
-    assert(lc.getName == name && lc.getExplicitLevel == null)
-    def verdict(msg: String) = lc.getFilter.filter(Log4jLogEvent.newBuilder()
-      .setLoggerName(name).setLevel(Level.ERROR).setMessage(new SimpleMessage(msg)).build())
-    assert(verdict("Failed to update accumulator 12 (LongAccumulator) for task 3") ==
+    val cfg = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration
+    def verdict(name: String, level: Level, msg: String) = {
+      val lc = cfg.getLoggerConfig(name)
+      assert(lc.getName == name && lc.getExplicitLevel == null)
+      lc.getFilter.filter(Log4jLogEvent.newBuilder()
+        .setLoggerName(name).setLevel(level).setMessage(new SimpleMessage(msg)).build())
+    }
+    val dag = "org.apache.spark.scheduler.DAGScheduler"
+    assert(verdict(dag, Level.ERROR, "Failed to update accumulator 12 (LongAccumulator) for task 3") ==
       Filter.Result.DENY)
-    assert(verdict("Failed to update accumulators for task 3") != Filter.Result.DENY)
-    assert(verdict("Job aborted due to stage failure") != Filter.Result.DENY)
+    assert(verdict(dag, Level.ERROR, "Failed to update accumulators for task 3") != Filter.Result.DENY)
+    assert(verdict(dag, Level.ERROR, "Job aborted due to stage failure") != Filter.Result.DENY)
+    val acc = "org.apache.spark.util.AccumulatorContext"
+    assert(verdict(acc, Level.WARN, "Attempted to access garbage collected accumulator 4711") ==
+      Filter.Result.DENY)
+    assert(verdict(acc, Level.WARN, "Attempted to access accumulator 4711") != Filter.Result.DENY)
+    // each message is filtered only on its own logger
+    assert(verdict(dag, Level.WARN, "Attempted to access garbage collected accumulator 4711") !=
+      Filter.Result.DENY)
   }
 }
