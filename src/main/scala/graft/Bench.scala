@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
@@ -50,8 +51,10 @@ object Bench {
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
 
-  /** One successful timed run: `fn(spark, dir)`, then its drain. */
-  final case class Run(tag: String, constructS: Double, executeS: Double) {
+  /** One successful timed run: `fn(spark, dir)`, then its drain, with
+    * the classes codegen compiled in each phase. */
+  final case class Run(tag: String, constructS: Double, executeS: Double,
+                       constructCompiles: Long, executeCompiles: Long) {
     def seconds: Double = constructS + executeS
   }
 
@@ -96,17 +99,24 @@ object Bench {
 
     override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
 
-    /** The layer record of one run: seconds and jobs per phase, the
-      * drain's planner phase ms, and the run's shuffle writes. */
+    /** The layer record of one run: seconds, jobs and compiled classes
+      * per phase, the drain's planner phase ms, and the run's shuffle
+      * writes. */
     def record(r: Run): JObject = synchronized {
       val (c, x) = (counts(s"${r.tag}/construct"), counts(s"${r.tag}/execute"))
       ("construct_s" -> r.constructS) ~ ("execute_s" -> r.executeS) ~
         ("construct_jobs" -> c.jobs) ~ ("execute_jobs" -> x.jobs) ~
+        ("construct_compiles" -> r.constructCompiles) ~ ("execute_compiles" -> r.executeCompiles) ~
         JObject(x.phases.toList.sorted.map { case (k, v) => s"${k}_ms" -> JLong(v) }) ~
         ("shuffle_write_bytes" -> (c.bytes + x.bytes)) ~
         ("shuffle_write_records" -> (c.records + x.records))
     }
   }
+
+  /** Classes compiled by codegen so far in this JVM. JVM-wide, so a
+    * delta around a phase is exact only while one query runs at a time
+    * (as here: the compiles of its `Concurrent.run` threads are its own). */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Times run `run` of one query; None when it throws (a crashing
     * query must show as broken, never as its time-to-exception). */
@@ -115,13 +125,13 @@ object Bench {
     val sc = spark.sparkContext
     val tag = s"$name#$run"
     try {
-      val t0 = System.nanoTime()
+      val (k0, t0) = (compiles(), System.nanoTime())
       sc.setLocalProperty(Tag, s"$tag/construct")
       val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
+      val (k1, t1) = (compiles(), System.nanoTime())
       sc.setLocalProperty(Tag, s"$tag/execute")
       drain(df, s"$tag/execute")
-      Some(Run(tag, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
+      Some(Run(tag, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9, k1 - k0, compiles() - k1))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
     } finally {

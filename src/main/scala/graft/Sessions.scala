@@ -18,15 +18,33 @@ import org.apache.spark.sql.SparkSession
   *    contract — the driver also runs at a lower core count to measure
   *    scaling, so nothing here may hard-code a core count);
   *  - UTC + nanosAsLong: events.parquet ships TIMESTAMP(NANOS);
-  *  - UI off in all mains.
+  *  - UI off in all mains;
+  *  - codegen cache = [[CodegenCacheEntries]], so each generated class
+  *    is compiled once per JVM (see there).
   */
 object Sessions extends Logging {
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The engine's
+    * working sets, in distinct generated classes: the nine perfbench
+    * `floor` queries need 146; the `pipelines` JVM needs 308: 64 for
+    * the sf0.1 IVF index write, 173 for a cold `Pipeline.run` and 71
+    * for the sf0.1 probes after it. At 100 every repeated floor pass
+    * recompiled 72–113 of its classes (~1 s of Janino time in a 5–6 s
+    * pass). The cache is a Guava cache that bounds each segment
+    * separately, so a cap near the working set still evicts; 1000
+    * leaves headroom over all of them. The conf is static and read
+    * once per JVM, when `CodeGenerator` is first initialized — a
+    * session built after that cannot change it.
+    */
+  val CodegenCacheEntries = 1000
+
   def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
 
   /** Bounded-driver-state knobs for the LONG mains (Bench/Verify run
     * 450+ queries in one JVM; ServeBench repeats many jobs; one-shot

@@ -1549,9 +1549,9 @@ object SimilarityOps {
                      sampleMod: Int = 20): DataFrame = {
     val n = normalized(df, idCol, embCol)
       .withColumn("bucket", signBucket(signBits))
-      // LAZY localCheckpoint: the query filter, the exact baseline and
-      // the probe join all read the signature table.
-      .localCheckpoint(false)
+      // the query filter, the exact baseline and the probe join all
+      // read the signature table (eager: see annRecallCore)
+      .localCheckpoint(true)
     annRecallCore(n, signBits, k, sampleMod)
   }
 
@@ -1583,18 +1583,18 @@ object SimilarityOps {
     val bits = adaptiveSignBits(df)
     val n = normalized(df, idCol, embCol)
       .join(srpMaskTable(df, idCol, embCol, bits), "id")
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     annRecallCore(n, bits, k, sampleMod)
   }
 
   /** Multi-probe (Hamming ≤ 2) candidate-pair table over a sign-bucket
     * signature table: one row per DISTINCT reachable (query, neighbor)
     * pair, tagged with its minimum probe distance `hd` and cosine.
-    * localCheckpointed (`eager` or lazily) — the per-level recall
-    * filters AND q450's per-level candidate counts all read it.
+    * Eagerly localCheckpointed — the per-level recall filters AND
+    * q450's per-level candidate counts all read it.
     */
-  private def signProbeCands(q: DataFrame, n: DataFrame, signBits: Int,
-                             eager: Boolean): DataFrame = {
+  private def signProbeCands(q: DataFrame, n: DataFrame,
+                             signBits: Int): DataFrame = {
     val probes = expr(hammingProbes(signBits, 2).map { case (m, hd) =>
       s"struct(CAST(bucket AS INT) ^ $m AS pb, $hd AS hd)"
     }.mkString("array(", ", ", ")"))
@@ -1607,19 +1607,23 @@ object SimilarityOps {
     candidatePairs(a, b, "bucket")
       .groupBy(col("vec_id"), col("neighbor_id"))
       .agg(min(col("hd")).as("hd"), max(col("sim")).as("sim"))
-      .localCheckpoint(eager)
+      .localCheckpoint(true)
   }
 
   /** Shared recall-audit core over any (id, emb, nrm, bucket)
     * signature table: exact top-k on a 1-in-`sampleMod` query sample
-    * vs the multi-probe candidates at Hamming levels 0/1/2.
+    * vs the multi-probe candidates at Hamming levels 0/1/2. The
+    * signature table and the candidate table are eager checkpoints:
+    * lazy ones are first computed during the drain, where sibling
+    * stages race for the same blocks and the shuffle work varies from
+    * run to run.
     */
   private def annRecallCore(n: DataFrame, signBits: Int, k: Int,
                             sampleMod: Int): DataFrame = {
     val q = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
     val exact = exactMarks(q, n, k)
     // three level filters read the shared candidate table.
-    val cand = signProbeCands(q, n, signBits, eager = false)
+    val cand = signProbeCands(q, n, signBits)
     levelRecall(cand, "hd", Seq(0, 1, 2), "level", exact, q, k)
   }
 
@@ -2210,7 +2214,7 @@ object SimilarityOps {
         .localCheckpoint(true)
       val qs = n.filter(pmod(col("id"), lit(sampleMod)) === 0)
       val exact = exactMarks(qs, n, k).localCheckpoint(true)
-      (qs, exact, signProbeCands(qs, n, bits, eager = true))
+      (qs, exact, signProbeCands(qs, n, bits))
     }
     lazy val ivfCand = {
       val (e, cFinal) = ivfShardedFit(dev, idCol, embCol, 1 << bits, 2, 0)

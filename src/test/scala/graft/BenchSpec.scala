@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions.col
 import org.json4s._
 
 /** Bench's per-run layer record (jobs, shuffle writes, planner phases
-  * charged through the run tag), its prior parse, and the one log
-  * message `Sessions.bounded` filters.
+  * charged through the run tag; compiles per phase), its prior parse,
+  * and the log messages `Sessions.bounded` filters.
   */
 class BenchSpec extends SparkSpec {
 
@@ -75,7 +75,15 @@ class BenchSpec extends SparkSpec {
       assert(long(q, "execute_jobs") >= 1, s"$q drained without a job")
       assert(long(q, "optimization_ms") >= 0 && long(q, "planning_ms") >= 0)
       assert((o \ "construct_s").isInstanceOf[JDouble] && (o \ "execute_s").isInstanceOf[JDouble])
+      assert(long(q, "construct_compiles") >= 0 && long(q, "execute_compiles") >= 0)
     }
+  }
+
+  test("a query's second run records no compiles") {
+    val q: Bench.Query = (s, _) => s.range(100).selectExpr("id * 104729 + 3 AS v").filter("v % 5 = 1")
+    val Seq(first, second) = (1 to 2).map(Bench.timeOnce(spark, "", "compiles", q, _).get)
+    assert(first.constructCompiles + first.executeCompiles > 0)
+    assert(second.constructCompiles == 0 && second.executeCompiles == 0)
   }
 
   test("priorTimes reads only `queries`, at a matching sf, values > 0") {

@@ -94,4 +94,9 @@ for name in sorted(oracle):
         flag = f" (dtype diff: {dt_mismatch})" if dt_mismatch else ""
         print(f"OK   {name}: {len(d)} rows{flag}")
 print(f"\n{fails} failures")
+# Close DuckDB and flush before exit: left to interpreter teardown, the
+# connection's threads could abort the process (exit 134) after a clean
+# comparison.
+con.close()
+sys.stdout.flush()
 sys.exit(1 if fails else 0)
