@@ -123,7 +123,7 @@ object Flagship {
     // the 4 Hamming-1 cells.
     val uvec = embeddings
       .select(col("vec_id").as("user_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("uemb"))
+        col("embedding").cast("array<double>").as("uemb"))
     val clicks = ev.filter(col("label") === 1)
       .select(col("user_id"), col("event_type").as("item")).distinct()
     val prof = clicks.join(uvec, "user_id")

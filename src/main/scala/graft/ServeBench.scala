@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Md5Int
 import graft.operators.SimilarityOps
 
 /** Serving-latency bench for the 100 TB online-recall shape (q453 /
@@ -63,8 +64,7 @@ object ServeBench {
 
     // ---- request sample: the q453 md5 1-in-10 draw
     val reqRows = emb
-      .filter(pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 8),
-        16, 10).cast("long"), lit(10)) === 0)
+      .filter(pmod(Md5Int(col("vec_id").cast("string"), 1, 8), lit(10)) === 0)
       .select(col("vec_id"), col("embedding"))
       .collect()
       .map(r => (r.getLong(0),

@@ -20,7 +20,11 @@ import org.apache.spark.sql.SparkSession
   *  - UTC + nanosAsLong: events.parquet ships TIMESTAMP(NANOS);
   *  - UI off in all mains;
   *  - codegen cache = [[CodegenCacheEntries]], so each generated class
-  *    is compiled once per JVM (see there).
+  *    is compiled once per JVM (see there);
+  *  - no stage id in generated class names: the cache is keyed by the
+  *    generated source text, and adaptive execution renumbers a plan's
+  *    codegen stages on every run, so with the id in the name the same
+  *    plan shape compiled new classes each time it ran.
   */
 object Sessions extends Logging {
   /** Entries of Spark's generated-class cache
@@ -28,7 +32,10 @@ object Sessions extends Logging {
     * working sets, in distinct generated classes: the nine perfbench
     * `floor` queries need 146; the `pipelines` JVM needs 308: 64 for
     * the sf0.1 IVF index write, 173 for a cold `Pipeline.run` and 71
-    * for the sf0.1 probes after it. At 100 every repeated floor pass
+    * for the sf0.1 probes after it (counted while class names still
+    * carried the codegen stage id; without it a cold `Pipeline.run`
+    * compiled 142 classes, not 164, in a scratch count at sf0.01, so
+    * the sets can only have shrunk). At 100 every repeated floor pass
     * recompiled 72–113 of its classes (~1 s of Janino time in a 5–6 s
     * pass). The cache is a Guava cache that bounds each segment
     * separately, so a cap near the working set still evicts; 1000
@@ -45,6 +52,7 @@ object Sessions extends Logging {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Bounded-driver-state knobs for the LONG mains (Bench/Verify run
     * 450+ queries in one JVM; ServeBench repeats many jobs; one-shot

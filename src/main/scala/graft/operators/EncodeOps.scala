@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Supervised feature-encoding operators for training-data prep —
   * the categorical-encoding family the reference handles with pandas
@@ -274,7 +275,7 @@ object EncodeOps {
     val key = concat_ws("|", crossCols.map(c => col(c).cast("string")): _*)
     val crosses = df.select(key.as("__k")).distinct()
       .withColumn("__h",
-        conv(substring(md5(col("__k")), 1, 8), 16, 10).cast("long"))
+        Md5Int(col("__k"), 1, 8))
       // LAZY localCheckpoint: every width reads the distinct crosses.
       .localCheckpoint(false)
     crosses

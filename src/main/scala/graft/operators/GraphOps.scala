@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Graph operators for corpus curation: connected components over the
   * near-dup candidate graph = dedup CLUSTERS (each document labeled
@@ -253,9 +254,8 @@ object GraphOps {
       .withColumn("__deg", count(lit(1)).over(Window.partitionBy("__r")))
     def pick(node: org.apache.spark.sql.Column, wid: org.apache.spark.sql.Column,
              step: Int, deg: org.apache.spark.sql.Column) =
-      conv(substring(md5(concat(node.cast("string"), lit(":"),
-        wid.cast("string"), lit(s":$step"))), 1, 8), 16, 10)
-        .cast("long") % deg
+      Md5Int(concat(node.cast("string"), lit(":"),
+        wid.cast("string"), lit(s":$step")), 1, 8) % deg
     val w = starts.select(col(leftCol).as("start_node")).distinct()
       .withColumn("walk_id",
         explode(array((0 until walksPerStart).map(i => lit(i.toLong)): _*)))

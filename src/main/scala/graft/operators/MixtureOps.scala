@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Data-mixture construction for training corpora: given target source
   * proportions, compute the largest feasible sample and draw it
@@ -35,7 +36,7 @@ object MixtureOps {
     * `('0x' || substr(md5(id::VARCHAR), 1, 8))::BIGINT / 2^32`).
     */
   def membership(idCol: String): org.apache.spark.sql.Column =
-    conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
+    Md5Int(col(idCol).cast("string"), 1, 8)
       .cast("double") / lit(4294967296.0)
 
   /** Per-source sampling summary: n_docs, keep rate, kept count, and a
@@ -258,8 +259,7 @@ object MixtureOps {
     val base = df.select(col(idCol).as("__id"),
         col(srcCol).as("__s"))
       .withColumn("__shard",
-        (conv(substring(md5(col("__id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % nShards).cast("int"))
+        (Md5Int(col("__id").cast("string"), 1, 8) % nShards).cast("int"))
       .withColumn("__ord",
         md5(concat(lit("o:"), col("__id").cast("string"))))
       // LAZY localCheckpoint: the run scan and the per-(shard, source)
@@ -316,8 +316,7 @@ object MixtureOps {
   def shardJsAudit(df: DataFrame, idCol: String, textCol: String,
                    nShards: Int = 8): DataFrame =
     jsVsCorpus(df.select(
-      (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
-        .cast("long") % nShards).cast("int").as("shard"),
+      (Md5Int(col(idCol).cast("string"), 1, 8) % nShards).cast("int").as("shard"),
       explode(split(col(textCol), " ")).as("__tok")), "shard")
 
   /** Per-SOURCE token-distribution divergence vs the corpus: the same
@@ -410,8 +409,8 @@ object MixtureOps {
     */
   def saltedMembership(salt: String,
                        idCol: String): org.apache.spark.sql.Column =
-    conv(substring(md5(concat_ws("|", lit(salt),
-      col(idCol).cast("string"))), 1, 8), 16, 10)
+    Md5Int(concat_ws("|", lit(salt),
+      col(idCol).cast("string")), 1, 8)
       .cast("double") / lit(4294967296.0)
 
   /** Sampler-independence audit: two salted deterministic samplers

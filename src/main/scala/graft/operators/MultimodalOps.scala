@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Multimodal-column operators: images/audio/video ride through the
   * engine as opaque `binary` payloads with typed metadata columns;
@@ -646,9 +647,8 @@ object MultimodalOps {
     implicit val seedEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     val seeded = docs.select(
         col(idCol).cast("long").as("id"),
-        (conv(substring(md5(concat(lit("a"),
-            col(idCol).cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 100000).as("aseed"))
+        (Md5Int(concat(lit("a"),
+            col(idCol).cast("string")), 1, 8) % 100000).as("aseed"))
       .as[(Long, Long)]
     val spec = seeded.map { case (id, aseed) =>
       SynthAudioRow(id, aseed,
@@ -679,8 +679,7 @@ object MultimodalOps {
     implicit val seedEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     val seeded = docs.select(
         col(idCol).cast("long").as("id"),
-        (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
-          .cast("long") % 100000).as("seed"))
+        (Md5Int(col(idCol).cast("string"), 1, 8) % 100000).as("seed"))
       .as[(Long, Long)]
     val spec = seeded.map { case (id, seed) =>
       val bmp = id % 2 == 0
@@ -720,12 +719,11 @@ object MultimodalOps {
     val nClusters = math.max(1L, docs.count() / docsPerCluster)
     val seeded = docs.select(
         col(idCol).cast("long").as("id"),
-        (conv(substring(md5(concat(lit("c"),
-            (col(idCol).cast("long") % nClusters).cast("string"))), 1, 8),
-          16, 10).cast("long") % 100000).as("cseed"),
-        (conv(substring(md5(concat(lit("d"),
-            col(idCol).cast("string"))), 1, 8),
-          16, 10).cast("long") % 100000).as("pseed"))
+        (Md5Int(concat(lit("c"),
+            (col(idCol).cast("long") % nClusters).cast("string")), 1, 8)
+          % 100000).as("cseed"),
+        (Md5Int(concat(lit("d"),
+            col(idCol).cast("string")), 1, 8) % 100000).as("pseed"))
       .as[(Long, Long, Long)]
     val spec = seeded.map { case (id, cseed, pseed) =>
       SynthImageRow(id, cseed, pseed,

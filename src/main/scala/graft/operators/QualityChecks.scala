@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Data-quality expectations over a frame — the validation layer a
   * 100 TB ingest runs before training data leaves a stage (null
@@ -389,7 +390,7 @@ object QualityChecks {
     df.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("true_count"))
       .withColumn("__h",
-        conv(substring(md5(key), 1, 12), 16, 10).cast("long"))
+        Md5Int(key, 1, 12))
       .withColumn("__c",
         (col("__h") + 0.5) / lit(281474976710656.0) - 0.5)
       .withColumn("__noise", -signum(col("__c")) *

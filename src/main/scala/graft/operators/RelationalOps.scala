@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Core relational operators (SURVEY.md §2.2–§2.6).
   *
@@ -112,8 +113,8 @@ object RelationalOps {
     def summarize(df: DataFrame, cnt: String, ck: String) =
       df.groupBy(col(partCol).as("__part"))
         .agg(count(lit(1)).as(cnt),
-          sum(conv(substring(md5(rowFingerprint(valCols)), 1, 12), 16, 10)
-            .cast("long").cast("decimal(38,0)")).as(ck))
+          sum(Md5Int(rowFingerprint(valCols), 1, 12).cast("decimal(38,0)"))
+            .as(ck))
     summarize(oldDf, "__ocnt", "__ock")
       .join(summarize(newDf, "__ncnt", "__nck"), Seq("__part"), "full_outer")
       .withColumn("status",

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Online-recall retrieval operators (SURVEY §2.6), the relational
   * rewrite of the reference's Elasticsearch queries
@@ -61,10 +62,10 @@ object RetrievalOps {
                 boost: Double, topK: Int): DataFrame = {
     graft.plans.GraftExtensions.register(users.sparkSession)
     val u = users.select(col(userCol), col(seenCol),
-        expr(s"transform($userVec, x -> CAST(x AS DOUBLE))").as("__uv"))
+        col(userVec).cast("array<double>").as("__uv"))
       .withColumn("__un", sqrt(SimilarityOps.dot("__uv", "__uv")))
     val i = items.select(col(itemCol),
-        expr(s"transform($itemVec, x -> CAST(x AS DOUBLE))").as("__iv"))
+        col(itemVec).cast("array<double>").as("__iv"))
       .withColumn("__in", sqrt(SimilarityOps.dot("__iv", "__iv")))
     // zero-norm vectors (untrained/cold embeddings) are excluded up
     // front: cosine is undefined for them, and the bare divide would be
@@ -236,9 +237,8 @@ object RetrievalOps {
     val grid = users.crossJoin(broadcast(items.select(col(itemCol)).distinct()))
       .join(seen.select(col(userCol), col(itemCol)),
         Seq(userCol, itemCol), "left_anti")
-      .withColumn("__u", conv(substring(md5(concat_ws("|",
-        col(userCol).cast("string"), col(itemCol).cast("string"))), 1, 8),
-        16, 10).cast("long"))
+      .withColumn("__u", Md5Int(concat_ws("|",
+        col(userCol).cast("string"), col(itemCol).cast("string")), 1, 8))
     grid.groupBy(col(userCol))
       .agg(graft.functions.TopKAggregator.topK(n,
         -col("__u").cast("double"), col(itemCol).cast("long")).as("__top"))
@@ -295,9 +295,9 @@ object RetrievalOps {
     val cand = seen.select(col(userCol)).distinct()
       .select(col(userCol), explode(expr(s"sequence(0, ${m - 1})"))
         .as("__slot"))
-      .withColumn("__v", pmod(conv(substring(md5(concat_ws("|",
-        col(userCol).cast("string"), col("__slot").cast("string"))), 1, 8),
-        16, 10).cast("long"), lit(maxId + 1)))
+      .withColumn("__v", pmod(Md5Int(concat_ws("|",
+        col(userCol).cast("string"), col("__slot").cast("string")), 1, 8),
+        lit(maxId + 1)))
     // duplicate catalog rows must not duplicate draws (the
     // negativeSample contract): distinct before the id join
     val hits = cand.join(items.select(col(itemCol)).distinct(),

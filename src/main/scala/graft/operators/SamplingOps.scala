@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Deterministic sampling and feature-hashing operators for the
   * training-data pipeline.
@@ -19,7 +20,7 @@ object SamplingOps {
     * md5 of the key's canonical string rendering.
     */
   def hashUnit(key: Column): Column =
-    conv(substring(md5(key.cast("string")), 1, 4), 16, 10).cast("long")
+    Md5Int(key.cast("string"), 1, 4)
 
   /** Deterministic stratified sampling: keep a row iff its key hash
     * falls below the row's rate threshold (`rateCol` in [0,1], usually
@@ -49,7 +50,7 @@ object SamplingOps {
     */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
                      n: Int): DataFrame = {
-    val u = (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
+    val u = (Md5Int(col(idCol).cast("string"), 1, 8)
       .cast("double") + lit(1.0)) / lit(4294967296.0)
     df.withColumn("__skey", round(log(u) / col(weightCol), 9))
       .orderBy(col("__skey").desc, col(idCol))
@@ -66,8 +67,7 @@ object SamplingOps {
     // cast("string") first: md5 wants binary/string, and numeric ids
     // (the common categorical key) have no implicit cast — also keeps
     // the hash consistent with hashUnit/domainQuota for the same key
-    conv(substring(md5(value.cast("string")), 1, 8), 16, 10)
-      .cast("long") % buckets
+    Md5Int(value.cast("string"), 1, 8) % buckets
 
   /** Deterministic k-fold assignment + per-fold balance audit: fold =
     * [[featureHash]] of the GROUPING key (all rows of a key land in one
@@ -258,12 +258,13 @@ object SamplingOps {
   private def bigramBuckets(df: DataFrame, textCol: String,
                             targetCol: Column, buckets: Int,
                             carry: Seq[String]): DataFrame =
-    df.withColumn("__tgt", targetCol.cast("int"))
-      .withColumn("__t", split(col(textCol), " "))
-      .filter(size(col("__t")) >= 2)
-      .select(carry.map(col) ++ Seq(col("__tgt"), explode(expr(
-        "transform(sequence(0, size(__t) - 2), i -> concat(__t[i], ' ', __t[i+1]))"))
-        .as("__b")): _*)
+    TextOps.windows(df.withColumn("__tgt", targetCol.cast("int"))
+        .withColumn("__t", split(col(textCol), " "))
+        .filter(size(col("__t")) >= 2), lit(0), size(col("__t")) - 2) { i =>
+        val t = col("__t")
+        carry.map(col) ++ Seq(col("__tgt"),
+          concat(t.getItem(i), lit(" "), t.getItem(i + 1)).as("__b"))
+      }
       .withColumn("__k", featureHash(col("__b"), buckets))
 
   /** Add-one-smoothed log-likelihood ratio per bucket, identical

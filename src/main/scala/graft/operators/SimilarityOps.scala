@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftExpr
 
-import graft.functions.{CellIndex, NearestCells}
+import graft.functions.{CellIndex, Md5Int, NearestCells}
 
 /** Vector-similarity operators: brute-force cosine top-k (the exact
   * baseline), sign-bucketed IVF ANN (the scale path), and
@@ -37,7 +37,7 @@ object SimilarityOps {
   def normalized(df: DataFrame, idCol: String, embCol: String): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
-        expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("emb"))
+        col(embCol).cast("array<double>").as("emb"))
       .withColumn("nrm", sqrt(dot("emb", "emb")))
   }
 
@@ -430,7 +430,7 @@ object SimilarityOps {
                     labelCol: String, k: Int, signBits: Int = 4): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
     val n = df.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-        expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("emb"))
+        col(embCol).cast("array<double>").as("emb"))
       .withColumn("nrm", sqrt(dot("emb", "emb")))
       .withColumn("bucket", signBucket(signBits))
     val a = n.select(col("id").as("vec_id"), col("lbl").as("a_lbl"),
@@ -659,7 +659,7 @@ object SimilarityOps {
   def dimProfile(df: DataFrame, embCol: String,
                  roundTo: Int = 6): DataFrame = {
     val v = df
-      .select(posexplode(expr(s"transform($embCol, x -> CAST(x AS DOUBLE))")))
+      .select(posexplode(col(embCol).cast("array<double>")))
       .toDF("dim", "__x")
       .select(col("dim"),
         round(col("__x"), 6).cast("decimal(18,6)").as("__v"))
@@ -894,7 +894,7 @@ object SimilarityOps {
                     labelCol: String): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
     val base = df.select(col(labelCol).as("label"),
-        expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("__e"))
+        col(embCol).cast("array<double>").as("__e"))
       .withColumn("__nrm", sqrt(dot("__e", "__e")))
       .filter(col("__nrm") > 0)
       // LAZY localCheckpoint: the norm stats and the dim sums both
@@ -981,7 +981,7 @@ object SimilarityOps {
     graft.plans.GraftExtensions.register(dfOld.sparkSession)
     def tag(d: DataFrame, t: Int) = d.select(lit(t).as("__snap"),
       col(labelCol).as("label"),
-      expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("__e"))
+      col(embCol).cast("array<double>").as("__e"))
     val u = tag(dfOld, 0).unionByName(tag(dfNew, 1))
       // LAZY localCheckpoint: counts and centroids both read the
       // tagged union (each side's lineage would otherwise run twice).
@@ -1566,7 +1566,7 @@ object SimilarityOps {
   private def srpMaskTable(df: DataFrame, idCol: String, embCol: String,
                            planes: Int, inDim: Int = 64): DataFrame =
     srpMasks(df.select(col(idCol).as("id"),
-        expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("emb"))
+        col(embCol).cast("array<double>").as("emb"))
       // hash-spread before the masks (see srpMasks); pre-explode rows
       // are 64× cheaper to shuffle than post-explode ones
       .repartition(col("id")), planes, inDim, "bucket")
@@ -1708,7 +1708,7 @@ object SimilarityOps {
     * DuckDB): seeds rank by it, the training slice filters on it.
     */
   private def md5U(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
+    Md5Int(c.cast("string"), 1, 8)
 
   /** Collect a `(shard, cid, cemb)` codebook DataFrame (≤2^16 rows by
     * the hard-capped width schedule) into a driver-pinned

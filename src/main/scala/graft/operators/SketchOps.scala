@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Int
 
 /** Distinct-count sketching. Spark's own `approx_count_distinct` (HLL++)
   * is the zero-thought default, but its estimate is engine-private — no
@@ -37,8 +38,7 @@ object SketchOps {
                   k: Int): DataFrame = {
     require(k >= 3, "KMV needs k >= 3 for a finite-variance estimate")
     val dh = df.select(col(groupCol),
-        conv(substring(md5(col(valCol).cast("string")), 1, 12), 16, 10)
-          .cast("long").as("__u"))
+        Md5Int(col(valCol).cast("string"), 1, 12).as("__u"))
       .distinct()
     val kth = dh.withColumn("__rn", row_number().over(
         Window.partitionBy(col(groupCol)).orderBy(col("__u"))))
@@ -73,8 +73,7 @@ object SketchOps {
     require(k >= 3, "KMV needs k >= 3 for a finite-variance estimate")
     // one row per distinct hash with side-membership flags
     val hf = df.filter(col(sideCol).isin(sideA, sideB))
-      .select(conv(substring(md5(col(valCol).cast("string")), 1, 12),
-          16, 10).cast("long").as("__u"),
+      .select(Md5Int(col(valCol).cast("string"), 1, 12).as("__u"),
         when(col(sideCol) === sideA, 1).otherwise(0).as("__pa"),
         when(col(sideCol) === sideB, 1).otherwise(0).as("__pb"))
       .groupBy(col("__u"))
@@ -130,8 +129,7 @@ object SketchOps {
                   width: Int): DataFrame = {
     val slots = (0 until depth).map { i =>
       struct(lit(i).as("d"),
-        pmod(conv(substring(md5(col(keyCol).cast("string")),
-          i * 8 + 1, 8), 16, 10).cast("long"), lit(width)).as("b"))
+        pmod(Md5Int(col(keyCol).cast("string"), i * 8 + 1, 8), lit(width)).as("b"))
     }
     df.withColumn("__slot", explode(array(slots: _*)))
       .select(col("*"), col("__slot.d").as("__d"), col("__slot.b").as("__b"))
@@ -298,8 +296,7 @@ object SketchOps {
     * shared by the batch and streaming builds.
     */
   private[graft] def hllHash(valCol: String): org.apache.spark.sql.Column =
-    conv(substring(md5(col(valCol).cast("string")), 1, 12), 16, 10)
-      .cast("long")
+    Md5Int(col(valCol).cast("string"), 1, 12)
 
   /** Estimate from a register table (output of [[hllRegisters]]):
     * group, n_registers, hll_est. The exact-count twin is only
@@ -372,8 +369,7 @@ object SketchOps {
                      hash: String): Seq[org.apache.spark.sql.Column] =
     (0 until 4).map { i =>
       if (hash == "xx") pmod(xxhash64(key, lit(i)), lit(mBits.toLong))
-      else pmod(conv(substring(md5(key.cast("string")), i * 8 + 1, 8),
-        16, 10).cast("long"), lit(mBits))
+      else pmod(Md5Int(key.cast("string"), i * 8 + 1, 8), lit(mBits))
     }
 
   def bloomFilterWords(build: DataFrame, keyCol: String,
@@ -393,8 +389,7 @@ object SketchOps {
                       words: Int = 256): DataFrame = {
     val mBits = words * 32
     def positions(key: org.apache.spark.sql.Column) = (0 until 4).map { i =>
-      pmod(conv(substring(md5(key.cast("string")), i * 8 + 1, 8), 16, 10)
-        .cast("long"), lit(mBits))
+      pmod(Md5Int(key.cast("string"), i * 8 + 1, 8), lit(mBits))
     }
     val keys = build.select(col(buildKey).as("__k")).distinct()
     val filterWords = bloomFilterWords(build, buildKey, words)

@@ -18,6 +18,31 @@ object TextOps {
   /** Whitespace tokenizer — the engine's canonical token column. */
   def tokens(textCol: Column): Column = split(textCol, " ")
 
+  /** One row per window start i ∈ `sequence(lo, hi)`, selecting
+    * `cols(i)`: the lambda-free form of exploding `transform` of
+    * `sequence(lo, hi)` under `i -> w(i)`, with the same values in the
+    * same order. Spark's `ArrayTransform` is `CodegenFallback`, so its
+    * lambda runs interpreted once per element; `explode(sequence)` and
+    * the per-row window expression stay inside whole-stage codegen.
+    * When `lo` is 0, `i` is also the position `posexplode` would give.
+    * The one window core of every token- and character-window site in
+    * TextOps, DedupOps and SamplingOps.
+    */
+  private[operators] def windows(df: DataFrame, lo: Column, hi: Column)(
+      cols: Column => Seq[Column]): DataFrame =
+    df.select(col("*"), explode(sequence(lo, hi)).as("__wi"))
+      .select(cols(col("__wi")): _*)
+
+  /** The `n` tokens of array `t` from 0-based start `i`, joined by
+    * single spaces: `concat_ws(' ', t[i], …, t[i + n - 1])`. */
+  private[operators] def tokenGram(t: Column, i: Column, n: Int): Column =
+    concat_ws(" ", (0 until n).map(j => t.getItem(i + j)): _*)
+
+  /** Chunk `i` (0-based) of array `t` cut into runs of `w` tokens, joined
+    * by single spaces: `concat_ws(' ', slice(t, i * w + 1, w))`. */
+  private[operators] def tokenChunk(t: Column, i: Column, w: Int): Column =
+    concat_ws(" ", slice(t, i * w + 1, lit(w)))
+
   /** SQL string literal with escaping — marker/stopword lists are
     * config values spliced into expr() lambdas; a word containing a
     * quote must not break plan compilation. Shared by every operator
@@ -152,11 +177,11 @@ object TextOps {
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
       .groupBy(col(idCol))
       .agg(sum("tf").as("n_tokens"), max("tf").as("top_tf"))
-    val bg = df.withColumn("t", tokens(col(textCol)))
-      .filter(size(col("t")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(0, size(t) - 2), i -> concat(t[i], ' ', t[i+1]))"))
-        .as("bg"))
+    val bg = windows(df.withColumn("t", tokens(col(textCol)))
+        .filter(size(col("t")) >= 2), lit(0), size(col("t")) - 2) { i =>
+        Seq(col(idCol),
+          concat(col("t").getItem(i), lit(" "), col("t").getItem(i + 1)).as("bg"))
+      }
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bg"), countDistinct(col("bg")).as("d_bg"))
     tf.join(bg, Seq(idCol), "left")
@@ -200,11 +225,10 @@ object TextOps {
     * + one hash aggregation.
     */
   def ngramFrequency(df: DataFrame, textCol: String, n: Int): DataFrame = {
-    val idx = (0 until n).map(j => s"t[i + $j]").mkString(", ")
-    df.withColumn("t", split(col(textCol), " "))
-      .filter(size(col("t")) >= n)
-      .select(explode(expr(s"transform(sequence(0, size(t) - $n), " +
-        s"i -> concat_ws(' ', $idx))")).as("ngram"))
+    windows(df.withColumn("t", split(col(textCol), " "))
+        .filter(size(col("t")) >= n), lit(0), size(col("t")) - n) { i =>
+        Seq(tokenGram(col("t"), i, n).as("ngram"))
+      }
       .groupBy("ngram").agg(count(lit(1)).as("freq"))
   }
 
@@ -218,12 +242,11 @@ object TextOps {
     * artifact" and join back broadcast/bucketed.
     */
   def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val bg = df.withColumn("t", split(col(textCol), " "))
-      .filter(size(col("t")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(0, size(t) - 2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-        .as("b"))
-      .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
+    val bg = windows(df.withColumn("t", split(col(textCol), " "))
+        .filter(size(col("t")) >= 2), lit(0), size(col("t")) - 2) { i =>
+        Seq(col(idCol), col("t").getItem(i).as("w1"),
+          col("t").getItem(i + 1).as("w2"))
+      }
       // LAZY localCheckpoint: three subplans read the tokenized corpus
       // (bigram counts, context counts, the scoring join) — cut the
       // lineage so it tokenizes once (same shape as the r7 DSIR fix).
@@ -391,13 +414,11 @@ object TextOps {
     */
   def winnow(df: DataFrame, idCol: String, textCol: String,
              k: Int = 3, w: Int = 4): DataFrame = {
-    val idx = (0 until k).map(j => s"t[i + $j]").mkString(", ")
-    val grams = df.withColumn("t", tokens(col(textCol)))
-      .filter(size(col("t")) >= k + w - 1)
-      .select(col(idCol), col("t"), posexplode(expr(
-        s"transform(sequence(0, size(t) - $k), i -> concat_ws(' ', $idx))")))
-      .withColumnRenamed("pos", "__pos")
-      .withColumn("__h", substring(md5(col("col")), 1, 8))
+    val grams = windows(df.withColumn("t", tokens(col(textCol)))
+        .filter(size(col("t")) >= k + w - 1), lit(0), size(col("t")) - k) { i =>
+        Seq(col(idCol), col("t"), i.as("__pos"), tokenGram(col("t"), i, k).as("__g"))
+      }
+      .withColumn("__h", substring(md5(col("__g")), 1, 8))
       .withColumn("__ng", size(col("t")) - (k - 1))
     val frame = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
       .rowsBetween(Window.currentRow, w - 1)
@@ -641,10 +662,11 @@ object TextOps {
     */
   def typoPairs(df: DataFrame, strCol: String): DataFrame = {
     val names = df.select(col(strCol).as("__t")).distinct()
-    val v = names.select(col("__t"), posexplode(expr(
-      "transform(sequence(0, length(__t)), i -> IF(i = 0, __t, " +
-        "concat(substring(__t, 1, i - 1), " +
-        "substring(__t, i + 1, length(__t)))))")).as(Seq("__i", "__var")))
+    val t = col("__t")
+    val v = windows(names, lit(0), length(t)) { i =>
+      Seq(t, i.as("__i"), when(i === 0, t).otherwise(concat(
+        t.substr(lit(1), i - 1), t.substr(i + 1, length(t)))).as("__var"))
+    }
     val dels = v.filter(col("__i") > 0)
     // substitutions: same deletion index, same variant, distinct names
     val subs = dels.as("a").join(dels.as("b"),
@@ -1050,13 +1072,11 @@ object TextOps {
     */
   def trigramBackoffXent(df: DataFrame, idCol: String,
                          textCol: String): DataFrame = {
-    val occ = df.withColumn("t", split(col(textCol), " "))
-      .filter(size(col("t")) >= 3)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(0, size(t) - 3), i -> struct(" +
-          "t[i] AS w1, t[i+1] AS w2, t[i+2] AS w3))")).as("g"))
-      .select(col(idCol), col("g.w1").as("w1"), col("g.w2").as("w2"),
-        col("g.w3").as("w3"))
+    val occ = windows(df.withColumn("t", split(col(textCol), " "))
+        .filter(size(col("t")) >= 3), lit(0), size(col("t")) - 3) { i =>
+        Seq(col(idCol), col("t").getItem(i).as("w1"),
+          col("t").getItem(i + 1).as("w2"), col("t").getItem(i + 2).as("w3"))
+      }
       // LAZY localCheckpoint: six subplans read the trigram positions.
       .localCheckpoint(false)
     val tr = occ.filter(col(idCol) % 2 === 0)
@@ -1193,14 +1213,12 @@ object TextOps {
     */
   def mooreLewis(df: DataFrame, idCol: String, textCol: String,
                  inDomainCol: Column): DataFrame = {
-    val occ = df.withColumn("__in", inDomainCol)
-      .withColumn("t", split(col(textCol), " "))
-      .filter(size(col("t")) >= 2)
-      .select(col(idCol), col("__in"), explode(expr(
-        "transform(sequence(0, size(t) - 2), " +
-          "i -> struct(t[i] AS w1, t[i+1] AS w2))")).as("b"))
-      .select(col(idCol), col("__in"), col("b.w1").as("w1"),
-        col("b.w2").as("w2"))
+    val occ = windows(df.withColumn("__in", inDomainCol)
+        .withColumn("t", split(col(textCol), " "))
+        .filter(size(col("t")) >= 2), lit(0), size(col("t")) - 2) { i =>
+        Seq(col(idCol), col("__in"), col("t").getItem(i).as("w1"),
+          col("t").getItem(i + 1).as("w2"))
+      }
       // LAZY localCheckpoint: five count tables + the scoring join all
       // read the tokenized positions.
       .localCheckpoint(false)
@@ -1421,13 +1439,13 @@ object TextOps {
       (Int, String, String, Long)]
     var done = false
     for (step <- 1 to steps if !done) {
-      val top = corpus
-        .select(split(trim(col("__t")), " ").as("__tk"), col("__w"))
-        .filter(size(col("__tk")) >= 2)
-        .select(col("__w"), explode(expr(
-          "transform(sequence(0, size(__tk) - 2), " +
-            "i -> struct(__tk[i] AS w1, __tk[i + 1] AS w2))")).as("b"))
-        .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
+      val tk = col("__tk")
+      val top = windows(corpus
+          .select(split(trim(col("__t")), " ").as("__tk"), col("__w"))
+          .filter(size(tk) >= 2), lit(0), size(tk) - 2) { i =>
+          Seq(col("__w"), tk.getItem(i).as("w1"), tk.getItem(i + 1).as("w2"))
+        }
+        .groupBy(col("w1"), col("w2"))
         .agg(sum(col("__w")).as("__c"))
         .orderBy(col("__c").desc, col("w1"), col("w2"))
         .limit(1).collect()
@@ -1559,12 +1577,11 @@ object TextOps {
     */
   def chunkSchemeCensus(df: DataFrame, idCol: String, textCol: String,
                         w: Int = 20): DataFrame = {
-    val fixed = df.withColumn("t", split(col(textCol), " "))
-      .select(col(idCol).as("__doc"), explode(expr(
-        s"transform(sequence(0, CAST((size(t) - 1) / $w AS INT)), " +
-          s"i -> concat_ws(' ', slice(t, i * $w + 1, $w)))")).as("__c"))
-      .select(lit("fixed").as("scheme"), col("__doc"),
-        md5(col("__c")).as("__h"))
+    val fixed = windows(df.withColumn("t", split(col(textCol), " ")), lit(0),
+        expr(s"CAST((size(t) - 1) / $w AS INT)")) { i =>
+        Seq(lit("fixed").as("scheme"), col(idCol).as("__doc"),
+          md5(tokenChunk(col("t"), i, w)).as("__h"))
+      }
     val cdcPos = df
       .select(col(idCol).as("__doc"),
         posexplode(split(col(textCol), " ")).as(Seq("__pos", "__w")))
@@ -1664,11 +1681,11 @@ object TextOps {
     */
   def bpeMergeStats(df: DataFrame, textCol: String,
                     topK: Int = 20): DataFrame = {
-    val pairs = df.select(explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, length(w) - 1), " +
-          "i -> substring(w, i, 2))")).as("pair"))
+    val w = col("w")
+    val pairs = windows(df.select(explode(split(col(textCol), " ")).as("w"))
+        .filter(length(w) >= 2), lit(1), length(w) - 1) { i =>
+        Seq(w.substr(i, lit(2)).as("pair"))
+      }
     val counts = pairs.groupBy(col("pair"))
       .agg(count(lit(1)).as("n_occ"))
     val tot = counts.agg(sum(col("n_occ")).as("__t"))
@@ -1785,11 +1802,11 @@ object TextOps {
     */
   def selfRepetition(df: DataFrame, srcCol: String, idCol: String,
                      textCol: String): DataFrame = {
-    val tri = df.withColumn("__t", tokens(col(textCol)))
-      .filter(size(col("__t")) >= 3)
-      .select(col(srcCol).as("source"), col(idCol).as("__id"),
-        explode(expr("transform(sequence(1, size(__t) - 2), " +
-          "i -> concat_ws(' ', slice(__t, i, 3)))")).as("__g"))
+    val tri = windows(df.withColumn("__t", tokens(col(textCol)))
+        .filter(size(col("__t")) >= 3), lit(1), size(col("__t")) - 2) { i =>
+        Seq(col(srcCol).as("source"), col(idCol).as("__id"),
+          concat_ws(" ", slice(col("__t"), i, lit(3))).as("__g"))
+      }
     val perDoc = tri.groupBy(col("source"), col("__g"), col("__id"))
       .agg(count(lit(1)).as("__c"))
     val perTri = perDoc.groupBy(col("source"), col("__g"))

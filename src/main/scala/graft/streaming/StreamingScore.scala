@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.SamplingOps
+
 /** Streaming twin of the DSIR importance scorer
   * ([[graft.operators.SamplingOps.importanceWeights]]): score a
   * document STREAM against a FROZEN importance model built batch-side.
@@ -43,10 +45,12 @@ object StreamingScore {
     stream
       .withColumn("__t", split(col(textCol), " "))
       .filter(size(col("__t")) >= 2)
-      .withColumn("__ks", expr(
-        s"""transform(sequence(0, size(__t) - 2),
-           |  i -> CAST(conv(substring(md5(concat(__t[i], ' ', __t[i+1])), 1, 8),
-           |                 16, 10) AS LONG) % $buckets)""".stripMargin))
+      // array-valued (the row-local fold below reads it), so it stays a
+      // lambda over the bigram starts; the bucket is the batch op's
+      // featureHash of "w1 w2"
+      .withColumn("__ks", transform(sequence(lit(0), size(col("__t")) - 2),
+        i => SamplingOps.featureHash(
+          concat(col("__t")(i), lit(" "), col("__t")(i + 1)), buckets)))
       .withColumn("n_bigrams", size(col("__ks")).cast("long"))
       // group within the row by bucket (array_distinct), snap each
       // c·lr term to 12 dp, fold into a DECIMAL(38,12) accumulator —
