@@ -29,19 +29,17 @@ import org.apache.spark.sql.SparkSession
 object Sessions extends Logging {
   /** Entries of Spark's generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`, default 100). The engine's
-    * working sets, in distinct generated classes: the nine perfbench
-    * `floor` queries need 146; the `pipelines` JVM needs 308: 64 for
-    * the sf0.1 IVF index write, 173 for a cold `Pipeline.run` and 71
-    * for the sf0.1 probes after it (counted while class names still
-    * carried the codegen stage id; without it a cold `Pipeline.run`
-    * compiled 142 classes, not 164, in a scratch count at sf0.01, so
-    * the sets can only have shrunk). At 100 every repeated floor pass
-    * recompiled 72–113 of its classes (~1 s of Janino time in a 5–6 s
-    * pass). The cache is a Guava cache that bounds each segment
-    * separately, so a cap near the working set still evicts; 1000
-    * leaves headroom over all of them. The conf is static and read
-    * once per JVM, when `CodeGenerator` is first initialized — a
-    * session built after that cannot change it.
+    * working sets, in distinct generated classes (the compile counter
+    * read after each perfbench op, `floor` seed 12, `pipelines` seed
+    * 4): the nine `floor` queries need 129; the `pipelines` JVM needs
+    * 253: 63 for the sf0.1 IVF index write, 7 for its checks, 132 for
+    * a cold `Pipeline.run` and 51 for the sf0.1 probes after it. At
+    * 100 every repeated floor pass recompiled 72–113 of its classes
+    * (~1 s of Janino time in a 5–6 s pass). The cache is a Guava cache
+    * that bounds each segment separately, so a cap near the working set
+    * still evicts; 1000 leaves headroom over all of them. The conf is
+    * static and read once per JVM, when `CodeGenerator` is first
+    * initialized — a session built after that cannot change it.
     */
   val CodegenCacheEntries = 1000
 
