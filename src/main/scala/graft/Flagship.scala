@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{RelationalOps, RetrievalOps, SimilarityOps}
+import graft.functions.PairSum
+import graft.operators.{RelationalOps, RetrievalOps}
 import graft.tables.Tables
 
 /** Flagship end-to-end recommend (SURVEY §7.1): the reference's full
@@ -77,7 +78,6 @@ object Flagship {
   def recommendFrom(spark: SparkSession, events: DataFrame,
                     embeddings: DataFrame,
                     snapshot: Option[DataFrame] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val ev = events
       .withColumn("label", when(col("value") > 100, 1).otherwise(0))
       // LAZY localCheckpoint: terms, seen, click pairs, and the
@@ -139,13 +139,13 @@ object Flagship {
       .groupBy("item")
       .agg(expr("transform(array_sort(collect_list(struct(dim, c))), " +
         "s -> s.c)").as("pemb"))
-      .withColumn("pnrm", sqrt(SimilarityOps.dot("pemb", "pemb")))
+      .withColumn("pnrm", sqrt(PairSum.dot(col("pemb"), col("pemb"))))
       .withColumn("bucket", bucketExpr("pemb"))
     val uside = uvec
       .join(ev.select("user_id").distinct(), "user_id")
       .join(seen, Seq("user_id"), "left")
       .withColumn("seen", coalesce(col("seen"), array()))
-      .withColumn("unrm", sqrt(SimilarityOps.dot("uemb", "uemb")))
+      .withColumn("unrm", sqrt(PairSum.dot(col("uemb"), col("uemb"))))
       .withColumn("__b", bucketExpr("uemb"))
       .select(col("user_id"), col("uemb"), col("unrm"), col("seen"),
         explode(expr("array(__b, __b ^ 1, __b ^ 2, __b ^ 4, __b ^ 8)"))
@@ -156,7 +156,7 @@ object Flagship {
         .filter(!coalesce(array_contains(col("seen"), col("item")),
           lit(false)))
         .withColumn("sim",
-          round(SimilarityOps.dot("uemb", "pemb") /
+          round(PairSum.dot(col("uemb"), col("pemb")) /
             (col("unrm") * col("pnrm")), 6))
         // recall keeps positively-similar candidates only — also what
         // keeps the ppm arithmetic on nonnegative ints, where Spark's

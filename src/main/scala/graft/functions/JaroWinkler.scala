@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.GraftExpr
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,6 +55,11 @@ case class JaroWinkler(left: Expression, right: Expression)
 }
 
 object JaroWinkler {
+  /** The column `JaroWinkler(a, b)` (`graft_jw` in plans); no session
+    * registration needed. */
+  def apply(a: Column, b: Column): Column =
+    GraftExpr.column(JaroWinkler(GraftExpr.expression(a), GraftExpr.expression(b)))
+
   /** Static hot loop, shared by eval and generated code. O(|a|·w)
     * time, two small boolean scratch arrays — no allocation beyond
     * them, no regex, no boxing. */

@@ -23,9 +23,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Semantics are bit-identical to the replaced chain and asserted in
   * NearestCellsSpec:
-  *   - distance = [[SqDistLong]]'s exact integer squared-L2, including
-  *     its NULL contract (length mismatch or null element → null
-  *     distance);
+  *   - distance = [[PairSum]]'s exact integer squared-L2 (`graft_sqdist`),
+  *     including its NULL contract (length mismatch or null element →
+  *     null distance);
   *   - ranking = (distance ASC NULLS FIRST, cid ASC) — `min(struct(d,
   *     cid))` orders a null field first, and TopKAggregator's (score
   *     DESC, id ASC) on score = −d is the same order (d is an exact

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Md5Int
+import graft.functions.{Md5Int, PairSum}
 
 /** Online-recall retrieval operators (SURVEY §2.6), the relational
   * rewrite of the reference's Elasticsearch queries
@@ -60,13 +60,12 @@ object RetrievalOps {
                 userCol: String, userVec: String, seenCol: String,
                 itemCol: String, itemVec: String,
                 boost: Double, topK: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(users.sparkSession)
     val u = users.select(col(userCol), col(seenCol),
         col(userVec).cast("array<double>").as("__uv"))
-      .withColumn("__un", sqrt(SimilarityOps.dot("__uv", "__uv")))
+      .withColumn("__un", sqrt(PairSum.dot(col("__uv"), col("__uv"))))
     val i = items.select(col(itemCol),
         col(itemVec).cast("array<double>").as("__iv"))
-      .withColumn("__in", sqrt(SimilarityOps.dot("__iv", "__iv")))
+      .withColumn("__in", sqrt(PairSum.dot(col("__iv"), col("__iv"))))
     // zero-norm vectors (untrained/cold embeddings) are excluded up
     // front: cosine is undefined for them, and the bare divide would be
     // null scores (non-ANSI) or a job-aborting DIVIDE_BY_ZERO (ANSI).
@@ -74,8 +73,8 @@ object RetrievalOps {
     val scored = u.filter(col("__un") > 0)
       .crossJoin(broadcast(i.filter(col("__in") > 0)))
       .filter(!coalesce(array_contains(col(seenCol), col(itemCol)), lit(false)))
-      .withColumn("score",
-        (SimilarityOps.dot("__uv", "__iv") / (col("__un") * col("__in"))) * boost)
+      .withColumn("score", (PairSum.dot(col("__uv"), col("__iv")) /
+        (col("__un") * col("__in"))) * boost)
       .select(col(userCol), col(itemCol), col("score"))
     RelationalOps.topKPerGroup(scored, userCol,
       Seq(col("score").desc, col(itemCol)), topK)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftExpr
 
-import graft.functions.{CellIndex, Md5Int, NearestCells}
+import graft.functions.{CellIndex, Md5Int, NearestCells, PairSum}
 
 /** Vector-similarity operators: brute-force cosine top-k (the exact
   * baseline), sign-bucketed IVF ANN (the scale path), and
@@ -24,21 +24,17 @@ import graft.functions.{CellIndex, Md5Int, NearestCells}
   */
 object SimilarityOps {
 
-  /** Left-to-right double-precision dot product of two array columns,
-    * via the native codegen'd [[graft.functions.DotProduct]] expression
-    * (bit-identical to the sequential HOF form and to DuckDB's
-    * list_dot_product, ~8× faster on the brute-force pair stage).
-    */
-  def dot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
+  /** Exact cosine of a pair row: a_emb·b_emb / (a_nrm·b_nrm). */
+  private def pairCosine: Column =
+    PairSum.dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm"))
 
   /** (id, emb double[], nrm) signature table — norms computed once per
     * row, before any join, so the pair stage multiplies scalars.
     */
   def normalized(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
         col(embCol).cast("array<double>").as("emb"))
-      .withColumn("nrm", sqrt(dot("emb", "emb")))
+      .withColumn("nrm", sqrt(PairSum.dot(col("emb"), col("emb"))))
   }
 
   /** All directed (vec_id, neighbor_id, sim) pairs of a
@@ -52,7 +48,7 @@ object SimilarityOps {
       .crossJoin(b.select(col("id").as("neighbor_id"), col("emb").as("b_emb"),
         col("nrm").as("b_nrm")))
       .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
       .select("vec_id", "neighbor_id", "sim")
 
   /** Candidate pairs of a bucketed search: query side `a` (vec_id,
@@ -64,7 +60,7 @@ object SimilarityOps {
                              key: String): DataFrame =
     a.join(b, key)
       .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
 
   /** Bounded top-k selection over a (vec_id, neighbor_id, sim) pair
     * stream: a TopKAggregator hash aggregation, not a window — map-side
@@ -220,7 +216,7 @@ object SimilarityOps {
       col("nrm").as("b_nrm"), col("bucket"))
     a.join(b, "bucket")
       .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
       .filter(col("sim") > threshold)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
       .distinct()
@@ -402,7 +398,6 @@ object SimilarityOps {
     */
   def ivfCellAdvisor(df: DataFrame, idCol: String, embCol: String,
                      maxBits: Int = 6): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val n = normalized(df, idCol, embCol)
     val cfgs = (1 to maxBits).map { b =>
       struct(lit(b).as("sign_bits"), signBucket(b).as("cell"))
@@ -428,10 +423,9 @@ object SimilarityOps {
     */
   def hardNegatives(df: DataFrame, idCol: String, embCol: String,
                     labelCol: String, k: Int, signBits: Int = 4): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val n = df.select(col(idCol).as("id"), col(labelCol).as("lbl"),
         col(embCol).cast("array<double>").as("emb"))
-      .withColumn("nrm", sqrt(dot("emb", "emb")))
+      .withColumn("nrm", sqrt(PairSum.dot(col("emb"), col("emb"))))
       .withColumn("bucket", signBucket(signBits))
     val a = n.select(col("id").as("vec_id"), col("lbl").as("a_lbl"),
       col("emb").as("a_emb"), col("nrm").as("a_nrm"),
@@ -441,7 +435,7 @@ object SimilarityOps {
     val pairs = a.join(b, "bucket")
       .filter(col("vec_id") =!= col("neighbor_id") &&
         col("a_lbl") =!= col("b_lbl"))
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
     selectTopK(pairs, k)
   }
 
@@ -483,7 +477,8 @@ object SimilarityOps {
         .select(col("emb").as("c_emb"), col("nrm").as("c_nrm"))
       val dmin = n.crossJoin(broadcast(centers))
         .withColumn("__d",
-          lit(1.0) - dot("emb", "c_emb") / (col("nrm") * col("c_nrm")))
+          lit(1.0) - PairSum.dot(col("emb"), col("c_emb")) /
+            (col("nrm") * col("c_nrm")))
         .groupBy(col("id")).agg(min(col("__d")).as("__d"))
       val top = dmin.filter(!col("id").isin(ids: _*))
         .agg(max(struct(col("__d"), (-col("id")).as("__nid"))).as("m"))
@@ -563,7 +558,6 @@ object SimilarityOps {
   def productQuantize(df: DataFrame, centroids: DataFrame, idCol: String,
                       embCol: String, m: Int = 8,
                       subDim: Int = 8): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     def subs(src: DataFrame, name: String): DataFrame = src
       .withColumn("__emb", col(embCol).cast("array<double>"))
       .withColumn("__j", explode(array((0 until m).map(lit): _*)))
@@ -574,13 +568,13 @@ object SimilarityOps {
     // once per codeword pairing (bit-identical d2: same operands, same
     // evaluation order)
     val sub = subs(df, "__sv")
-      .withColumn("__ss", expr("graft_dot(__sv, __sv)"))
+      .withColumn("__ss", PairSum.dot(col("__sv"), col("__sv")))
     val cent = subs(centroids, "__cv")
       .withColumnRenamed(idCol, "__cid")
-      .withColumn("__cc", expr("graft_dot(__cv, __cv)"))
+      .withColumn("__cc", PairSum.dot(col("__cv"), col("__cv")))
     val d2 = sub.join(broadcast(cent), Seq("__j"))
-      .withColumn("__d2",
-        expr("__ss - 2.0 * graft_dot(__sv, __cv) + __cc"))
+      .withColumn("__sc", PairSum.dot(col("__sv"), col("__cv")))
+      .withColumn("__d2", expr("__ss - 2.0 * __sc + __cc"))
     val best = d2.groupBy(col(idCol), col("__j"))
       .agg(min(struct(col("__d2"), col("__cid"))).as("__b"))
     val codeCols = (0 until m).map(j =>
@@ -629,7 +623,7 @@ object SimilarityOps {
       .join(n.select(col("id").as("__ib"), col("emb").as("__eb"),
         col("nrm").as("__nb")), "__ib")
       .withColumn("__sim",
-        expr("graft_dot(__ea, __eb)") / (col("__na") * col("__nb")))
+        PairSum.dot(col("__ea"), col("__eb")) / (col("__na") * col("__nb")))
     val ils = pairs.groupBy(col("__list"))
       .agg((sum(round(col("__sim"), 12).cast("decimal(38,12)"))
         .cast("double") / count(lit(1))).as("__lm"))
@@ -693,7 +687,7 @@ object SimilarityOps {
       .agg(sort_array(collect_list(struct(col("dim"), col("c"))))
         .as("__dc"))
       .withColumn("cent", expr("transform(__dc, x -> x.c)"))
-      .withColumn("cnrm", sqrt(expr("graft_dot(cent, cent)")))
+      .withColumn("cnrm", sqrt(PairSum.dot(col("cent"), col("cent"))))
       .drop("__dc")
 
   /** [[semDedup]]'s pair stage, shared with [[semDedupSweep]]: the
@@ -711,7 +705,7 @@ object SimilarityOps {
     val cent = centroidArrays(n, "bucket")
     val j = n.join(broadcast(cent), Seq("bucket"))
       .withColumn("s2c",
-        expr("graft_dot(emb, cent)") / (col("nrm") * col("cnrm")))
+        PairSum.dot(col("emb"), col("cent")) / (col("nrm") * col("cnrm")))
       .select(col("id"), col("bucket"), col("emb"), col("nrm"),
         col("s2c"))
       .localCheckpoint(false)
@@ -747,8 +741,7 @@ object SimilarityOps {
                tau: Double, signBits: Int = 4): DataFrame = {
     val (j, outKept) = outKeptPairs(df, idCol, embCol, signBits)
     val dup = outKept
-      .filter(expr("graft_dot(a_emb, b_emb)") /
-        (col("a_nrm") * col("b_nrm")) > tau)
+      .filter(pairCosine > tau)
       .select(col("vec_id")).distinct()
       .withColumn("__d", lit(1L))
     j.join(dup, col("id") === col("vec_id"), "left")
@@ -779,7 +772,7 @@ object SimilarityOps {
     val scat = n.join(broadcast(cent), Seq("lbl"))
       // fused codegen'd squared-L2 (bit-identical to the former
       // zip_with + graft_dot chain; A/B in BENCHLOG round 13)
-      .withColumn("__d", sqrt(expr("graft_sqdist_d(emb, cent)")))
+      .withColumn("__d", sqrt(PairSum.sqDist(col("emb"), col("cent"))))
       .groupBy(col("lbl"))
       .agg(count(lit(1)).as("n_vecs"), round(avg(col("__d")), 6).as("s"))
     val ci = cent.select(col("lbl").as("li"), col("cent").as("ci"))
@@ -787,7 +780,7 @@ object SimilarityOps {
     val si = scat.select(col("lbl").as("li"), col("s").as("si"))
     val sj = scat.select(col("lbl").as("lj"), col("s").as("sj"))
     val r = ci.crossJoin(broadcast(cj)).filter(col("li") =!= col("lj"))
-      .withColumn("__m", sqrt(expr("graft_sqdist_d(ci, cj)")))
+      .withColumn("__m", sqrt(PairSum.sqDist(col("ci"), col("cj"))))
       .join(broadcast(si), Seq("li")).join(broadcast(sj), Seq("lj"))
       .filter(col("__m") > 0)
       .groupBy(col("li"))
@@ -824,7 +817,7 @@ object SimilarityOps {
     val s = n.crossJoin(broadcast(cent))
       // fused codegen'd squared-L2 (bit-identical to the former
       // zip_with + graft_dot chain; A/B in BENCHLOG round 13)
-      .withColumn("__d", sqrt(expr("graft_sqdist_d(emb, cent)")))
+      .withColumn("__d", sqrt(PairSum.sqDist(col("emb"), col("cent"))))
       .groupBy(col("id"), col("lbl"))
       .agg(min(when(col("lbl") === col("__cl"), col("__d"))).as("__a"),
         min(when(col("lbl") =!= col("__cl"), col("__d"))).as("__b"))
@@ -892,10 +885,9 @@ object SimilarityOps {
     */
   def isotropyAudit(df: DataFrame, embCol: String,
                     labelCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val base = df.select(col(labelCol).as("label"),
         col(embCol).cast("array<double>").as("__e"))
-      .withColumn("__nrm", sqrt(dot("__e", "__e")))
+      .withColumn("__nrm", sqrt(PairSum.dot(col("__e"), col("__e"))))
       .filter(col("__nrm") > 0)
       // LAZY localCheckpoint: the norm stats and the dim sums both
       // read the normalized pass.
@@ -940,8 +932,7 @@ object SimilarityOps {
                       Seq(20, 30, 40, 50, 60, 70, 80)): DataFrame = {
     val (j, outKept) = outKeptPairs(df, idCol, embCol, signBits)
     val m = outKept
-      .withColumn("__sim", expr("graft_dot(a_emb, b_emb)") /
-        (col("a_nrm") * col("b_nrm")))
+      .withColumn("__sim", pairCosine)
       .groupBy(col("vec_id")).agg(max(col("__sim")).as("__ms"))
     val tot = j.agg(count(lit(1)).as("__nv"))
     val taus = j.sparkSession.range(1)
@@ -978,7 +969,6 @@ object SimilarityOps {
     */
   def embeddingDrift(dfOld: DataFrame, dfNew: DataFrame, idCol: String,
                      embCol: String, labelCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(dfOld.sparkSession)
     def tag(d: DataFrame, t: Int) = d.select(lit(t).as("__snap"),
       col(labelCol).as("label"),
       col(embCol).cast("array<double>").as("__e"))
@@ -1004,13 +994,13 @@ object SimilarityOps {
     def snap(t: Int, c: String, n: String) = j.filter(col("__snap") === t)
       .select(col("label"), col("__cent").as(c), col("__n").as(n))
     snap(0, "__co", "n_old").join(snap(1, "__cn", "n_new"), Seq("label"))
-      .withColumn("__no", sqrt(dot("__co", "__co")))
-      .withColumn("__nn", sqrt(dot("__cn", "__cn")))
+      .withColumn("__no", sqrt(PairSum.dot(col("__co"), col("__co"))))
+      .withColumn("__nn", sqrt(PairSum.dot(col("__cn"), col("__cn"))))
       .select(col("label").cast("long").as("label"), col("n_old"),
         col("n_new"),
         when(col("__no") === 0 || col("__nn") === 0, lit(null))
           .otherwise(MetricOps.normZero(round(
-            dot("__co", "__cn") / (col("__no") * col("__nn")), 6)))
+            PairSum.dot(col("__co"), col("__cn")) / (col("__no") * col("__nn")), 6)))
           .as("centroid_cos"),
         MetricOps.normZero(round(col("__nn") - col("__no"), 6))
           .as("norm_delta"))
@@ -1111,7 +1101,7 @@ object SimilarityOps {
       // error terms
       .filter(col("id_a") < col("id_b") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
-      .withColumn("sim", dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
       .withColumn("__x", expr("__mask_a ^ __mask_b"))
     val cosTable: Int => Column = w =>
       array((0 to w).map(h => lit(Math.cos(Math.PI * h / w))): _*)
@@ -1198,7 +1188,7 @@ object SimilarityOps {
         normalized(df, idCol, embCol).withColumn("bucket",
           signBucket(signBits))) { (acc, d) =>
         acc.withColumn(s"__n$d",
-          sqrt(expr(s"graft_dot_range(emb, emb, 1, $d)")))
+          sqrt(PairSum.dot(col("emb"), col("emb"), 1, d)))
       }
       // LAZY localCheckpoint: both sides of the candidate join read
       // the (emb, norms, bucket) signature table.
@@ -1207,19 +1197,18 @@ object SimilarityOps {
     val pairs = probePairs(n, signBits, dims.map(d => s"__n$d"))
       .filter(col("id_a") < col("id_b") &&
         col(s"__n${minD}_a") > 0 && col(s"__n${minD}_b") > 0)
-      .withColumn("sim",
-        dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-    // graft_dot_range: the zero-allocation prefix dot (bit-identical
+      .withColumn("sim", pairCosine)
+    // windowed PairSum.dot: the zero-allocation prefix dot (bit-identical
     // to the sliced form and the oracle's list_dot_product on slices)
     val dimArr = array(dims.map(d =>
       struct(lit(d).as("d"),
-        (expr(s"graft_dot_range(a_emb, b_emb, 1, $d)") /
+        (PairSum.dot(col("a_emb"), col("b_emb"), 1, d) /
           (col(s"__n${d}_a") * col(s"__n${d}_b"))).as("s"))): _*)
     MetricOps.fidelitySummary(
       pairs.select(col("sim"), explode(dimArr).as("ds"))
         .select(col("sim"), col("ds.d").as("d"), col("ds.s").as("__sd"))
         // Embeddings shorter than a requested dim d yield a null prefix
-        // dot (graft_dot_range window-exceeds contract). Drop the row —
+        // dot (PairSum's window-exceeds contract). Drop the row —
         // otherwise the DECIMAL error sums skip it but count(1) still
         // counts it, silently deflating mae/bias. Mirrors quantFidelity.
         .filter(col("__sd").isNotNull),
@@ -1249,12 +1238,11 @@ object SimilarityOps {
     val pairs = probePairs(n, signBits, quantCols(levels))
       .filter(col("id_a") < col("id_b") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
-      .withColumn("sim",
-        dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
     val lvlArr = array(levels.map(l =>
       struct(lit(l).as("l"),
         when(col(s"__q${l}_a") > 0 && col(s"__q${l}_b") > 0,
-          expr(s"graft_dot(__r${l}_a, __r${l}_b)") /
+          PairSum.dot(col(s"__r${l}_a"), col(s"__r${l}_b")) /
             (col(s"__q${l}_a") * col(s"__q${l}_b"))).as("s"))): _*)
     MetricOps.fidelitySummary(
       pairs.select(col("sim"), explode(lvlArr).as("ls"))
@@ -1281,7 +1269,7 @@ object SimilarityOps {
            |  * (CASE WHEN __mx = __mn THEN CAST(1.0 AS DOUBLE)
            |     ELSE (__mx - __mn) / CAST($l.0 AS DOUBLE) END)
            |  + __mn)""".stripMargin))
-        .withColumn(s"__q$l", sqrt(expr(s"graft_dot(__r$l, __r$l)")))
+        .withColumn(s"__q$l", sqrt(PairSum.dot(col(s"__r$l"), col(s"__r$l"))))
     }
 
   /** The [[quantReconstructions]] columns a probe pair carries. */
@@ -1326,8 +1314,9 @@ object SimilarityOps {
       .join(n.select(col("id").as("__cb"), col("emb").as("b_emb"),
         col("nrm").as("b_nrm")), Seq("__cb"))
       .filter(col("a_nrm") > 0 && col("b_nrm") > 0)
+      .withColumn("__dt", PairSum.dot(col("a_emb"), col("b_emb")))
       .select(col("vec_id"), col("__ca"), col("__cb"),
-        expr("CAST(round(graft_dot(a_emb, b_emb) / (a_nrm * b_nrm) " +
+        expr("CAST(round(__dt / (a_nrm * b_nrm) " +
           "* 1000000) AS BIGINT)").as("__pp"))
       .localCheckpoint(false)
     def argmax(d: DataFrame, score: Column): DataFrame = d
@@ -1450,8 +1439,7 @@ object SimilarityOps {
     q.join(c, "bucket")
       .filter(col("qgroup") =!= col("cgroup") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
-      .withColumn("sim",
-        dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
+      .withColumn("sim", pairCosine)
       .groupBy(col("qgroup"), col("cgroup"), col("__qv"))
       .agg(max(col("sim")).as("__mx"))
       .groupBy(col("qgroup"), col("cgroup"))
@@ -1487,15 +1475,14 @@ object SimilarityOps {
       .localCheckpoint(false)
     val simCols = levels.map(l =>
       when(col(s"__q${l}_a") > 0 && col(s"__q${l}_b") > 0,
-        expr(s"graft_dot(__r${l}_a, __r${l}_b)") /
+        PairSum.dot(col(s"__r${l}_a"), col(s"__r${l}_b")) /
           (col(s"__q${l}_a") * col(s"__q${l}_b"))).as(s"__s$l"))
     val cand = probePairs(n, signBits, quantCols(levels))
       .filter(col("id_a") =!= col("id_b") &&
         col("a_nrm") > 0 && col("b_nrm") > 0)
       .select(Seq(col("id_a").as("vec_id"),
         col("id_b").as("neighbor_id"),
-        (dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm")))
-          .as("sim")) ++ simCols: _*)
+        pairCosine.as("sim")) ++ simCols: _*)
       // the exact ranking and each level's ranking read the candidates.
       .localCheckpoint(false)
     val ft = selectTopK(
@@ -2091,7 +2078,7 @@ object SimilarityOps {
         homeCell(codebook).as("cid"))
       .join(broadcast(codebook.select(col("cid"), col("cemb"))),
         Seq("cid"), "left")
-      .withColumn("dist2", expr("graft_sqdist(qemb, cemb)"))
+      .withColumn("dist2", PairSum.sqDist(col("qemb"), col("cemb")))
       .select(col("id"), col("shard"),
         when(col("dist2").isNotNull, col("cid")).as("cid"), col("dist2"))
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.JaroWinkler
+
 /** Text-analysis operators for the large-scale training-data pipeline:
   * tokenization, term frequency, language ID, quality scoring, document
   * fingerprinting, sessionization, and JSON extraction.
@@ -700,13 +702,12 @@ object TextOps {
     */
   def fuzzyBlockJoin(df: DataFrame, blockCols: Seq[String], strCol: String,
                      minSim: Double = 0.8): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val base = df.select(blockCols.map(col) :+ col(strCol): _*).distinct()
     val a = base.withColumnRenamed(strCol, "name_a")
     val b = base.withColumnRenamed(strCol, "name_b")
     a.join(b, blockCols)
       .filter(col("name_a") < col("name_b"))
-      .withColumn("jw", round(expr("graft_jw(name_a, name_b)"), 6))
+      .withColumn("jw", round(JaroWinkler(col("name_a"), col("name_b")), 6))
       .filter(col("jw") >= minSim)
   }
 

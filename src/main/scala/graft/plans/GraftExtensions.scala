@@ -4,77 +4,40 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProduct, DotRange, JaroWinkler, SqDistDouble, SqDistLong}
-
 /** Engine extensions, registered via the public
   * `SparkSessionExtensions` hook
   * (`.config("spark.sql.extensions", "graft.plans.GraftExtensions")`)
   * or post-hoc with [[GraftExtensions.register]] for sessions the
   * engine does not construct.
   *
-  * Surface:
-  *   - graft_dot(array<double>, array<double>) → double (native codegen
-  *     expression — the similarity hot loop);
-  *   - graft_jw(string, string) → double (Jaro–Winkler similarity,
-  *     codegen'd — the blocked entity-resolution primitive);
-  *   - graft_asof(leftTs, rightTs) — join-condition marker planned by
-  *     [[AsOfJoinStrategy]] into the native sort-merge [[AsOfJoinExec]];
-  *     usable from SQL: `a JOIN b ON a.k = b.k AND graft_asof(a.ts, b.ts)`.
+  * Surface: `graft_asof(leftTs, rightTs)`, a join-condition marker
+  * planned by [[AsOfJoinStrategy]] into the native sort-merge
+  * [[AsOfJoinExec]]; usable from SQL:
+  * `a JOIN b ON a.k = b.k AND graft_asof(a.ts, b.ts)`. The native
+  * kernels in `graft.functions` are built as typed `Column`s through
+  * their companions and need no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.dotRangeFunction)
-    ext.injectFunction(GraftExtensions.sqDistFunction)
-    ext.injectFunction(GraftExtensions.sqDistDFunction)
     ext.injectFunction(GraftExtensions.asofFunction)
-    ext.injectFunction(GraftExtensions.jwFunction)
     ext.injectPlannerStrategy(AsOfJoinStrategy)
   }
 }
 
 object GraftExtensions {
-  private val dotFunction = (
-    new FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-
-  private val sqDistFunction = (
-    new FunctionIdentifier("graft_sqdist"),
-    new ExpressionInfo(classOf[SqDistLong].getName, "graft_sqdist"),
-    (children: Seq[Expression]) => SqDistLong(children(0), children(1)))
-
-  private val sqDistDFunction = (
-    new FunctionIdentifier("graft_sqdist_d"),
-    new ExpressionInfo(classOf[SqDistDouble].getName, "graft_sqdist_d"),
-    (children: Seq[Expression]) => SqDistDouble(children(0), children(1)))
-
   private val asofFunction = (
     new FunctionIdentifier("graft_asof"),
     new ExpressionInfo(classOf[AsOfMarker].getName, "graft_asof"),
     (children: Seq[Expression]) => AsOfMarker(children(0), children(1)))
 
-  private val dotRangeFunction = (
-    new FunctionIdentifier("graft_dot_range"),
-    new ExpressionInfo(classOf[DotRange].getName, "graft_dot_range"),
-    (children: Seq[Expression]) =>
-      DotRange(children(0), children(1), children(2), children(3)))
-
-  private val jwFunction = (
-    new FunctionIdentifier("graft_jw"),
-    new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jw"),
-    (children: Seq[Expression]) => JaroWinkler(children(0), children(1)))
-
   /** Idempotent in-session registration — lets library entry points
-    * guarantee the functions and the as-of planner strategy exist
+    * guarantee the marker and the as-of planner strategy exist
     * regardless of how the session was built (`extraStrategies` is the
     * public post-construction planner hook).
     */
   def register(spark: SparkSession): Unit = {
-    Seq(dotFunction, dotRangeFunction, sqDistFunction, sqDistDFunction,
-        asofFunction, jwFunction).foreach { f =>
-      spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
-    }
+    spark.sessionState.functionRegistry.registerFunction(
+      asofFunction._1, asofFunction._2, asofFunction._3)
     val es = spark.experimental.extraStrategies
     if (!es.exists(_.isInstanceOf[AsOfJoinStrategy]))
       spark.experimental.extraStrategies = es :+ AsOfJoinStrategy(spark)

@@ -112,12 +112,13 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("graft_dot yields NULL on length mismatch or null elements (never a partial dot)") {
-    graft.plans.GraftExtensions.register(spark)
-    val r = spark.sql(
-      """SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS ok,
-        |       graft_dot(array(1.0d, 2.0d), array(3.0d)) AS mismatch,
-        |       graft_dot(array(1.0d, CAST(NULL AS DOUBLE)), array(3.0d, 4.0d)) AS withnull
-        |""".stripMargin).head()
+    import graft.functions.PairSum
+    import org.apache.spark.sql.functions.expr
+    val r = spark.range(1).select(
+      PairSum.dot(expr("array(1.0d, 2.0d)"), expr("array(3.0d, 4.0d)")).as("ok"),
+      PairSum.dot(expr("array(1.0d, 2.0d)"), expr("array(3.0d)")).as("mismatch"),
+      PairSum.dot(expr("array(1.0d, CAST(NULL AS DOUBLE))"),
+        expr("array(3.0d, 4.0d)")).as("withnull")).head()
     assert(r.getDouble(0) == 11.0)
     assert(r.isNullAt(1) && r.isNullAt(2))
   }

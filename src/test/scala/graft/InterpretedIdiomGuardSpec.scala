@@ -6,13 +6,19 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps two slow per-row idioms out of the engine's sources:
+/** Keeps two slow per-row idioms, and one second route to the native
+  * kernels, out of the engine's sources:
   *  - `transform(sequence(…), i -> …)` exploded into windows: Spark's
   *    `ArrayTransform` is `CodegenFallback`, so its lambda runs
   *    interpreted per element (use `TextOps.windows`);
   *  - `conv(substring(md5(…), s, k), 16, 10)`: formats 32 hex
   *    characters and parses strings twice per row (use
-  *    `graft.functions.Md5Int`).
+  *    `graft.functions.Md5Int`);
+  *  - a graft kernel called by name inside a string literal, e.g.
+  *    `expr("graft_dot(a, b)")`: the kernels are not in the session's
+  *    function registry; build them with their typed `Column`
+  *    constructors (`PairSum.dot`, `PairSum.sqDist`, `JaroWinkler`,
+  *    `Md5Int`).
   * A site that must keep an idiom sits on the allow-list with its
   * reason. Runs from the repository root, as `sbt test` does.
   */
@@ -21,7 +27,9 @@ class InterpretedIdiomGuardSpec extends AnyFunSuite {
 
   private val idioms = Seq(
     "transform(sequence(" -> """transform\(\s*sequence\(""".r,
-    "conv(substring(md5(" -> """conv\(\s*substring\(\s*md5\(""".r)
+    "conv(substring(md5(" -> """conv\(\s*substring\(\s*md5\(""".r,
+    "graft kernel in a string" ->
+      """"[^"\n]*\bgraft_(?:dot|sqdist|jw|md5_int)\w*\s*\(""".r)
 
   /** (file under `root`, idiom) → why the file keeps it. */
   private val allowed: Map[(String, String), String] = Map(

@@ -9,7 +9,7 @@ import graft.functions.{CellIndex, NearestCells}
 
 /** The r14 map-only argmin kernel must be bit-identical to the
   * broadcast-join + groupBy(id) min(struct)/TopKAggregator chain it
-  * replaced — same distance math ([[graft.functions.SqDistLong]]'s
+  * replaced — same distance math ([[graft.functions.PairSum]]'s
   * NULL contract included), same (dist ASC NULLS FIRST, cid ASC)
   * order, and the same row-drop behaviour as the old inner equi-join
   * on `shard`.

@@ -122,14 +122,15 @@ class Round29OpsSpec extends SparkSpec {
 
   test("graft_dot_range: prefix dot ≡ sliced graft_dot; window past " +
     "the end is NULL") {
-    graft.plans.GraftExtensions.register(spark)
+    import graft.functions.PairSum
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)))
       .toDF("a", "b")
+    val (a, b) = (col("a"), col("b"))
     val r = df.select(
-      expr("graft_dot_range(a, b, 1, 2)").as("p2"),
-      expr("graft_dot(slice(a, 1, 2), slice(b, 1, 2))").as("s2"),
-      expr("graft_dot_range(a, b, 2, 2)").as("m2"),
-      expr("graft_dot_range(a, b, 1, 4)").as("over")).collect()(0)
+      PairSum.dot(a, b, 1, 2).as("p2"),
+      PairSum.dot(slice(a, 1, 2), slice(b, 1, 2)).as("s2"),
+      PairSum.dot(a, b, 2, 2).as("m2"),
+      PairSum.dot(a, b, 1, 4).as("over")).collect()(0)
     assert(r.getAs[Double]("p2") == 14.0)
     assert(r.getAs[Double]("p2") == r.getAs[Double]("s2"))
     assert(r.getAs[Double]("m2") == 2.0 * 5 + 3 * 6)

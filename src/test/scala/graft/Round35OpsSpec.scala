@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-35 specs: the round-8 ADVICE hardening — cross-snapshot id
   * collisions in reciprocalBestMatch, positionCoec's clamp-not-wrap
-  * bucketing, graft_dot_range's window validation at analysis time,
+  * bucketing, graft_dot_range's window validation before any plan exists,
   * and matryoshkaFidelity's short-embedding null discipline.
   */
 class Round35OpsSpec extends SparkSpec {
@@ -49,20 +49,22 @@ class Round35OpsSpec extends SparkSpec {
   }
 
   test("graft_dot_range: invalid windows fail at analysis, not eval") {
-    graft.plans.GraftExtensions.register(spark)
+    // The window is two Ints checked when the column is built, so a
+    // bad one fails before any plan exists (and a NULL one cannot be
+    // written).
+    import graft.functions.PairSum
     val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
-    df.createOrReplaceTempView("__dr")
-    def fails(sql: String): Unit = {
-      val e = intercept[Exception](spark.sql(sql).collect())
-      assert(e.getMessage.contains("graft_dot_range"), sql)
+    def fails(start: Int, len: Int): Unit = {
+      val e = intercept[IllegalArgumentException](
+        PairSum.dot(col("a"), col("b"), start, len))
+      assert(e.getMessage.contains("graft_dot_range"), s"($start, $len)")
     }
-    fails("SELECT graft_dot_range(a, b, 0, 2) FROM __dr")
-    fails("SELECT graft_dot_range(a, b, -1, 2) FROM __dr")
-    fails("SELECT graft_dot_range(a, b, 1, -1) FROM __dr")
-    fails("SELECT graft_dot_range(a, b, CAST(NULL AS INT), 2) FROM __dr")
-    fails(s"SELECT graft_dot_range(a, b, 2, ${Int.MaxValue}) FROM __dr")
+    fails(0, 2)
+    fails(-1, 2)
+    fails(1, -1)
+    fails(2, Int.MaxValue)
     // the valid window still computes
-    assert(spark.sql("SELECT graft_dot_range(a, b, 1, 2) FROM __dr")
+    assert(df.select(PairSum.dot(col("a"), col("b"), 1, 2))
       .collect()(0).getDouble(0) == 11.0)
   }
 

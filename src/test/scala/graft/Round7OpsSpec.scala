@@ -911,11 +911,10 @@ class Round7OpsSpec extends SparkSpec {
   }
 
   test("JaroWinkler: codegen path (expr) agrees with static compute") {
-    graft.plans.GraftExtensions.register(spark)
     val pairs = Seq(("MARTHA", "MARHTA"), ("DWAYNE", "DUANE"),
       ("small ring", "small bolt"), ("", "x"), ("same", "same"))
     val out = pairs.toDF("a", "b")
-      .withColumn("jw", expr("graft_jw(a, b)"))
+      .withColumn("jw", graft.functions.JaroWinkler(col("a"), col("b")))
       .as[(String, String, Double)].collect()
     import org.apache.spark.unsafe.types.UTF8String
     out.foreach { case (a, b, v) =>
